@@ -119,7 +119,6 @@ final class AttrMap {
     -1
   }
 
-  def keyAt(i: Int): String = ks(i)
   def valueAt(i: Int): String = vs(i)
   def size: Int = n
   def isEmpty: Boolean = n == 0

@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
 
 import graft.kernel.Clean
 
@@ -69,12 +70,11 @@ object ExtractJob {
     * extraction 3× slower (measured 4.7–6.2 s vs 1.5–1.7 s warm on the
     * bench corpus). Nothing in extraction needs pid co-location: the
     * kernel is per-row, and lineage aggregates on the pid COLUMN with
-    * bounded per-task partials (lineageFromColumns stage 1 already
-    * handled multi-pid tasks). The one consumer that DOES need pid
-    * clustering — the pid-partitioned output write in runToDir — now
-    * clusters the EXTRACTED rows instead, whose boilerplate-stripped
-    * content is a fraction of the input html bytes: same bounded
-    * files-per-pid, an order less shuffle traffic.
+    * bounded per-task partials ([[LineageFold]] handles multi-pid tasks).
+    * The one consumer that DOES need pid clustering — the pid-partitioned
+    * output write in runToDir — now clusters the EXTRACTED rows instead,
+    * whose boilerplate-stripped content is a fraction of the input html
+    * bytes: same bounded files-per-pid, an order less shuffle traffic.
     */
   def extract(
       pagesWithPid: DataFrame,
@@ -137,57 +137,78 @@ object ExtractJob {
     }
   }
 
-  /** Per-partition lineage, keyed on the pid COLUMN (survives AQE).
-    *
-    * Two stages, both strictly bounded:
-    *  1. mapPartitions pre-aggregation: one in-memory accumulator per pid
-    *     seen in the task (normally exactly one — extract() hash-partitions
-    *     on pid), with failure samples CAPPED at MaxFailureSamples during
-    *     accumulation. A 100%-failing poisoned partition therefore never
-    *     materializes more than 5 error structs — the previous
-    *     collect_list-then-slice formulation buffered every failure row
-    *     before slicing, an unbounded agg buffer at 10^12-doc scale.
-    *  2. a tiny merge groupBy over the per-task partials (≤ tasks×pids
-    *     rows, each with ≤5 samples) in case AQE ever splits a pid across
-    *     tasks; all aggregates are sums/flattens of bounded values.
+  /** Per-pid lineage fold: counts, bytes and wall time, with failure
+    * samples capped at MaxFailureSamples DURING accumulation — a
+    * 100%-failing poisoned partition never holds more than 5 error structs
+    * (a collect_list-then-slice formulation would buffer every failure
+    * row, an unbounded agg buffer at 10^12-doc scale). Rows fold in with
+    * [[add]]; another fold's partials merge in with [[merge]], samples
+    * concatenated in arrival order up to the cap, as [[lineage]]'s merge
+    * aggregate does. Shared by [[lineage]] and [[runToDir]].
     */
-  def lineage(extracted: Dataset[ExtractedRow], runId: String): Dataset[LineageRow] =
-    lineageFromColumns(extracted.toDF(), runId)
+  final class LineageFold {
+    private final class Acc {
+      var n, bytes, ok, fail, wallUs = 0L
+      val samples = scala.collection.mutable.ArrayBuffer.empty[FailureSample]
+    }
+    private val byPid = scala.collection.mutable.LinkedHashMap.empty[Int, Acc]
 
-  /** Lineage over any relation carrying (pid, url, error, in_bytes,
-    * wall_us) — the narrow-column form matters: when lineage is computed
-    * from a READ-BACK of the written output (runToDir), selecting these
-    * five columns before the typed mapPartitions lets parquet prune the
-    * `content` blob column instead of deserializing it per row.
+    def add(pid: Int, url: String, error: String, inBytes: Long, wallUs: Long): Unit = {
+      val a = byPid.getOrElseUpdate(pid, new Acc)
+      a.n += 1L
+      a.bytes += inBytes
+      if (error == null) a.ok += 1L
+      else {
+        a.fail += 1L
+        if (a.samples.size < MaxFailureSamples) a.samples += FailureSample(url, error)
+      }
+      a.wallUs += wallUs
+    }
+
+    def merge(p: LineagePartial): Unit = {
+      val a = byPid.getOrElseUpdate(p.pid, new Acc)
+      a.n += p.input_count
+      a.bytes += p.input_bytes
+      a.ok += p.ok_count
+      a.fail += p.fail_count
+      a.samples ++= p.failure_samples.take(MaxFailureSamples - a.samples.size)
+      a.wallUs += p.wall_us
+    }
+
+    /** One partial per pid seen, in first-seen order. */
+    def partials: Iterator[LineagePartial] = byPid.iterator.map { case (pid, a) =>
+      LineagePartial(pid, a.n, a.bytes, a.ok, a.fail, a.samples.toList, a.wallUs)
+    }
+
+    def rows(runId: String): Iterator[LineageRow] = partials.map { p =>
+      LineageRow(runId, p.pid, p.input_count, p.input_bytes, p.ok_count,
+        p.fail_count, p.failure_samples, p.wall_us / 1000L)
+    }
+  }
+
+  /** Per-partition lineage of an extracted relation, keyed on the pid
+    * COLUMN (survives AQE). Two stages, both strictly bounded:
+    *  1. mapPartitions pre-aggregation: a [[LineageFold]] per task over
+    *     the five narrow lineage columns (selected first, so a scan source
+    *     prunes the `content` blob) — one partial per pid the task saw.
+    *  2. a tiny merge groupBy over the per-task partials (≤ tasks×pids
+    *     rows, each with ≤5 samples): extract() is scan-local, so a pid
+    *     spans tasks; all aggregates are sums/flattens of bounded values.
+    * [[runToDir]] does not run this: it folds the same lineage inside its
+    * write pass, so it never reads its output back.
     */
-  def lineageFromColumns(rel: DataFrame, runId: String): Dataset[LineageRow] = {
-    val spark = rel.sparkSession
+  def lineage(extracted: Dataset[ExtractedRow], runId: String): Dataset[LineageRow] = {
+    val spark = extracted.sparkSession
     import spark.implicits._
-    val partials = rel
-      .select(col("pid").cast("int"), col("url"), col("error"),
-        col("in_bytes").cast("long"), col("wall_us").cast("long"))
+    val partials = extracted.toDF()
+      .select(col("pid"), col("url"), col("error"), col("in_bytes"), col("wall_us"))
       .as[(Int, String, String, Long, Long)]
       .mapPartitions { it =>
-        class Acc {
-          var n, bytes, ok, fail, wallUs = 0L
-          val samples = List.newBuilder[FailureSample]
-        }
-        val acc = scala.collection.mutable.LinkedHashMap.empty[Int, Acc]
+        val fold = new LineageFold
         it.foreach { case (pid, url, error, inBytes, wallUs) =>
-          val a = acc.getOrElseUpdate(pid, new Acc)
-          a.n += 1L
-          a.bytes += inBytes
-          if (error == null) a.ok += 1L
-          else {
-            a.fail += 1L
-            if (a.fail <= MaxFailureSamples)
-              a.samples += FailureSample(url, error)
-          }
-          a.wallUs += wallUs
+          fold.add(pid, url, error, inBytes, wallUs)
         }
-        acc.iterator.map { case (pid, a) =>
-          LineagePartial(pid, a.n, a.bytes, a.ok, a.fail, a.samples.result(), a.wallUs)
-        }
+        fold.partials
       }
     partials
       .groupBy(col("pid"))
@@ -209,6 +230,33 @@ object ExtractJob {
         col("failure_samples"),
         col("wall_ms"))
       .as[LineageRow]
+  }
+
+  /** A write task's rows, passed through unchanged while their lineage
+    * folds; the task's partials go to `out` once the rows are exhausted.
+    * Only for the RESULT stage of a write: Spark applies a result task's
+    * accumulator updates once per partition, but may re-apply those of a
+    * re-run shuffle-map stage.
+    */
+  private def foldingLineage(
+      rows: Iterator[ExtractedRow],
+      out: CollectionAccumulator[LineagePartial]): Iterator[ExtractedRow] = {
+    val acc = new LineageFold
+    var flushed = false
+    new Iterator[ExtractedRow] {
+      def hasNext: Boolean = rows.hasNext || {
+        if (!flushed) {
+          flushed = true
+          acc.partials.foreach(p => out.add(p))
+        }
+        false
+      }
+      def next(): ExtractedRow = {
+        val r = rows.next()
+        acc.add(r.pid, r.url, r.error, r.in_bytes, r.wall_us)
+        r
+      }
+    }
   }
 
   /** Committed (distinct) pids of a run as a one-column DataFrame — the
@@ -261,6 +309,11 @@ object ExtractJob {
     * (§7.4). `failAfterPids` deliberately stops after K buckets to simulate
     * a killed job (used by the resume test).
     *
+    * One pass over the pages: lineage folds inside the extracted write's
+    * result stage and reaches the driver as at most one partial per
+    * written pid (≤ `buckets`, the same bound as the broadcast
+    * committed-pid set); nothing is read back from `<outDir>/extracted`.
+    *
     * On Iceberg this whole method maps to `overwritePartitions()` + an
     * appended lineage table inside one transaction — see ICEBERG.md §2
     * for the call-by-call mapping and what the transaction upgrade buys.
@@ -273,6 +326,7 @@ object ExtractJob {
       buckets: Int,
       maxHtmlBytes: Int = DefaultMaxHtmlBytes,
       failAfterPids: Int = Int.MaxValue): Unit = {
+    import spark.implicits._
     val lineagePath = s"$outDir/lineage"
     val committedDf = committedPidsDf(spark, lineagePath, runId)
 
@@ -297,37 +351,35 @@ object ExtractJob {
       }
 
     val extracted = extract(scope, maxHtmlBytes)
+    val partials = spark.sparkContext.collectionAccumulator[LineagePartial]("lineage partials")
     val prevOverwriteMode =
       spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
       // pid clustering happens HERE, on the extracted rows (content ≪
-      // input html), not before the kernel (r04 — see extract scaladoc):
-      // one writing task per pid keeps files-per-partition-dir bounded at
-      // any executor count, which is what dynamic overwrite granularity
-      // and the resume contract rely on.
+      // input html), not before the kernel (r04 — see extract scaladoc).
+      // pid ∈ [0, buckets) IS the shuffle partition id, so each writing
+      // task holds exactly one pid: one file per partition dir at any
+      // executor count (what dynamic overwrite granularity and the resume
+      // contract rely on), and no hash collisions doubling a task's rows.
+      // The pass-through after the exchange folds this run's lineage in
+      // the write's own result stage — only pids written by THIS run, so
+      // pids published by an earlier crashed-or-committed run are never
+      // covered.
       extracted
-        .repartition(buckets, col("pid"))
+        .repartitionById(buckets, col("pid"))
+        .mapPartitions(foldingLineage(_, partials))
         .write
         .mode(SaveMode.Overwrite)
         .partitionBy("pid")
         .parquet(s"$outDir/extracted")
-      // Lineage from a READ-BACK of the files just written, not from a
-      // cached extracted dataset: at 10^12 docs caching the full output
-      // (content included) to feed a second consumer is the wrong shape —
-      // the read-back touches only the five narrow lineage columns
-      // (parquet prunes the content blob entirely; see
-      // PlanSpec "lineage read-back never touches the content column").
-      // The pid scope of THIS run is recomputed from the pruned scan
-      // (url+pid only — no kernel work) and semi-joined so lineage never
-      // covers pids published by an earlier crashed-or-committed run.
-      val writtenPids = scope.select(col("pid")).distinct()
-      val readBack = spark.read.parquet(s"$outDir/extracted")
-        .join(broadcast(writtenPids), Seq("pid"), "left_semi")
       // lineage commits LAST: a pid is "done" only once its lineage row
       // exists, so a crash between the two writes re-runs (and
       // re-overwrites) the pid.
-      lineageFromColumns(readBack, runId)
+      val fold = new LineageFold
+      partials.value.forEach(p => fold.merge(p))
+      fold.rows(runId).toSeq.toDS()
+        .coalesce(1)
         .write.mode(SaveMode.Append).parquet(lineagePath)
     } finally {
       prevOverwriteMode match {

@@ -31,8 +31,8 @@ final case class ExtractedRow(
 
 final case class FailureSample(url: String, error: String)
 
-/** Per-task lineage pre-aggregate (ExtractJob.lineage stage 1): one row
-  * per pid seen in a task, failure samples already capped.
+/** Per-task lineage pre-aggregate (ExtractJob.LineageFold): one row per
+  * pid seen in a task, failure samples already capped.
   */
 final case class LineagePartial(
     pid: Int,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{expr, sqrt}
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 
 /** `float_vec_dot(a, b)` — dot product of two `array<float>` columns as a
@@ -325,7 +325,4 @@ object VectorExpressions {
     * Takes column-name/expression strings (the ops layer style).
     */
   def vecDot(a: String, b: String): Column = expr(s"float_vec_dot($a, $b)")
-
-  /** Column helper: L2 norm of an array<float> column. */
-  def vecNorm(a: String): Column = sqrt(vecDot(a, a))
 }

@@ -103,6 +103,54 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/lineage").count() == 8)
   }
 
+  test("runToDir lineage equals ExtractJob.lineage, failure samples included") {
+    // One parquet file (one input split): both paths then see each pid's
+    // rows in file order, so even the capped failure samples must agree.
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-lineage").toString
+    val failing = (0 until 12).map(i => (s"https://gfycat.com/NoVideo${('a' + i).toChar}", "<html></html>"))
+      .toDF("url", "h").select(col("url"), col("h").cast("binary").as("html"))
+    failing.union(PagesGen.asDataFrame(spark, sf001).select("url", "html"))
+      .coalesce(1).write.parquet(s"$dir/pages")
+    val df = spark.read.parquet(s"$dir/pages")
+    val sizes = pages.map(_.html.length).sorted
+    val cap = sizes(sizes.length / 2)
+    val buckets = 8
+    def key(r: LineageRow) =
+      (r.run_id, r.partition_id, r.input_count, r.input_bytes, r.ok_count, r.fail_count,
+        r.failure_samples)
+    val expected = ExtractJob.lineage(
+      ExtractJob.extract(ExtractJob.withPid(df, buckets), maxHtmlBytes = cap), "r1")
+      .collect().map(key).sortBy(_._2).toSeq
+    assert(expected.map(_._6).sum > 0)
+    assert(expected.exists(_._7.exists(_.error.contains("exceeds cap"))))
+    assert(expected.exists(_._7.exists(_.url.startsWith("https://gfycat.com/"))))
+    assert(expected.exists(_._6 > ExtractJob.MaxFailureSamples),
+      "some pid must hit the failure-sample cap")
+
+    val clean = s"$dir/clean"
+    val execs = executionsOf(ExtractJob.runToDir(spark, df, clean, "r1", buckets, cap))
+    val scans = execs.flatMap(qe => scannedPaths(qe.executedPlan))
+    assert(!scans.exists(_.contains(s"$clean/extracted")),
+      s"runToDir read its own output back: ${scans.mkString(", ")}")
+    assert(scans.count(_.endsWith(s"$dir/pages")) == 1,
+      s"pages must be scanned exactly once: ${scans.mkString(", ")}")
+    def lineageOf(out: String) =
+      spark.read.parquet(s"$out/lineage").as[LineageRow].collect().map(key).sortBy(_._2).toSeq
+    assert(lineageOf(clean) == expected)
+
+    val resumed = s"$dir/resumed"
+    ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap, failAfterPids = 3)
+    ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap)
+    ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap)
+    val perPid = spark.read.parquet(s"$resumed/lineage")
+      .groupBy("run_id", "partition_id").count().collect()
+    assert(perPid.length == buckets && perPid.forall(_.getLong(2) == 1L),
+      "exactly one lineage row per (run_id, pid) after kill-and-resume")
+    assert(lineageOf(resumed) == expected)
+  }
+
   test("crash BETWEEN extracted write and lineage append: resume leaves exactly one copy (VERDICT r04 task 6)") {
     val dir = Files.createTempDirectory("graft-crashwin").toString
     val df = PagesGen.asDataFrame(spark, sf001)

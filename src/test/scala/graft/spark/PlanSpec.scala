@@ -2,6 +2,10 @@ package graft.spark
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, DirectShufflePartitionID}
+import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Physical-plan assertions (SURVEY.md §4): the scale posture is part of
   * correctness — these specs pin the plans we want so a regression that
   * adds a shuffle, drops a broadcast, or breaks filter pushdown fails CI.
@@ -171,19 +175,37 @@ class PlanSpec extends SparkSpec {
   }
 
   test("write clustering shuffles EXTRACTED rows, never the html blob") {
+    // the plan runToDir actually writes: ONE exchange, above the kernel,
+    // that passes pid through as the partition id — no pid hashing, so no
+    // two pids share a writing task and none is left empty
     val dir = Files.createTempDirectory("graft-plan5").toString
     PagesGen.asDataFrame(spark, sf001).write.parquet(s"$dir/pages")
     val pages = spark.read.parquet(s"$dir/pages")
-    val clustered = ExtractJob.extract(ExtractJob.withPid(pages, 8))
-      .repartition(8, org.apache.spark.sql.functions.col("pid"))
-    val p = plan(clustered.toDF())
-    val exchanges = p.linesIterator
-      .count(l => l.contains("Exchange") && !l.contains("Reused"))
-    assert(exchanges == 1, s"expected exactly the write-clustering shuffle:\n$p")
-    // the exchange sits ABOVE the kernel: it moves ExtractedRow (content),
-    // not the raw page html — the schema at the shuffle proves it
-    assert(clustered.schema.fieldNames.contains("content") &&
-      !clustered.schema.fieldNames.contains("html"))
+    val buckets = 8
+    val execs = executionsOf(ExtractJob.runToDir(spark, pages, s"$dir/out", "r", buckets))
+    val write = execs.map(_.executedPlan)
+      .filter(p => p.toString.contains("InsertIntoHadoopFsRelationCommand") &&
+        p.toString.contains(s"$dir/out/extracted"))
+    assert(write.size == 1, s"expected one extracted write, got ${write.size}")
+    val exchanges = AqePlans.collect(write.head) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, s"expected exactly the write-clustering shuffle:\n${write.head}")
+    val ex = exchanges.head
+    ex.outputPartitioning match {
+      case ShufflePartitionIdPassThrough(DirectShufflePartitionID(pid: AttributeReference), n) =>
+        assert(pid.name == "pid" && n == buckets)
+      case other => fail(s"write exchange is not a pid pass-through: $other")
+    }
+    val p = write.head.toString
+    assert(!p.contains("hashpartitioning(pid"), s"pid is hashed:\n$p")
+    // the exchange moves ExtractedRow (content), not the raw page html
+    val shuffled = ex.output.map(_.name)
+    assert(shuffled.contains("content") && !shuffled.contains("html"), shuffled.toString)
+    val pidDirs = new java.io.File(s"$dir/out/extracted").listFiles().filter(_.getName.startsWith("pid="))
+    assert(pidDirs.length == buckets)
+    pidDirs.foreach { d =>
+      val files = d.listFiles().filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName}: ${files.length} data files")
+    }
   }
 
   test("lineage aggregation is partial (map-side combine before the shuffle)") {
@@ -238,11 +260,10 @@ class PlanSpec extends SparkSpec {
       s"wide column not pruned: $readSchema")
   }
 
-  test("lineage read-back never touches the content column") {
-    // runToDir computes lineage from a read-back of the written output;
-    // at 10^12 docs the content blob column must be pruned at the scan
-    // (this replaced an extracted.cache() that materialized the full
-    // output a second time).
+  test("lineage prunes the content column of a scanned source") {
+    // lineage selects its five narrow columns before the typed fold, so
+    // over a scan of extracted rows the content blob column is pruned
+    // (runToDir never scans its output: PipelineSpec asserts no read-back)
     val dir = Files.createTempDirectory("graft-plan4").toString
     val s = spark
     import s.implicits._
@@ -250,8 +271,8 @@ class PlanSpec extends SparkSpec {
       graft.spark.ExtractedRow("u1", 0, "big content", "", null, 10L, 5L),
       graft.spark.ExtractedRow("u2", 1, "more content", "", "err", 20L, 6L))
       .toDS().write.partitionBy("pid").parquet(s"$dir/extracted")
-    val readBack = spark.read.parquet(s"$dir/extracted")
-    val lin = graft.spark.ExtractJob.lineageFromColumns(readBack, "r")
+    val scanned = spark.read.parquet(s"$dir/extracted").as[ExtractedRow]
+    val lin = graft.spark.ExtractJob.lineage(scanned, "r")
     val readSchema = plan(lin.toDF()).linesIterator
       .find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("url") && readSchema.contains("in_bytes"),
