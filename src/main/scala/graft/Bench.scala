@@ -98,7 +98,7 @@ object Bench {
   def elapsed: Double = (System.nanoTime() - startNanos) / 1e9
   def remaining: Double = budgetSecs - elapsed
 
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")

@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r07 auxiliary micro-bench (guide §1.4): time SparkEntry queries with the
   * noop sink in ONE warm JVM/session. `Bench.scala` is FROZEN for the
   * driver's measurement; this separate main exists only for the
-  * optimization round's before/after evidence (OPTIMIZATION_r07.md) and
-  * mirrors Bench's session config (same master/core env contract, same
-  * shuffle-partition and split sizing) and its per-query methodology
+  * optimization round's before/after evidence (OPTIMIZATION_r07.md). It
+  * runs in [[Bench.session]] (same master, shuffle-partition and split
+  * sizing) and mirrors Bench's per-query methodology
   * (1 warmup + N timed runs, noop sink, driver GC outside the timed
   * window, median reported).
   *
@@ -38,17 +36,7 @@ object BenchExtra {
     val plansDir = sys.env.get("GRAFT_BENCHX_PLANS")
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", math.max(cpus.toInt, 8).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", (16L * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (1L * 1024 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(cpus.toInt)
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -393,7 +393,6 @@ final class Elem(var name: String) extends DNode {
     val before = mutable.ArrayBuffer.empty[Elem]
     val it = root.descendants
     var found = false
-    val anc = ancestors.toSet
     while (it.hasNext && !found) {
       it.next() match {
         case e: Elem if e eq this => found = true

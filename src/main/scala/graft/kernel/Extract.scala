@@ -98,8 +98,6 @@ object Extract {
     }
   }
 
-  private val ReDoctype = Pattern.compile("<!DOCTYPE.*?>", Pattern.DOTALL)
-
   /** util.py:167-170 — `re.sub(r'<!DOCTYPE.*?>') then .replace('&nbsp;')`
     * as ONE copying scan instead of two (regex engine pass + full-copy
     * replace per document).  `<!DOCTYPE.*?>` DOTALL non-greedy ≡ skip to

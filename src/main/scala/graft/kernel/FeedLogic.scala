@@ -52,7 +52,6 @@ object FeedLogic {
   }
 
   private val ReTrailingEllipsis = Pattern.compile("\\[?\\.\\.\\.\\]?\\s*$")
-  private val ReHtmlComment = Pattern.compile("<!--.*?-->", Pattern.DOTALL)
 
   /** extract_feed.py:103-120 — F5 quality gates + F6 cleanup. Returns the
     * processed soup, or the rejection reason (Left).

@@ -349,8 +349,6 @@ object Patterns {
     catch { case _: NumberFormatException => null }
   }
 
-  private val ReWsRun = Pattern.compile("[ \\t]+")
-  private val ReEntity = Pattern.compile("&[^;]{2,6};")
   private val AOrScript = Set("a", "script")
 
   /** patterns.py:440-448 — text length excluding <a>/<script> text, with

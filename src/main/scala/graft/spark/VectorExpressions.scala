@@ -1,12 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 
 /** `float_vec_dot(a, b)` — dot product of two `array<float>` columns as a
@@ -320,9 +319,4 @@ object VectorExpressions {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("float_vec_lsh_bucket"), lshInfo, lshBuilder)
   }
-
-  /** Column helper: dot(a, b) as DOUBLE (codegen'd); requires register().
-    * Takes column-name/expression strings (the ops layer style).
-    */
-  def vecDot(a: String, b: String): Column = expr(s"float_vec_dot($a, $b)")
 }

@@ -97,7 +97,10 @@ class MultimodalSpec extends AnyFunSuite {
     assert(m.width == 880.0)      // 320 + (7%8)*80, from tkhd 16.16 fixed
     assert(m.height == 360.0)     // 240 + (7%5)*60
     // the committed fixture IS synthMp4(7): synthesis is stable
-    assert(Multimodal.synthMp4(7).sameElements(bytes))
+    assert(Multimodal.synthMp4(7).sameElements(bytes),
+      "sample.mp4 differs from Multimodal.synthMp4(7); if the synthesis " +
+        "change is intended, regenerate the fixture by writing the bytes of " +
+        "Multimodal.synthMp4(7) to src/test/resources/multimodal/sample.mp4")
     // features carry the parsed metadata, not just byte statistics
     val feat = Multimodal.decodeMp4Features(bytes).get
     assert(feat(1) == 2.0) // track count dim
