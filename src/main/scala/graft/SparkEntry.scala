@@ -21,6 +21,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     extractQuery(spark, "/root/testdata/sf0.001")
 
+  /** pid buckets of x1/x2; [[graft.spark.ExtractOracle]] mirrors `pid`
+    * with the same count.
+    */
+  val ExtractBuckets = 32
+
   /** pages → pid → kernel → (url, pid, note, error, content length+hash).
     * content_hash pins the extracted BYTES driver-visibly: a munge or
     * hyphenation byte regression between rounds changes the hash column
@@ -28,8 +33,7 @@ object SparkEntry {
     */
   def extractQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val pages = PagesGen.asDataFrame(spark, sfDir)
-    val buckets = 32
-    ExtractJob.extract(ExtractJob.withPid(pages, buckets))
+    ExtractJob.extract(ExtractJob.withPid(pages, ExtractBuckets))
       .toDF()
       .select(
         col("url"),
@@ -45,8 +49,7 @@ object SparkEntry {
     */
   def lineageQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val pages = PagesGen.asDataFrame(spark, sfDir)
-    val buckets = 32
-    val extracted = ExtractJob.extract(ExtractJob.withPid(pages, buckets))
+    val extracted = ExtractJob.extract(ExtractJob.withPid(pages, ExtractBuckets))
     ExtractJob.lineage(extracted, "verify")
       .select(
         col("partition_id").cast("long").as("partition_id"),

@@ -3,6 +3,8 @@ package graft.kernel
 import java.nio.charset.{Charset, StandardCharsets}
 import java.util.regex.Pattern
 
+import scala.util.control.NonFatal
+
 /** The per-document extraction pipeline — batch analogue of the reference's
   * readability/clean.py `Clean`/`_Clean` (SURVEY.md §3.1): URL normalization
   * (U1-U10), template short-circuits (U5-U8), the generic/special extractors
@@ -412,8 +414,15 @@ object Clean {
   }
 
   /** Full per-row kernel: decode → route → extract → munge → wrap.
-    * Total: any internal crash becomes an error result (SURVEY.md D8 —
-    * row failure must never be task failure).
+    * Total, and the one place a kernel crash becomes a row (SURVEY.md
+    * D8 — row failure must never be task failure): an `Exception` → note
+    * `error`; a `StackOverflowError` or another `NonFatal` → note
+    * `kernel-failure`. StackOverflowError is the ONE fatal converted: an
+    * adversarially deep DOM overflows the recursive traversals, the stack
+    * is unwound at this catch, and CPython raises the equivalent
+    * RecursionError (an Exception its per-entry handler catches) on the
+    * same page. OutOfMemoryError/LinkageError still fail the task (ADVICE
+    * r01). No retry: the kernel is a pure function of its bytes.
     */
   def clean(url: String, htmlBytes: Array[Byte]): Cleaned = {
     try {
@@ -424,6 +433,11 @@ object Clean {
       case e: Exception =>
         Cleaned(url, null, "error",
           e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
+      case _: StackOverflowError =>
+        Cleaned(url, null, "kernel-failure", "StackOverflowError: dom depth")
+      case NonFatal(e) =>
+        Cleaned(url, null, "kernel-failure", e.getClass.getSimpleName + ": " +
+          Option(e.getMessage).getOrElse("").take(200))
     }
   }
 }

@@ -9,16 +9,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.kernel.Clean
-
 /** `extract_readable(url STRING, html BINARY) →
   *    STRUCT<content: STRING, note: STRING, error: STRING>`
   *
   * SQL surface for the extraction kernel (SURVEY.md §4.3): the typed
-  * `mapPartitions` path (ExtractJob) stays primary — it owns lineage and
-  * retry — but SQL users get the kernel as a native Catalyst expression
+  * `mapPartitions` path (ExtractJob) stays primary — it owns lineage —
+  * but SQL users get the kernel as a native Catalyst expression
   * (deterministic, null-intolerant, CodegenFallback: the kernel is opaque
   * JVM code, so generated code would only wrap a virtual call anyway).
+  * Each row goes through `ExtractJob.extractOne` at the default size cap,
+  * so a struct equals the typed path's (content, note, error), size-cap
+  * and kernel-failure rows included.
   */
 case class ExtractReadable(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -37,19 +38,10 @@ case class ExtractReadable(left: Expression, right: Expression)
   }
 
   override protected def nullSafeEval(url: Any, html: Any): Any = {
-    val c =
-      try Clean.clean(
-        url.asInstanceOf[UTF8String].toString,
-        html.asInstanceOf[Array[Byte]])
-      catch {
-        // same contract as ExtractJob.extractOne: a pathologically deep
-        // DOM's StackOverflowError (stack unwound here) becomes an error
-        // struct, not a dead task — the reference catches the equivalent
-        // RecursionError per entry. Other fatals propagate.
-        case _: StackOverflowError =>
-          Clean.Cleaned(null, null, "kernel-failure",
-            "StackOverflowError: dom depth")
-      }
+    val c = ExtractJob.extractOne(
+      url.asInstanceOf[UTF8String].toString,
+      html.asInstanceOf[Array[Byte]],
+      pid = 0, ExtractJob.DefaultMaxHtmlBytes)
     InternalRow(
       UTF8String.fromString(c.content),
       UTF8String.fromString(c.note),

@@ -27,9 +27,11 @@ import graft.kernel.Clean
   *     and single giant documents are bounded by `maxHtmlBytes` (the
   *     reference bounds work by fetch deadline, util.py:100; we bound by
   *     size — SURVEY.md §4.2).
-  *   - row failure ≠ job failure: the kernel is wrapped in bounded retry and
-  *     failures become `error` rows + lineage failure samples (feed.py
-  *     121-139 semantics, D8).
+  *   - row failure ≠ job failure: `Clean.clean` is total, so a kernel
+  *     failure becomes an `error`/`kernel-failure` row + a lineage failure
+  *     sample (D8). One attempt: the reference's retry (feed.py 121-139)
+  *     guards a network fetch, while the kernel is a pure function of
+  *     bytes already in the table.
   *   - resume: a committed (run_id, pid) set from the lineage table filters
   *     the scan; re-run writes with dynamic partition overwrite on pid so
   *     duplicates cannot survive (§7.4).
@@ -78,8 +80,7 @@ object ExtractJob {
     */
   def extract(
       pagesWithPid: DataFrame,
-      maxHtmlBytes: Int = DefaultMaxHtmlBytes,
-      attempts: Int = 2): Dataset[ExtractedRow] = {
+      maxHtmlBytes: Int = DefaultMaxHtmlBytes): Dataset[ExtractedRow] = {
     val spark = pagesWithPid.sparkSession
     import spark.implicits._
     pagesWithPid
@@ -87,54 +88,27 @@ object ExtractJob {
       .as[(String, Array[Byte], Int)]
       .mapPartitions { it =>
         it.map { case (url, html, pid) =>
-          extractOne(url, html, pid, maxHtmlBytes, attempts)
+          extractOne(url, html, pid, maxHtmlBytes)
         }
       }
   }
 
-  /** One row through the kernel: size cap → bounded retry → error row. */
+  /** One row through the kernel: size cap → `Clean.clean` (total, so
+    * no catch here) → row.
+    */
   def extractOne(
       url: String,
       html: Array[Byte],
       pid: Int,
-      maxHtmlBytes: Int,
-      attempts: Int): ExtractedRow = {
+      maxHtmlBytes: Int): ExtractedRow = {
     val nBytes = if (html == null) 0L else html.length.toLong
     val t0 = System.nanoTime()
-    def done(content: String, note: String, error: String) =
-      ExtractedRow(url, pid, content, note, error, nBytes,
-        (System.nanoTime() - t0) / 1000L)
-    if (nBytes > maxHtmlBytes)
-      done(null, "size-cap", s"html ${nBytes}B exceeds cap ${maxHtmlBytes}B")
-    else {
-      var attempt = 0
-      var out: ExtractedRow = null
-      while (out == null && attempt < attempts) {
-        attempt += 1
-        try {
-          val c = Clean.clean(url, if (html == null) Array.emptyByteArray else html)
-          out = done(c.content, c.note, c.error)
-        } catch {
-          // NonFatal only: OutOfMemoryError/LinkageError must fail the task,
-          // not be laundered into a per-row error (ADVICE r01).
-          // StackOverflowError is the ONE fatal we deliberately convert:
-          // a pathologically deep DOM (adversarial nesting) overflows the
-          // recursive kernel traversals, the stack is fully unwound at
-          // this catch point, and the reference behaves the same way —
-          // CPython raises RecursionError (an Exception, caught by its
-          // per-entry handler) on the same page. One 100k-deep page in
-          // 10^12 must be an error row, not a dead job.
-          case _: StackOverflowError if attempt >= attempts =>
-            out = done(null, "kernel-failure", "StackOverflowError: dom depth")
-          case _: StackOverflowError => // retry (deterministic, will re-fail)
-          case scala.util.control.NonFatal(e) if attempt >= attempts =>
-            val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
-            out = done(null, "kernel-failure", msg)
-          case scala.util.control.NonFatal(_) => // retry
-        }
-      }
-      out
-    }
+    val c =
+      if (nBytes > maxHtmlBytes)
+        Clean.Cleaned(url, null, "size-cap", s"html ${nBytes}B exceeds cap ${maxHtmlBytes}B")
+      else Clean.clean(url, if (html == null) Array.emptyByteArray else html)
+    ExtractedRow(url, pid, c.content, c.note, c.error, nBytes,
+      (System.nanoTime() - t0) / 1000L)
   }
 
   /** Per-pid lineage fold: counts, bytes and wall time, with failure
@@ -143,8 +117,8 @@ object ExtractJob {
     * (a collect_list-then-slice formulation would buffer every failure
     * row, an unbounded agg buffer at 10^12-doc scale). Rows fold in with
     * [[add]]; another fold's partials merge in with [[merge]], samples
-    * concatenated in arrival order up to the cap, as [[lineage]]'s merge
-    * aggregate does. Shared by [[lineage]] and [[runToDir]].
+    * concatenated in arrival order up to the cap. The one lineage
+    * definition: [[lineage]] and [[runToDir]] both fold and merge here.
     */
   final class LineageFold {
     private final class Acc {
@@ -180,10 +154,21 @@ object ExtractJob {
       LineagePartial(pid, a.n, a.bytes, a.ok, a.fail, a.samples.toList, a.wallUs)
     }
 
-    def rows(runId: String): Iterator[LineageRow] = partials.map { p =>
+    def rows(runId: String): Iterator[LineageRow] = partials.map(LineageFold.row(runId, _))
+  }
+
+  object LineageFold {
+    /** Two partials of one pid as one, through [[LineageFold.merge]]. */
+    def merged(a: LineagePartial, b: LineagePartial): LineagePartial = {
+      val fold = new LineageFold
+      fold.merge(a)
+      fold.merge(b)
+      fold.partials.next()
+    }
+
+    def row(runId: String, p: LineagePartial): LineageRow =
       LineageRow(runId, p.pid, p.input_count, p.input_bytes, p.ok_count,
         p.fail_count, p.failure_samples, p.wall_us / 1000L)
-    }
   }
 
   /** Per-partition lineage of an extracted relation, keyed on the pid
@@ -191,9 +176,10 @@ object ExtractJob {
     *  1. mapPartitions pre-aggregation: a [[LineageFold]] per task over
     *     the five narrow lineage columns (selected first, so a scan source
     *     prunes the `content` blob) — one partial per pid the task saw.
-    *  2. a tiny merge groupBy over the per-task partials (≤ tasks×pids
-    *     rows, each with ≤5 samples): extract() is scan-local, so a pid
-    *     spans tasks; all aggregates are sums/flattens of bounded values.
+    *  2. a tiny merge over the per-task partials (≤ tasks×pids rows, each
+    *     with ≤5 samples): extract() is scan-local, so a pid spans tasks.
+    *     `reduceGroups` merges them with [[LineageFold.merged]], map-side
+    *     first, so the merge rule is the one [[runToDir]] uses.
     * [[runToDir]] does not run this: it folds the same lineage inside its
     * write pass, so it never reads its output back.
     */
@@ -211,25 +197,9 @@ object ExtractJob {
         fold.partials
       }
     partials
-      .groupBy(col("pid"))
-      .agg(
-        sum(col("input_count")).as("input_count"),
-        sum(col("input_bytes")).as("input_bytes"),
-        sum(col("ok_count")).as("ok_count"),
-        sum(col("fail_count")).as("fail_count"),
-        slice(flatten(collect_list(col("failure_samples"))),
-          1, MaxFailureSamples).as("failure_samples"),
-        (sum(col("wall_us")) / 1000L).cast("long").as("wall_ms"))
-      .select(
-        lit(runId).as("run_id"),
-        col("pid").as("partition_id"),
-        col("input_count"),
-        col("input_bytes"),
-        col("ok_count"),
-        col("fail_count"),
-        col("failure_samples"),
-        col("wall_ms"))
-      .as[LineageRow]
+      .groupByKey(_.pid)
+      .reduceGroups(LineageFold.merged _)
+      .map { case (_, p) => LineageFold.row(runId, p) }
   }
 
   /** A write task's rows, passed through unchanged while their lineage

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.SparkEntry
+
 /** Dynamic driver-recompute oracles for the extraction queries themselves
   * (VERDICT r05 task 1 — the t12 pattern applied to the flagship kernel).
   *
@@ -56,7 +58,7 @@ object ExtractOracle {
   /** The expected extraction output, recomputed on the driver: documents →
     * PagesGen.buildPage (replica 0, exactly what PagesGen.asDataFrame
     * synthesizes at repl=1) → ExtractJob.extractOne with the production
-    * size-cap/retry envelope — the same per-row function the distributed
+    * size cap — the same per-row function the distributed
     * mapPartitions applies, minus all distribution. Work is spread over a
     * parallel stream purely for wall time; the output array is
     * index-addressed, so the result is order-deterministic.
@@ -77,11 +79,10 @@ object ExtractOracle {
       val (docId, text) = input(i)
       val (url, html) = PagesGen.buildPage(docId, text, 0)
       val pid = {
-        val h = sparkXxhash64(url) % 32L
-        (if (h < 0) h + 32L else h).toInt // pmod semantics
+        val h = sparkXxhash64(url) % SparkEntry.ExtractBuckets
+        (if (h < 0) h + SparkEntry.ExtractBuckets else h).toInt // pmod semantics
       }
-      val r = ExtractJob.extractOne(
-        url, html, pid, ExtractJob.DefaultMaxHtmlBytes, attempts = 2)
+      val r = ExtractJob.extractOne(url, html, pid, ExtractJob.DefaultMaxHtmlBytes)
       val content = Option(r.content).getOrElse("")
       out(i) = Expected(url, pid, r.note, Option(r.error).getOrElse(""),
         sparkLength(content), sparkXxhash64(content), html.length.toLong)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.kernel.FeedLogic
 import graft.spark.{ExtractJob, ExtractedRow}
 
 /** Structured Streaming surfaces (SURVEY.md §2.10/§3.3):
@@ -22,23 +23,15 @@ import graft.spark.{ExtractJob, ExtractedRow}
   */
 object StreamingExtract {
 
-  /** Streaming variant of ExtractJob.extract: same kernel, same row type.
-    * Input must be a streaming DataFrame with (url STRING, html BINARY).
+  /** ExtractJob.extract over ExtractJob.withPid on a streaming source:
+    * the batch path's pid, kernel and row type, unchanged. Input must be a
+    * streaming DataFrame with (url STRING, html BINARY).
     */
   def extractStream(
       pages: DataFrame,
       buckets: Int,
-      maxHtmlBytes: Int = ExtractJob.DefaultMaxHtmlBytes): Dataset[ExtractedRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .withColumn("pid", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
-      .select("url", "html", "pid")
-      .as[(String, Array[Byte], Int)]
-      .mapPartitions(_.map { case (url, html, pid) =>
-        ExtractJob.extractOne(url, html, pid, maxHtmlBytes, attempts = 2)
-      })
-  }
+      maxHtmlBytes: Int = ExtractJob.DefaultMaxHtmlBytes): Dataset[ExtractedRow] =
+    ExtractJob.extract(ExtractJob.withPid(pages, buckets), maxHtmlBytes)
 
   /** Event-time windowed lineage over a streaming pages source: watermark
     * on `warc_ts` (bounds state; late pages beyond it are dropped) +
@@ -55,12 +48,11 @@ object StreamingExtract {
       maxHtmlBytes: Int = ExtractJob.DefaultMaxHtmlBytes): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages
-      .withColumn("pid", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+    ExtractJob.withPid(pages, buckets)
       .select("warc_ts", "url", "html", "pid")
       .as[(java.sql.Timestamp, String, Array[Byte], Int)]
       .map { case (ts, url, html, pid) =>
-        (ts, ExtractJob.extractOne(url, html, pid, maxHtmlBytes, attempts = 2))
+        (ts, ExtractJob.extractOne(url, html, pid, maxHtmlBytes))
       }
       .toDF("warc_ts", "r")
       .withWatermark("warc_ts", watermarkDelay)
@@ -270,18 +262,15 @@ object StreamingExtract {
       interval_seconds: Double,
       next_due: Double)
 
-  val MinInterval = 3600.0
-  val MaxInterval = 259200.0
   val DefaultInterval = 14400.0
 
-  /** Pure transition (unit-testable; mirrors graft.kernel.FeedLogic
-    * updateInterval semantics).
+  /** Pure transition (unit-testable): the interval moves by
+    * graft.kernel.FeedLogic.updateInterval, the one home of its ×0.9/×1.1
+    * clamp.
     */
   def step(prev: Option[FeedState], ev: FetchEvent): FeedState = {
     val cur = prev.map(_.intervalSeconds).getOrElse(DefaultInterval)
-    val scaled = if (ev.new_items > 0) cur * 0.9 else cur * 1.1
-    val clamped = math.min(math.max(scaled, MinInterval), MaxInterval)
-    FeedState(ev.fetch_time, clamped)
+    FeedState(ev.fetch_time, FeedLogic.updateInterval(cur, ev.new_items > 0))
   }
 
   def adaptiveSchedule(events: Dataset[FetchEvent]): Dataset[ScheduleRow] = {

@@ -55,4 +55,19 @@ class ExtractExpressionSpec extends SparkSpec {
     assert(row.getAs[String]("error") != null)
     assert(row.getAs[String]("note") == "kernel-failure")
   }
+
+  test("extract_readable applies the typed path's size cap") {
+    ExtractReadable.register(spark)
+    val s = spark
+    import s.implicits._
+    val url = "http://giant.example/p"
+    val html = Array.fill[Byte](ExtractJob.DefaultMaxHtmlBytes + 1)('a'.toByte)
+    val r = Seq((url, html)).toDF("url", "html")
+      .selectExpr("extract_readable(url, html) AS r")
+      .selectExpr("r.content", "r.note", "r.error")
+      .collect()(0)
+    val k = ExtractJob.extractOne(url, html, 0, ExtractJob.DefaultMaxHtmlBytes)
+    assert(k.note == "size-cap")
+    assert((r.getString(0), r.getString(1), r.getString(2)) == (k.content, k.note, k.error))
+  }
 }
