@@ -35,15 +35,15 @@ object Clean {
   private val ReYoutubeV = Pattern.compile("v=([^&]+)")
   private val RePdf = Pattern.compile("\\.pdf(\\?|$)", FLAGS)
   private val ReImage = Pattern.compile("\\.(gif|jpe?g|png)(\\?|$)", FLAGS)
+  private val ReUtmPair = Pattern.compile("utm_[a-z]+=[^&]+(&?)")
+  private val ReTrailingSeparators = Pattern.compile("[?&]+$")
 
   /** util.py:88-91 (U1) — fetch-time utm strip (applied per redirect hop in
     * the reference; exposed for the relational surface + tests).
     */
   def cleanUrl(url0: String): String = {
-    var url = Pattern.compile("utm_[a-z]+=[^&]+(&?)").matcher(url0)
-      .replaceAll("$1")
-    url = Pattern.compile("[?&]+$").matcher(url).replaceAll("")
-    url
+    val url = ReUtmPair.matcher(url0).replaceAll("$1")
+    ReTrailingSeparators.matcher(url).replaceAll("")
   }
 
   /** clean.py:104-111 (U2/U3 + fragment/utm strip). */
@@ -140,10 +140,10 @@ object Clean {
       else if (isValidUtf8(bytes)) StandardCharsets.UTF_8
       else detectEastAsian(bytes).getOrElse(Charset.forName("windows-1252"))
     }
-    val dec = cs.newDecoder()
-      .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
-    dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString
+    // String(bytes, cs) always replaces malformed and unmappable input
+    // with the charset's default replacement, as a REPLACE decoder does,
+    // and copies the page once.
+    new String(bytes, cs)
   }
 
   private def hasUtf16Bom(bytes: Array[Byte]): Boolean =

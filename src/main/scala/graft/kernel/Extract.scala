@@ -102,35 +102,38 @@ object Extract {
     * as ONE copying scan instead of two (regex engine pass + full-copy
     * replace per document).  `<!DOCTYPE.*?>` DOTALL non-greedy ≡ skip to
     * the first '>' (no '>' → no match, chars pass through); neither
-    * Python's re.sub nor this scan rescans assembled output.  A `&nbsp;`
-    * that only materializes when a DOCTYPE is cut out from inside it
+    * Python's re.sub nor this scan rescans assembled output.  The scan
+    * jumps between `indexOf` hits of the two needles, earlier hit first,
+    * and copies the ranges between them whole: a `&nbsp;` inside a cut
+    * DOCTYPE is looked for again past the cut, and once a DOCTYPE has no
+    * '>' after it no later one can close either.  A `&nbsp;` that only
+    * materializes when a DOCTYPE is cut out from inside it
     * ("&nb<!DOCTYPE x>sp;") is caught by the post-scan contains check,
     * which replays the reference's second pass — exact equivalence.
     */
   def preCleanHtml(html: String): String = {
-    if (html.indexOf("<!DOCTYPE") < 0 && html.indexOf("&nbsp;") < 0)
-      return html
-    val n = html.length
-    val sb = new java.lang.StringBuilder(n)
-    var i = 0
+    var doctype = html.indexOf("<!DOCTYPE")
+    var nbsp = html.indexOf("&nbsp;")
+    if (doctype < 0 && nbsp < 0) return html
+    val sb = new java.lang.StringBuilder(html.length)
     var run = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<' && html.startsWith("<!DOCTYPE", i)) {
-        val gt = html.indexOf('>', i + 9)
-        if (gt >= 0) {
-          sb.append(html, run, i)
-          i = gt + 1
-          run = i
-        } else i += 1
-      } else if (c == '&' && html.startsWith("&nbsp;", i)) {
-        sb.append(html, run, i)
-        sb.append(' ')
-        i += 6
-        run = i
-      } else i += 1
+    while (doctype >= 0 || nbsp >= 0) {
+      if (doctype >= 0 && (nbsp < 0 || doctype < nbsp)) {
+        val gt = html.indexOf('>', doctype + 9)
+        if (gt < 0) doctype = -1
+        else {
+          sb.append(html, run, doctype)
+          run = gt + 1
+          doctype = html.indexOf("<!DOCTYPE", run)
+          if (nbsp >= 0 && nbsp < run) nbsp = html.indexOf("&nbsp;", run)
+        }
+      } else {
+        sb.append(html, run, nbsp).append(' ')
+        run = nbsp + 6
+        nbsp = html.indexOf("&nbsp;", run)
+      }
     }
-    sb.append(html, run, n)
+    sb.append(html, run, html.length)
     val out = sb.toString
     if (out.contains("&nbsp;")) out.replace("&nbsp;", " ") else out
   }

@@ -52,6 +52,8 @@ object FeedLogic {
   }
 
   private val ReTrailingEllipsis = Pattern.compile("\\[?\\.\\.\\.\\]?\\s*$")
+  // no DOTALL: a comment spanning lines is left for the parse (see below)
+  private val ReLineComment = Pattern.compile("<!--.*?-->")
 
   /** extract_feed.py:103-120 — F5 quality gates + F6 cleanup. Returns the
     * processed soup, or the rejection reason (Left).
@@ -62,7 +64,7 @@ object FeedLogic {
     // NB the reference regex-strips comments with re.sub WITHOUT re.S
     // (extract_feed.py:108) — multiline comments survive into the parse and
     // are then dropped by CommentStrip.
-    val html = Pattern.compile("<!--.*?-->").matcher(content).replaceAll("")
+    val html = ReLineComment.matcher(content).replaceAll("")
     val soup = HtmlParser.parse(html)
     Extract.commentStrip(soup)
     for (t <- soup.findAll("script")) Patterns.strip(t)
@@ -182,22 +184,23 @@ object FeedLogic {
     out.result()
   }
 
+  private val ReBasicEntity =
+    Pattern.compile("&(#\\d+|#[xX][0-9a-fA-F]+|amp|lt|gt|quot|apos);")
+
   /** sgmllib's attribute entity replacement: the five named refs + charrefs. */
   private def unescapeBasic(s: String): String = {
     if (s.indexOf('&') < 0) return s
-    Pattern.compile("&(#\\d+|#[xX][0-9a-fA-F]+|amp|lt|gt|quot|apos);")
-      .matcher(s)
-      .replaceAll { mr =>
-        val g = mr.group(1)
-        val repl = g match {
-          case "amp" => "&"; case "lt" => "<"; case "gt" => ">"
-          case "quot" => "\""; case "apos" => "'"
-          case _ if g.startsWith("#x") || g.startsWith("#X") =>
-            Integer.parseInt(g.substring(2), 16).toChar.toString
-          case _ => Integer.parseInt(g.substring(1)).toChar.toString
-        }
-        java.util.regex.Matcher.quoteReplacement(repl)
+    ReBasicEntity.matcher(s).replaceAll { mr =>
+      val g = mr.group(1)
+      val repl = g match {
+        case "amp" => "&"; case "lt" => "<"; case "gt" => ">"
+        case "quot" => "\""; case "apos" => "'"
+        case _ if g.startsWith("#x") || g.startsWith("#X") =>
+          Integer.parseInt(g.substring(2), 16).toChar.toString
+        case _ => Integer.parseInt(g.substring(1)).toChar.toString
       }
+      java.util.regex.Matcher.quoteReplacement(repl)
+    }
   }
 
   /** feed.py:142-148 — D1 entry key: base64(sha256(utf8(id or link))). */
@@ -219,7 +222,9 @@ object FeedLogic {
     f
   }
 
+  private val ReAtParam = Pattern.compile("\\?at=[^?&]+")
+
   /** main.py:62 — U9 `at=` param strip. */
   def stripAtParam(url: String): String =
-    Pattern.compile("\\?at=[^?&]+").matcher(url).replaceAll("")
+    ReAtParam.matcher(url).replaceAll("")
 }

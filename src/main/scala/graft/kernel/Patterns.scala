@@ -355,30 +355,21 @@ object Patterns {
     * space/tab runs collapsed and entity-looking sequences removed.
     */
   def textLen(tag: Elem): Int = {
-    val sb = new StringBuilder
-    for (t <- tag.findTexts) {
-      if (t.findParent(AOrScript) == null) appendStripped(t.data, sb)
-    }
-    // length after collapsing [ \t]+ runs to ' ' then dropping
-    // &[^;]{2,6}; sequences — computed by scan instead of two regex
-    // replaceAll passes (r03 perf; this runs once per leaf block).
-    // Entity matching must see the COLLAPSED text (a run inside
-    // [^;]{2,6} collapses to one char and can enable a match), so
-    // collapse materializes once and the entity pass only counts.
-    val collapsed = new StringBuilder(sb.length)
-    var i = 0
-    var inRun = false
-    while (i < sb.length) {
-      val c = sb.charAt(i)
-      if (c == ' ' || c == '\t') {
-        if (!inRun) collapsed.append(' ')
-        inRun = true
-      } else { collapsed.append(c); inRun = false }
-      i += 1
-    }
+    // bs4's per-text findParent climbs past `tag` to the root: under an
+    // <a>/<script> ancestor (or being one) every text is excluded.
+    if (AOrScript.contains(tag.name) || tag.findParent(AOrScript) != null) return 0
+    // Below `tag`, a text is excluded iff the walk entered an <a>/<script>
+    // to reach it. [ \t]+ runs collapse to ' ' as each str.strip()ped text
+    // is appended: a stripped text neither starts nor ends with a space
+    // or tab, so no run spans two texts.
+    val collapsed = new java.lang.StringBuilder
+    appendCollapsedTexts(tag, collapsed)
+    // length after dropping &[^;]{2,6}; sequences — a count, not a
+    // replaceAll. Entity matching must see the COLLAPSED text (a run
+    // inside [^;]{2,6} collapses to one char and can enable a match).
     val n = collapsed.length
     var len = 0
-    i = 0
+    var i = 0
     while (i < n) {
       if (collapsed.charAt(i) == '&') {
         var j = i + 1
@@ -391,13 +382,36 @@ object Patterns {
     len
   }
 
-  /** Python str.strip() of `s` appended without the substring copy. */
-  private def appendStripped(s: String, sb: StringBuilder): Unit = {
+  /** Every text (comments included, as bs4 findAll(text=True)) under `e`
+    * outside <a>/<script>, str.strip()ped and space/tab-run collapsed.
+    */
+  private def appendCollapsedTexts(e: Elem, sb: java.lang.StringBuilder): Unit = {
+    val cs = e.children
+    var i = 0
+    while (i < cs.length) {
+      cs(i) match {
+        case c: Elem => if (!AOrScript.contains(c.name)) appendCollapsedTexts(c, sb)
+        case t: Text => appendStrippedCollapsed(t.data, sb)
+      }
+      i += 1
+    }
+  }
+
+  /** Python str.strip() of `s`, [ \t]+ runs as one ' ', appended in place. */
+  private def appendStrippedCollapsed(s: String, sb: java.lang.StringBuilder): Unit = {
     var a = 0
     var b = s.length
     while (a < b && Py.isSpace(s.charAt(a))) a += 1
     while (b > a && Py.isSpace(s.charAt(b - 1))) b -= 1
-    while (a < b) { sb.append(s.charAt(a)); a += 1 }
+    var inRun = false
+    while (a < b) {
+      val c = s.charAt(a)
+      if (c == ' ' || c == '\t') {
+        if (!inRun) sb.append(' ')
+        inRun = true
+      } else { sb.append(c); inRun = false }
+      a += 1
+    }
   }
 
   type HitCounter =

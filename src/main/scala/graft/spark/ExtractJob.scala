@@ -1,8 +1,11 @@
 package graft.spark
 
+import scala.collection.mutable
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.util.AccumulatorV2
 
 import graft.kernel.Clean
 
@@ -77,6 +80,9 @@ object ExtractJob {
     * output write in runToDir — now clusters the EXTRACTED rows instead,
     * whose boilerplate-stripped content is a fraction of the input html
     * bytes: same bounded files-per-pid, an order less shuffle traffic.
+    * runToDir chains its lineage fold onto this mapPartitions, below that
+    * exchange; Catalyst drops the serialization between the two, so each
+    * row is folded as the object the kernel built.
     */
   def extract(
       pagesWithPid: DataFrame,
@@ -153,8 +159,6 @@ object ExtractJob {
     def partials: Iterator[LineagePartial] = byPid.iterator.map { case (pid, a) =>
       LineagePartial(pid, a.n, a.bytes, a.ok, a.fail, a.samples.toList, a.wallUs)
     }
-
-    def rows(runId: String): Iterator[LineageRow] = partials.map(LineageFold.row(runId, _))
   }
 
   object LineageFold {
@@ -202,22 +206,96 @@ object ExtractJob {
       .map { case (_, p) => LineageFold.row(runId, p) }
   }
 
-  /** A write task's rows, passed through unchanged while their lineage
-    * folds; the task's partials go to `out` once the rows are exhausted.
-    * Only for the RESULT stage of a write: Spark applies a result task's
-    * accumulator updates once per partition, but may re-apply those of a
-    * re-run shuffle-map stage.
+  /** [[runToDir]]'s lineage, merged on the driver as map tasks finish.
+    * Each map task adds its partials once, under its partition id
+    * ([[foldingLineage]]); the driver folds every update straight into
+    * one entry per pid, so it holds O(map tasks + pids) — one bit per map
+    * partition and one entry per pid with ≤ MaxFailureSamples samples —
+    * at any corpus size, never a list of per-task partials.
+    *
+    * Spark may apply a re-run shuffle-map task's update again. An update
+    * from a map partition already merged is skipped: the kernel is
+    * deterministic with one attempt per row, so the re-run folded the same
+    * partials. A pid keeps its first MaxFailureSamples samples in (map
+    * partition, position) order — merging in map-partition order, whatever
+    * order the tasks finish in. [[value]] is one partial per pid, by pid.
+    */
+  final class LineageAccumulator
+      extends AccumulatorV2[(Int, Seq[LineagePartial]), Seq[LineagePartial]] {
+    private val tasks = mutable.BitSet.empty
+    // per pid: the summed counts (samples empty) and the samples, each
+    // tagged with the map partition that folded it
+    private val byPid =
+      mutable.HashMap.empty[Int, (LineagePartial, List[(Int, FailureSample)])]
+
+    def isZero: Boolean = tasks.isEmpty
+
+    def copy(): LineageAccumulator = {
+      val c = new LineageAccumulator
+      c.absorb(this)
+      c
+    }
+
+    def reset(): Unit = {
+      tasks.clear()
+      byPid.clear()
+    }
+
+    /** A map task's partials, under its partition id. */
+    def add(update: (Int, Seq[LineagePartial])): Unit = {
+      val (task, ps) = update
+      if (tasks.add(task)) ps.foreach { p =>
+        put(p.copy(failure_samples = Nil), p.failure_samples.map(task -> _).toList)
+      }
+    }
+
+    def merge(other: AccumulatorV2[(Int, Seq[LineagePartial]), Seq[LineagePartial]]): Unit =
+      other match {
+        case o: LineageAccumulator => absorb(o)
+        case o => throw new UnsupportedOperationException(
+          s"cannot merge ${o.getClass.getName} into LineageAccumulator")
+      }
+
+    def value: Seq[LineagePartial] =
+      byPid.valuesIterator
+        .map { case (p, samples) => p.copy(failure_samples = samples.map(_._2)) }
+        .toSeq
+        .sortBy(_.pid)
+
+    private def absorb(o: LineageAccumulator): Unit =
+      if (!o.tasks.subsetOf(tasks)) {
+        // Spark merges one task's update at a time into the driver's copy
+        require(!o.tasks.exists(tasks), "lineage updates overlap in some map partitions")
+        tasks ++= o.tasks
+        o.byPid.valuesIterator.foreach { case (p, samples) => put(p, samples) }
+      }
+
+    private def put(p: LineagePartial, samples: List[(Int, FailureSample)]): Unit =
+      byPid(p.pid) = byPid.get(p.pid) match {
+        case None => (p, samples)
+        case Some((q, kept)) =>
+          // disjoint map partitions, each in its own order: a stable sort
+          (LineageFold.merged(q, p), (kept ++ samples).sortBy(_._1).take(MaxFailureSamples))
+      }
+  }
+
+  /** A kernel task's rows, passed through unchanged while their lineage
+    * folds; once the rows are exhausted the task's partials go to `out`
+    * under its partition id. This runs in the write's shuffle-map stage,
+    * whose accumulator updates Spark may apply again when it re-runs a map
+    * task; [[LineageAccumulator]] skips a map partition it has merged.
     */
   private def foldingLineage(
       rows: Iterator[ExtractedRow],
-      out: CollectionAccumulator[LineagePartial]): Iterator[ExtractedRow] = {
+      out: LineageAccumulator): Iterator[ExtractedRow] = {
+    val task = TaskContext.getPartitionId()
     val acc = new LineageFold
     var flushed = false
     new Iterator[ExtractedRow] {
       def hasNext: Boolean = rows.hasNext || {
         if (!flushed) {
           flushed = true
-          acc.partials.foreach(p => out.add(p))
+          out.add(task -> acc.partials.toSeq)
         }
         false
       }
@@ -279,10 +357,14 @@ object ExtractJob {
     * (§7.4). `failAfterPids` deliberately stops after K buckets to simulate
     * a killed job (used by the resume test).
     *
-    * One pass over the pages: lineage folds inside the extracted write's
-    * result stage and reaches the driver as at most one partial per
-    * written pid (≤ `buckets`, the same bound as the broadcast
-    * committed-pid set); nothing is read back from `<outDir>/extracted`.
+    * One pass over the pages: lineage folds right after the kernel, in
+    * the write's shuffle-map stage, while each row is still an object
+    * (the two typed mapPartitions fuse, with no serialization between).
+    * Each map task ships one partial per pid it saw; the driver merges
+    * them on arrival in a [[LineageAccumulator]], whose state stays
+    * O(map tasks + `buckets`). The write is exchange → parquet with no
+    * typed pass-through, and nothing is read back from
+    * `<outDir>/extracted`.
     *
     * On Iceberg this whole method maps to `overwritePartitions()` + an
     * appended lineage table inside one transaction — see ICEBERG.md §2
@@ -320,8 +402,13 @@ object ExtractJob {
         pending.filter(col("pid").isin(keep: _*))
       }
 
-    val extracted = extract(scope, maxHtmlBytes)
-    val partials = spark.sparkContext.collectionAccumulator[LineagePartial]("lineage partials")
+    val partials = new LineageAccumulator
+    // unnamed: the scheduler reads a NAMED accumulator's whole value into
+    // the UI state after every task
+    spark.sparkContext.register(partials)
+    // only rows of THIS run's scope fold, so pids published by an earlier
+    // crashed-or-committed run are never covered
+    val extracted = extract(scope, maxHtmlBytes).mapPartitions(foldingLineage(_, partials))
     val prevOverwriteMode =
       spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -332,13 +419,8 @@ object ExtractJob {
       // task holds exactly one pid: one file per partition dir at any
       // executor count (what dynamic overwrite granularity and the resume
       // contract rely on), and no hash collisions doubling a task's rows.
-      // The pass-through after the exchange folds this run's lineage in
-      // the write's own result stage — only pids written by THIS run, so
-      // pids published by an earlier crashed-or-committed run are never
-      // covered.
       extracted
         .repartitionById(buckets, col("pid"))
-        .mapPartitions(foldingLineage(_, partials))
         .write
         .mode(SaveMode.Overwrite)
         .partitionBy("pid")
@@ -346,9 +428,7 @@ object ExtractJob {
       // lineage commits LAST: a pid is "done" only once its lineage row
       // exists, so a crash between the two writes re-runs (and
       // re-overwrites) the pid.
-      val fold = new LineageFold
-      partials.value.forEach(p => fold.merge(p))
-      fold.rows(runId).toSeq.toDS()
+      partials.value.map(LineageFold.row(runId, _)).toDS()
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(lineagePath)
     } finally {

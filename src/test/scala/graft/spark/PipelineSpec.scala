@@ -151,6 +151,43 @@ class PipelineSpec extends SparkSpec {
     assert(lineageOf(resumed) == expected)
   }
 
+  test("map-stage lineage merge: a re-applied task counts once, samples in map-partition order") {
+    // runToDir folds lineage in the write's shuffle-map stage, whose
+    // accumulator updates Spark may apply again when it re-runs a map
+    // task. As Spark does: each update in its own task-side copy, merged
+    // into the driver's accumulator in arrival (completion) order.
+    def driverMerge(updates: Seq[(Int, Seq[LineagePartial])]): Seq[LineagePartial] = {
+      val driver = new ExtractJob.LineageAccumulator
+      updates.foreach { u =>
+        val task = driver.copyAndReset().asInstanceOf[ExtractJob.LineageAccumulator]
+        task.add(u)
+        driver.merge(task)
+      }
+      driver.value
+    }
+    def part(pid: Int, urls: String*) =
+      LineagePartial(pid, urls.size + 1L, 10L * (urls.size + 1), 1L, urls.size.toLong,
+        urls.map(u => FailureSample(u, s"err $u")).toList, 7L)
+    val t0p3 = part(3, "a", "b")
+    val t1p3 = part(3, "c", "d", "e")
+    val t1p5 = part(5, "x")
+    val t2p3 = part(3, "f", "g")
+    // completion order, with map task 1 applied twice and an empty task 4
+    val arrived = Seq(2 -> Seq(t2p3), 1 -> Seq(t1p3, t1p5), 4 -> Nil, 0 -> Seq(t0p3),
+      1 -> Seq(t1p3, t1p5))
+    val merged = driverMerge(arrived)
+    assert(merged.map(_.pid) == Seq(3, 5))
+    val p3 = merged.head
+    assert(p3.input_count == 3L + 4L + 3L && p3.fail_count == 2L + 3L + 2L)
+    assert(p3.ok_count == 3L && p3.input_bytes == 100L && p3.wall_us == 21L)
+    // map partitions 0, 1, 2 in that order, capped at MaxFailureSamples
+    assert(p3.failure_samples.map(_.url) == List("a", "b", "c", "d", "e"))
+    assert(merged(1) == t1p5)
+    // arrival order does not matter, duplicates or not
+    assert(driverMerge(arrived.reverse) == merged)
+    assert(driverMerge(arrived.distinct.sortBy(_._1)) == merged)
+  }
+
   test("crash BETWEEN extracted write and lineage append: resume leaves exactly one copy (VERDICT r04 task 6)") {
     val dir = Files.createTempDirectory("graft-crashwin").toString
     val df = PagesGen.asDataFrame(spark, sf001)

@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, DirectShufflePartitionID}
 import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Physical-plan assertions (SURVEY.md §4): the scale posture is part of
@@ -14,6 +16,17 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Nodes of an executed plan that sit above its shuffles: the walk
+    * enters adaptive plans and their result stage but stops at every
+    * shuffle exchange or shuffle query stage.
+    */
+  private def aboveExchange(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case _: ShuffleExchangeExec | _: ShuffleQueryStageExec => Nil
+    case a: AdaptiveSparkPlanExec => aboveExchange(a.executedPlan)
+    case s: QueryStageExec => aboveExchange(s.plan)
+    case n => n +: (n.children ++ n.subqueries).flatMap(aboveExchange)
+  }
 
   test("ANN/dedup operators never plan an all-pairs product") {
     // the scale contract for every similarity/dedup operator in the
@@ -197,6 +210,21 @@ class PlanSpec extends SparkSpec {
     }
     val p = write.head.toString
     assert(!p.contains("hashpartitioning(pid"), s"pid is hashed:\n$p")
+    // lineage folds in the kernel's mapPartitions, below the exchange:
+    // above it the write is exchange → parquet, with no typed
+    // pass-through that deserializes ExtractedRow again
+    val typed = aboveExchange(write.head).collect {
+      case n @ (_: DeserializeToObjectExec | _: MapPartitionsExec) => n.nodeName
+    }
+    assert(typed.isEmpty, s"typed pass-through above the write exchange: $typed\n$p")
+    // below it the fold is chained onto the kernel with no serialization
+    // between them: one deserialization (the page columns), none of
+    // ExtractedRow
+    val below = ex.child.collect {
+      case n @ (_: DeserializeToObjectExec | _: MapPartitionsExec) => n.nodeName
+    }
+    assert(below.sorted == Seq("DeserializeToObject", "MapPartitions", "MapPartitions"),
+      s"kernel stage: $below\n$p")
     // the exchange moves ExtractedRow (content), not the raw page html
     val shuffled = ex.output.map(_.name)
     assert(shuffled.contains("content") && !shuffled.contains("html"), shuffled.toString)
