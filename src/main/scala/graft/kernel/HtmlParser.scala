@@ -55,8 +55,12 @@ object HtmlParser {
     while (i < until) { h = h * 31 + s.charAt(i); i += 1 }
     val idx = (h ^ (h >>> 16)) & ((1 << NameBits) - 1)
     val e = nameSlots(idx)
-    if (e != null && e.raw.length == until - from &&
-        s.regionMatches(from, e.raw, 0, until - from)) return e.canon
+    if (e != null && e.raw.length == until - from) {
+      val raw = e.raw
+      var j = 0
+      while (j < raw.length && s.charAt(from + j) == raw.charAt(j)) j += 1
+      if (j == raw.length) return e.canon
+    }
     val raw = s.substring(from, until)
     val canon = raw.toLowerCase
     nameSlots(idx) = new NameEntry(raw, canon)

@@ -593,33 +593,38 @@ object Hyphenate {
   // the hot words resident.  Per-thread, so no synchronization; backed by
   // the shared shyCache on miss.
   private final val TlBits = 14
-  private final class RangeMemo {
+  private[kernel] final class RangeMemo {
     val keys = new Array[String](1 << TlBits)
     val vals = new Array[String](1 << TlBits)
   }
   private val tlMemo: ThreadLocal[RangeMemo] =
     ThreadLocal.withInitial(() => new RangeMemo)
 
+  /** This thread's memo; a caller fetches it once per subtree it
+    * hyphenates, not once per word.
+    */
+  private[kernel] def rangeMemo(): RangeMemo = tlMemo.get()
+
   /** Append `hyphenateWordShy(s.substring(from, until))` to `out`,
     * allocation-free when the range is a repeat word on this thread.
-    * Caller guarantees until - from > 4.  `esc = true` HTML-text-escapes
-    * the appended result (escaping is char-local; the soft hyphen is not
-    * an escapable char, so escaping the hyphenated form ≡ hyphenating the
-    * escaped-later form).
+    * `memo` is this thread's [[rangeMemo]], and `h` is the range's
+    * `String.hashCode` (`h * 31 + c` over its chars), computed by the
+    * caller's word scan. Caller guarantees until - from > 4. `esc = true`
+    * HTML-text-escapes the appended result (escaping is char-local; the
+    * soft hyphen is not an escapable char, so escaping the hyphenated
+    * form ≡ hyphenating the escaped-later form).
     */
-  def appendHyphenatedShy(
-      s: String, from: Int, until: Int, out: StringBuilder,
-      esc: Boolean = false): Unit = {
+  private[kernel] def appendHyphenatedShy(
+      memo: RangeMemo, s: String, from: Int, until: Int, h: Int,
+      out: StringBuilder, esc: Boolean): Unit = {
     val len = until - from
-    var h = 0
-    var i = from
-    while (i < until) { h = h * 31 + s.charAt(i); i += 1 }
-    val memo = tlMemo.get()
     val idx = (h ^ (h >>> 16)) & ((1 << TlBits) - 1)
     val k = memo.keys(idx)
+    var hit = k != null && k.length == len
+    var i = 0
+    while (hit && i < len) { hit = s.charAt(from + i) == k.charAt(i); i += 1 }
     val res =
-      if (k != null && k.length == len && s.regionMatches(from, k, 0, len))
-        memo.vals(idx)
+      if (hit) memo.vals(idx)
       else {
         val word = s.substring(from, until)
         val r = hyphenateWordShy(word)

@@ -235,10 +235,11 @@ object Munge {
     * allocations — this pass was ~30% of munge time on realistic pages.
     */
   def mungeHyphenate(root: Elem): Unit = {
+    val memo = Hyphenate.rangeMemo()
     for (text <- root.findTexts) {
       if (text.findParent(PreOnly) == null) {
         val s = text.data
-        val out = hyphenateRun(s)
+        val out = hyphenateRun(s, memo)
         // unchanged plain Text nodes can stay in place; subclasses
         // (Comment/RawText) must still be downgraded to plain Text — the
         // reference's unicode() coercion changes their serialization
@@ -255,9 +256,9 @@ object Munge {
     * first `;` or at 6 chars, so no backtracking case survives in which a
     * shorter count would match — verified against the regex semantics).
     */
-  private def hyphenateRun(s: String): String = {
+  private def hyphenateRun(s: String, memo: Hyphenate.RangeMemo): String = {
     val out = new StringBuilder(s.length + (s.length >> 3))
-    hyphenateRunTo(s, out, esc = false)
+    hyphenateRunTo(s, out, esc = false, memo)
     out.toString
   }
 
@@ -267,7 +268,8 @@ object Munge {
     * serializer uses this to skip the intermediate per-text-node string +
     * second escape scan entirely.
     */
-  private def hyphenateRunTo(s: String, out: StringBuilder, esc: Boolean): Unit = {
+  private def hyphenateRunTo(
+      s: String, out: StringBuilder, esc: Boolean, memo: Hyphenate.RangeMemo): Unit = {
     val n = s.length
     var i = 0
     var segStart = 0
@@ -277,14 +279,14 @@ object Munge {
         var k = 0
         while (k < 6 && j < n && s.charAt(j) != ';') { j += 1; k += 1 }
         if (k >= 2 && j < n && s.charAt(j) == ';') {
-          appendHyphenatedWords(s, segStart, i, out, esc)
+          appendHyphenatedWords(s, segStart, i, out, esc, memo)
           appendRange(s, i, j + 1, out, esc) // the entity, untouched
           i = j + 1
           segStart = i
         } else i += 1
       } else i += 1
     }
-    appendHyphenatedWords(s, segStart, n, out, esc)
+    appendHyphenatedWords(s, segStart, n, out, esc, memo)
   }
 
   /** `' '.join(hyphenate(w) for w in re.split(r'\s+', part))` for the
@@ -292,26 +294,31 @@ object Munge {
     * leading/trailing run yields a leading/trailing space via the empty
     * first/last token, exactly like Python's split-with-leading-empty).
     * Empty parts are skipped entirely (the reference's `if part`).
+    * The same scan hashes each word for the memo probe.
     */
   private def appendHyphenatedWords(
-      s: String, from: Int, until: Int, out: StringBuilder, esc: Boolean): Unit = {
+      s: String, from: Int, until: Int, out: StringBuilder, esc: Boolean,
+      memo: Hyphenate.RangeMemo): Unit = {
     if (from >= until) return
     var i = from
     var wordStart = -1
+    var h = 0
     var inWs = false
     while (i < until) {
-      if (Py.isSpace(s.charAt(i))) {
+      val c = s.charAt(i)
+      if (Py.isSpace(c)) {
         if (wordStart >= 0) {
-          appendHyphenated(s, wordStart, i, out, esc); wordStart = -1
+          appendHyphenated(s, wordStart, i, h, out, esc, memo); wordStart = -1
         }
         if (!inWs) { out.append(' '); inWs = true }
       } else {
-        if (wordStart < 0) wordStart = i
+        if (wordStart < 0) { wordStart = i; h = 0 }
+        h = h * 31 + c
         inWs = false
       }
       i += 1
     }
-    if (wordStart >= 0) appendHyphenated(s, wordStart, until, out, esc)
+    if (wordStart >= 0) appendHyphenated(s, wordStart, until, h, out, esc, memo)
   }
 
   private def appendRange(
@@ -323,9 +330,10 @@ object Munge {
   }
 
   private def appendHyphenated(
-      s: String, from: Int, until: Int, out: StringBuilder, esc: Boolean): Unit = {
+      s: String, from: Int, until: Int, h: Int, out: StringBuilder, esc: Boolean,
+      memo: Hyphenate.RangeMemo): Unit = {
     if (until - from <= 4) appendRange(s, from, until, out, esc) // ≤4 never splits
-    else Hyphenate.appendHyphenatedShy(s, from, until, out, esc)
+    else Hyphenate.appendHyphenatedShy(memo, s, from, until, h, out, esc)
   }
 
   /** clean.py:270-272 (M12) */
@@ -347,14 +355,14 @@ object Munge {
 
   /** Serialize `root` into `sb` with M11 hyphenation fused in. */
   def serializeHyphenated(root: Elem, sb: StringBuilder): Unit =
-    serializeHyphElem(root, sb, root.findParent(PreOnly) != null)
+    serializeHyphElem(root, sb, root.findParent(PreOnly) != null, Hyphenate.rangeMemo())
 
   private def serializeHyphElem(
-      e: Elem, sb: StringBuilder, inPre: Boolean): Unit = {
+      e: Elem, sb: StringBuilder, inPre: Boolean, memo: Hyphenate.RangeMemo): Unit = {
     if (e.isDocument) {
       val cs = e.children
       var i = 0
-      while (i < cs.length) { serializeHyphNode(cs(i), sb, inPre); i += 1 }
+      while (i < cs.length) { serializeHyphNode(cs(i), sb, inPre, memo); i += 1 }
       return
     }
     sb.append('<').append(e.name)
@@ -375,16 +383,16 @@ object Munge {
       val childPre = inPre || e.name == "pre"
       val cs = e.children
       var i = 0
-      while (i < cs.length) { serializeHyphNode(cs(i), sb, childPre); i += 1 }
+      while (i < cs.length) { serializeHyphNode(cs(i), sb, childPre, memo); i += 1 }
       sb.append("</").append(e.name).append('>')
     }
   }
 
   private def serializeHyphNode(
-      n: DNode, sb: StringBuilder, inPre: Boolean): Unit = n match {
-    case el: Elem => serializeHyphElem(el, sb, inPre)
+      n: DNode, sb: StringBuilder, inPre: Boolean, memo: Hyphenate.RangeMemo): Unit = n match {
+    case el: Elem => serializeHyphElem(el, sb, inPre, memo)
     case t: Text =>
       if (inPre) t.serialize(sb) // hyphenate pass skips pre-descendants
-      else hyphenateRunTo(t.data, sb, esc = true)
+      else hyphenateRunTo(t.data, sb, esc = true, memo)
   }
 }

@@ -358,15 +358,63 @@ object Patterns {
     // bs4's per-text findParent climbs past `tag` to the root: under an
     // <a>/<script> ancestor (or being one) every text is excluded.
     if (AOrScript.contains(tag.name) || tag.findParent(AOrScript) != null) return 0
-    // Below `tag`, a text is excluded iff the walk entered an <a>/<script>
-    // to reach it. [ \t]+ runs collapse to ' ' as each str.strip()ped text
-    // is appended: a stripped text neither starts nor ends with a space
-    // or tab, so no run spans two texts.
+    // Most blocks hold no '&', and then the length is just the collapsed
+    // length, counted without copying a char. An entity can span two
+    // texts once they are joined, so a block with an '&' (-1) builds the
+    // joined text and drops the entities from that.
+    val n = collapsedLen(tag)
+    if (n >= 0) n else lenWithoutEntities(tag)
+  }
+
+  /** Length of the texts [[appendCollapsedTexts]] would append, or -1 as
+    * soon as one of them holds an '&'. Per-text lengths add up: a
+    * str.strip()ped text neither starts nor ends with a space or tab, so
+    * no [ \t]+ run spans two texts.
+    */
+  private def collapsedLen(e: Elem): Int = {
+    val cs = e.children
+    var len = 0
+    var i = 0
+    while (i < cs.length) {
+      val n = cs(i) match {
+        case c: Elem => if (AOrScript.contains(c.name)) 0 else collapsedLen(c)
+        case t: Text => strippedCollapsedLen(t.data)
+      }
+      if (n < 0) return -1
+      len += n
+      i += 1
+    }
+    len
+  }
+
+  /** `appendStrippedCollapsed(s, _)`'s length, or -1 if `s` holds an '&'. */
+  private def strippedCollapsedLen(s: String): Int = {
+    var a = 0
+    var b = s.length
+    while (a < b && Py.isSpace(s.charAt(a))) a += 1
+    while (b > a && Py.isSpace(s.charAt(b - 1))) b -= 1
+    var len = 0
+    var inRun = false
+    while (a < b) {
+      val c = s.charAt(a)
+      if (c == ' ' || c == '\t') {
+        if (!inRun) len += 1
+        inRun = true
+      } else if (c == '&') return -1
+      else { len += 1; inRun = false }
+      a += 1
+    }
+    len
+  }
+
+  /** textLen of a block holding an '&': the collapsed joined text, with
+    * &[^;]{2,6}; sequences counted as 0 — a count, not a replaceAll.
+    * Entity matching must see the COLLAPSED text (a run inside
+    * [^;]{2,6} collapses to one char and can enable a match).
+    */
+  private def lenWithoutEntities(tag: Elem): Int = {
     val collapsed = new java.lang.StringBuilder
     appendCollapsedTexts(tag, collapsed)
-    // length after dropping &[^;]{2,6}; sequences — a count, not a
-    // replaceAll. Entity matching must see the COLLAPSED text (a run
-    // inside [^;]{2,6} collapses to one char and can enable a match).
     val n = collapsed.length
     var len = 0
     var i = 0

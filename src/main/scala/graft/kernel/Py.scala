@@ -1,5 +1,7 @@
 package graft.kernel
 
+import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
+
 /** CPython-compatible string / URL / float primitives.
   *
   * The reference engine (arantius/readability-api) is Python 3; its observable
@@ -46,6 +48,13 @@ object Py {
     * so compute the shortest precision that round-trips, then format
     * Python-style: integral floats as "1.0"; exponent form when the decimal
     * exponent is < -4 or >= 16 (rendered "1e+16" / "1.5e-05").
+    *
+    * The precision search starts one below the digit count of Schubfach's
+    * shortest decimal ([[shortestDigits]]): no precision below the shortest
+    * round-tripping length can round-trip, and the one below covers
+    * Schubfach picking a 2-digit decimal where a 1-digit one exists. So the
+    * first accepted `%e` string is the one a search from 1 would accept,
+    * after at most a few formats instead of up to 17.
     */
   def floatRepr(d: Double): String = {
     if (d.isNaN) return "nan"
@@ -54,8 +63,8 @@ object Py {
     if (d == 0.0) return if (1.0 / d < 0) "-0.0" else "0.0"
     val neg = d < 0
     val ad = math.abs(d)
-    var prec = 1
-    var s = String.format("%.0e", Double.box(ad))
+    var prec = math.max(1, shortestDigits(ad) - 1)
+    var s = String.format("%." + (prec - 1) + "e", Double.box(ad))
     while (s.toDouble != ad && prec < 17) {
       prec += 1
       s = String.format("%." + (prec - 1) + "e", Double.box(ad))
@@ -90,6 +99,21 @@ object Py {
       out.append(digits)
     }
     out.toString
+  }
+
+  /** Significant digits of Schubfach's shortest decimal for a finite
+    * `ad > 0` (leading and trailing zeros and the point dropped, exponent
+    * ignored).
+    */
+  private def shortestDigits(ad: Double): Int = {
+    val r = DoubleToDecimal.toString(ad)
+    val e = r.indexOf('E')
+    var j = if (e < 0) r.length else e
+    var i = 0
+    while (r.charAt(i) == '0' || r.charAt(i) == '.') i += 1
+    while (r.charAt(j - 1) == '0' || r.charAt(j - 1) == '.') j -= 1
+    val dot = r.indexOf('.', i)
+    if (dot >= 0 && dot < j) j - i - 1 else j - i
   }
 
   // ------------------------------------------------------------------ URLs

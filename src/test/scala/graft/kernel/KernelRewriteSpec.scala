@@ -10,11 +10,12 @@ import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bulk rewrites of three kernel scans — `Extract.preCleanHtml`
-  * (indexOf-driven range copies), `Patterns.textLen` (one walk, collapse
-  * while appending) and `Clean.decodeHtml` (`new String(bytes, cs)`) —
-  * against the implementations they replaced, kept here verbatim as
-  * oracles. Seeded, so a failure reproduces.
+/** Kernel rewrites against the implementations they replaced, kept here
+  * verbatim as oracles: `Extract.preCleanHtml` (indexOf-driven range
+  * copies), `Patterns.textLen` (a count without a copy unless an '&'
+  * occurs), `Clean.decodeHtml` (`new String(bytes, cs)`) and
+  * `Py.floatRepr` (precision search from the shortest decimal's length).
+  * Seeded, so a failure reproduces.
   */
 class KernelRewriteSpec extends AnyFunSuite {
 
@@ -121,19 +122,32 @@ class KernelRewriteSpec extends AnyFunSuite {
     " ", "\t", " \t  ", "\n", " ", "x", "word", "&", ";", "&amp;",
     "&nbsp;", "&ab;", "&a b;", "&a \t b;", "&abcdefg;", "& ;", "&\t\t;")
 
-  private val genText: Gen[String] = Gen.listOf(Gen.oneOf(TextTokens)).map(_.mkString)
+  /** Pieces of entities that only match once two texts are joined
+    * (`&am` + `p;`), with '&'-free words and spaces, so blocks with and
+    * without an '&' both occur.
+    */
+  private val SplitTokens = Seq(
+    " ", "\t", "x", "word", "words", ";", "&", "&a", "&am", "p;", "mp;", "&nb",
+    "sp;", "&abcdef", "g;")
 
-  private def genNode(depth: Int): Gen[DNode] =
-    if (depth <= 0) genText.map(new Text(_))
+  private def tokenText(tokens: Seq[String]): Gen[String] =
+    Gen.listOf(Gen.oneOf(tokens)).map(_.mkString)
+
+  private val splitText: Gen[String] = Gen.listOf(Gen.frequency(
+    6 -> Gen.oneOf(SplitTokens.filterNot(_.contains('&'))),
+    1 -> Gen.oneOf(SplitTokens.filter(_.contains('&'))))).map(_.mkString)
+
+  private def genNode(depth: Int, text: Gen[String]): Gen[DNode] =
+    if (depth <= 0) text.map(new Text(_))
     else Gen.frequency(
-      3 -> genText.map(new Text(_)),
-      1 -> genText.map(new Comment(_)),
-      3 -> genElem(depth))
+      3 -> text.map(new Text(_)),
+      1 -> text.map(new Comment(_)),
+      3 -> genElem(depth, text))
 
-  private def genElem(depth: Int): Gen[Elem] = for {
+  private def genElem(depth: Int, text: Gen[String]): Gen[Elem] = for {
     name <- Gen.oneOf("a", "script", "p", "div", "span", "td")
     n <- Gen.choose(0, 4)
-    kids <- Gen.listOfN(n, genNode(depth - 1))
+    kids <- Gen.listOfN(n, genNode(depth - 1, text))
   } yield {
     val e = new Elem(name)
     kids.foreach(e.append)
@@ -144,15 +158,115 @@ class KernelRewriteSpec extends AnyFunSuite {
     root +: root.descendants.collect { case e: Elem => e }.toSeq
 
   test("textLen equals the two-copy oracle on every element of generated DOMs") {
-    val doc = genElem(4).map { e => val d = Dom.newDocument(); d.append(e); d }
-    check(Prop.forAllNoShrink(doc) { d =>
+    def docs(text: Gen[String]) =
+      genElem(4, text).map { e => val d = Dom.newDocument(); d.append(e); d }
+    def matches(d: Elem) =
       elemsOf(d).forall(e => Patterns.textLen(e) == textLenOracle(e)) :| d.serialized
-    }, tests = 5000, seed = 2L)
+    check(Prop.forAllNoShrink(docs(tokenText(TextTokens)))(matches), tests = 5000, seed = 2L)
+    check(Prop.forAllNoShrink(docs(splitText))(matches), tests = 5000, seed = 3L)
+    // an entity split across two texts (and a tag) still counts as 0
+    val split = HtmlParser.parse("<div><p>&am<b>p;</b> x</p><p>&a</p><p>b;</p></div>")
+    assert(Patterns.textLen(split.find("p")) == 1 && textLenOracle(split.find("p")) == 1)
+    assert(Patterns.textLen(split.find("div")) == 1 && textLenOracle(split.find("div")) == 1)
     // a leaf block under an <a>: bs4's per-text findParent climbs past it
     val d = HtmlParser.parse("<div><a href=x><p>long enough &amp; text</p></a></div>")
     val p = d.find("p")
     assert(Patterns.textLen(p) == 0 && textLenOracle(p) == 0)
     assert(Patterns.textLen(d.find("div")) == 0)
+  }
+
+  // ---------------------------------------------------------- floatRepr
+
+  /** `Py.floatRepr` with its precision search from 1 digit up. */
+  private def floatReprOracle(d: Double): String = {
+    if (d.isNaN) return "nan"
+    if (d.isPosInfinity) return "inf"
+    if (d.isNegInfinity) return "-inf"
+    if (d == 0.0) return if (1.0 / d < 0) "-0.0" else "0.0"
+    val neg = d < 0
+    val ad = math.abs(d)
+    var prec = 1
+    var s = String.format("%.0e", Double.box(ad))
+    while (s.toDouble != ad && prec < 17) {
+      prec += 1
+      s = String.format("%." + (prec - 1) + "e", Double.box(ad))
+    }
+    val eIdx = s.indexOf('e')
+    val digits = s.substring(0, eIdx).replace(".", "") // significant digits
+    val exp = s.substring(eIdx + 1).toInt // decimal exponent of leading digit
+    val out = new StringBuilder
+    if (neg) out.append('-')
+    if (exp < -4 || exp >= 16) {
+      out.append(digits.charAt(0))
+      if (digits.length > 1) {
+        out.append('.').append(digits.substring(1))
+      }
+      out.append('e')
+      out.append(if (exp < 0) '-' else '+')
+      val ae = math.abs(exp)
+      if (ae < 10) out.append('0')
+      out.append(ae)
+    } else if (exp >= digits.length - 1) {
+      out.append(digits)
+      var k = digits.length - 1
+      while (k < exp) { out.append('0'); k += 1 }
+      out.append(".0")
+    } else if (exp >= 0) {
+      out.append(digits.substring(0, exp + 1)).append('.')
+        .append(digits.substring(exp + 1))
+    } else {
+      out.append("0.")
+      var k = -1
+      while (k > exp) { out.append('0'); k -= 1 }
+      out.append(digits)
+    }
+    out.toString
+  }
+
+  /** Scores as the kernel builds them: rule points times depth decay,
+    * summed one propagation at a time (`Patterns.applyScore`).
+    */
+  private val genScore: Gen[Double] = Gen.listOf(for {
+    p <- Gen.oneOf(Patterns.AttrPoints.map(_._1).toSeq.distinct)
+    depth <- Gen.choose(0, Patterns.MaxScoreDepth)
+  } yield p * Patterns.DepthDecay(depth)).map(_.foldLeft(0.0)(_ + _))
+
+  /** Decimals with few significant digits, where the shortest decimal
+    * and the `%e` search are most likely to disagree in length.
+    */
+  private val genShortDecimal: Gen[Double] = for {
+    n <- Gen.choose(-99999, 99999)
+    k <- Gen.choose(-20, 20)
+  } yield n * math.pow(10, k)
+
+  test("floatRepr equals the search from precision 1 on every kind of double") {
+    val gens = Seq(
+      Gen.choose(Long.MinValue, Long.MaxValue).map(java.lang.Double.longBitsToDouble),
+      Gen.choose(0.0, 100.0),
+      genScore,
+      genShortDecimal)
+    for ((g, i) <- gens.zipWithIndex)
+      check(Prop.forAllNoShrink(g)(d => (Py.floatRepr(d) == floatReprOracle(d)) :| d.toString),
+        tests = 20000, seed = 40L + i)
+    for (d <- Seq(Double.MinPositiveValue, Double.MaxValue, java.lang.Double.MIN_NORMAL,
+        1e16, 1e-5, 9.999999999999999e22, 1e23, 2e23, 5e-324, 0.1 + 0.2, 100.0, 1.0))
+      assert(Py.floatRepr(d) == floatReprOracle(d), d.toString)
+  }
+
+  // ------------------------------------------------- hyphenation memo
+
+  test("hyphenation memo: words with one hash, length and first char each hyphenate as themselves") {
+    // "Aa" and "BB" have the same String hash, so these 8 words share a
+    // memo slot and differ only inside: a probe that compared less than
+    // the whole range would hand one word another's hyphenation.
+    val words = for (a <- Seq("Aa", "BB"); b <- Seq("Aa", "BB"); c <- Seq("Aa", "BB"))
+      yield s"under$a$b${c}standing"
+    assert(words.map(_.hashCode).distinct.size == 1)
+    val text = (words ++ words.reverse ++ words).mkString(" ")
+    val sb = new StringBuilder
+    Munge.serializeHyphenated(HtmlParser.parse(s"<p>$text</p>").find("p"), sb)
+    val expected = (words ++ words.reverse ++ words).map(Hyphenate.hyphenateWordShy)
+    assert(sb.toString == expected.mkString("<p>", " ", "</p>"))
   }
 
   // --------------------------------------------------------- decodeHtml

@@ -1,6 +1,13 @@
 package graft.spark
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 
 import graft.kernel.Clean
@@ -235,6 +242,84 @@ class PipelineSpec extends SparkSpec {
     assert(victimRows.count() == orphan,
       "victim pid must hold the same row count as the orphaned write, once")
     assert(victimRows.select("url").distinct().count() == victimRows.count())
+  }
+
+  /** Codecs of every parquet file under `dir`, by path relative to it,
+    * from the footers (every column chunk of every row group).
+    */
+  private def codecs(dir: String): Map[String, Set[String]] = {
+    val root = Paths.get(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".parquet")).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toUri), conf))
+      try {
+        val blocks = r.getFooter.getBlocks.asScala
+        assert(blocks.nonEmpty, s"$f holds no row group")
+        root.relativize(f).toString ->
+          blocks.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      } finally r.close()
+    }.toMap
+  }
+
+  /** SHA-256 over the extracted rows, sorted, without `wall_us`. */
+  private def digest(dir: String): String = {
+    val rows = spark.read.parquet(s"$dir/extracted")
+      .select("url", "pid", "content", "note", "error", "in_bytes")
+      .collect().map(_.mkString("\u0000")).sorted
+    val md = MessageDigest.getInstance("SHA-256")
+    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  private lazy val singlePass: String = {
+    val dir = Files.createTempDirectory("graft-single").toString
+    ExtractJob.runToDir(spark, PagesGen.asDataFrame(spark, sf001), dir, "r1", 8)
+    dir
+  }
+
+  test("runToDir writes every extracted and lineage file with zstd") {
+    for (table <- Seq("extracted", "lineage")) {
+      val c = codecs(s"$singlePass/$table")
+      assert(c.nonEmpty && c.values.forall(_ == Set("ZSTD")), s"$table: $c")
+    }
+  }
+
+  test("resuming a run directory written with snappy: same rows, one lineage row per pid, zstd only where resumed") {
+    // The directory runToDir left before its tables moved to zstd: Spark's
+    // default snappy, with half the pids extracted and committed.
+    val dir = Files.createTempDirectory("graft-upgrade").toString
+    val df = PagesGen.asDataFrame(spark, sf001)
+    val buckets = 8
+    val old = (0 until buckets by 2).toSet
+    val oldRows = ExtractJob.extract(
+      ExtractJob.withPid(df, buckets).filter(col("pid").isin(old.toSeq: _*)))
+    oldRows.repartition(buckets, col("pid")).write.partitionBy("pid")
+      .option("compression", "snappy").parquet(s"$dir/extracted")
+    ExtractJob.lineage(oldRows, "r1").coalesce(1).write
+      .option("compression", "snappy").parquet(s"$dir/lineage")
+    assert(ExtractJob.committedPids(spark.read.parquet(s"$dir/lineage"), "r1") == old)
+
+    ExtractJob.runToDir(spark, df, dir, "r1", buckets)
+
+    assert(digest(dir) == digest(singlePass))
+    val perPid = spark.read.parquet(s"$dir/lineage")
+      .groupBy("run_id", "partition_id").count().collect()
+    assert(perPid.length == buckets && perPid.forall(_.getLong(2) == 1L),
+      "exactly one lineage row per (run_id, pid) after the resume")
+    def counts(d: String) = spark.read.parquet(s"$d/lineage")
+      .select("partition_id", "input_count", "input_bytes", "ok_count", "fail_count")
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Int]).toSeq
+    assert(counts(dir) == counts(singlePass))
+
+    val extracted = codecs(s"$dir/extracted")
+    assert(extracted.keys.map(_.takeWhile(_ != '/')).toSet ==
+      (0 until buckets).map(p => s"pid=$p").toSet)
+    extracted.foreach { case (f, c) =>
+      val pid = f.stripPrefix("pid=").takeWhile(_ != '/').toInt
+      assert(c == Set(if (old.contains(pid)) "SNAPPY" else "ZSTD"), s"$f: $c")
+    }
+    assert(codecs(s"$dir/lineage").values.toSeq.sortBy(_.head) ==
+      Seq(Set("SNAPPY"), Set("ZSTD")))
   }
 
   test("flagship entry returns rows with successful extraction") {
