@@ -1,11 +1,11 @@
 package graft.spark
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.AccumulatorV2
 
 import graft.kernel.Clean
 
@@ -81,14 +81,11 @@ object ExtractJob {
     * extraction 3× slower (measured 4.7–6.2 s vs 1.5–1.7 s warm on the
     * bench corpus). Nothing in extraction needs pid co-location: the
     * kernel is per-row, and lineage aggregates on the pid COLUMN with
-    * bounded per-task partials ([[LineageFold]] handles multi-pid tasks).
+    * bounded per-pid buffers ([[Lineage]] merges in any order).
     * The one consumer that DOES need pid clustering — the pid-partitioned
     * output write in runToDir — now clusters the EXTRACTED rows instead,
     * whose boilerplate-stripped content is a fraction of the input html
     * bytes: same bounded files-per-pid, an order less shuffle traffic.
-    * runToDir chains its lineage fold onto this mapPartitions, below that
-    * exchange; Catalyst drops the serialization between the two, so each
-    * row is folded as the object the kernel built.
     */
   def extract(
       pagesWithPid: DataFrame,
@@ -123,194 +120,87 @@ object ExtractJob {
       (System.nanoTime() - t0) / 1000L)
   }
 
-  /** Per-pid lineage fold: counts, bytes and wall time, with failure
-    * samples capped at MaxFailureSamples DURING accumulation — a
-    * 100%-failing poisoned partition never holds more than 5 error structs
-    * (a collect_list-then-slice formulation would buffer every failure
-    * row, an unbounded agg buffer at 10^12-doc scale). Rows fold in with
-    * [[add]]; another fold's partials merge in with [[merge]], samples
-    * concatenated in arrival order up to the cap. The one lineage
-    * definition: [[lineage]] and [[runToDir]] both fold and merge here.
+  /** The one lineage definition, as an [[Aggregator]] over the five
+    * narrow columns of an extracted row (`content` is never read), with
+    * one [[LineagePartial]] per pid as its buffer and one [[LineageRow]]
+    * per pid, by pid, as its result. Failure samples are the
+    * MaxFailureSamples smallest by (url, error), capped DURING
+    * accumulation: a 100%-failing poisoned pid never holds more than 5
+    * samples (a collect_list-then-slice formulation would buffer every
+    * failure row, an unbounded buffer at 10^12-doc scale). Keeping the k
+    * smallest makes [[merge]] commutative and associative, so the rows do
+    * not depend on partitioning, task order or which stage folds them.
+    * [[lineage]] and [[runToDir]] both aggregate with this.
     */
-  final class LineageFold {
-    private final class Acc {
-      var n, bytes, ok, fail, wallUs = 0L
-      val samples = scala.collection.mutable.ArrayBuffer.empty[FailureSample]
-    }
-    private val byPid = scala.collection.mutable.LinkedHashMap.empty[Int, Acc]
+  final class Lineage(runId: String)
+      extends Aggregator[(Int, String, String, Long, Long), Map[Int, LineagePartial], Seq[LineageRow]] {
+    def zero: Map[Int, LineagePartial] = Map.empty
 
-    def add(pid: Int, url: String, error: String, inBytes: Long, wallUs: Long): Unit = {
-      val a = byPid.getOrElseUpdate(pid, new Acc)
-      a.n += 1L
-      a.bytes += inBytes
-      if (error == null) a.ok += 1L
-      else {
-        a.fail += 1L
-        if (a.samples.size < MaxFailureSamples) a.samples += FailureSample(url, error)
+    def reduce(
+        b: Map[Int, LineagePartial],
+        row: (Int, String, String, Long, Long)): Map[Int, LineagePartial] = {
+      val (pid, url, error, inBytes, wallUs) = row
+      add(b,
+        if (error == null) LineagePartial(pid, 1L, inBytes, 1L, 0L, Nil, wallUs)
+        else LineagePartial(pid, 1L, inBytes, 0L, 1L, FailureSample(url, error) :: Nil, wallUs))
+    }
+
+    def merge(a: Map[Int, LineagePartial], b: Map[Int, LineagePartial]): Map[Int, LineagePartial] =
+      // the smaller into the larger: the driver's buffer grows to one
+      // entry per pid while each task's holds a few
+      if (a.size < b.size) merge(b, a) else b.valuesIterator.foldLeft(a)(add)
+
+    def finish(b: Map[Int, LineagePartial]): Seq[LineageRow] =
+      b.valuesIterator.toSeq.sortBy(_.pid).map { p =>
+        LineageRow(runId, p.pid, p.input_count, p.input_bytes, p.ok_count,
+          p.fail_count, p.failure_samples, p.wall_us / 1000L)
       }
-      a.wallUs += wallUs
-    }
 
-    def merge(p: LineagePartial): Unit = {
-      val a = byPid.getOrElseUpdate(p.pid, new Acc)
-      a.n += p.input_count
-      a.bytes += p.input_bytes
-      a.ok += p.ok_count
-      a.fail += p.fail_count
-      a.samples ++= p.failure_samples.take(MaxFailureSamples - a.samples.size)
-      a.wallUs += p.wall_us
-    }
+    def bufferEncoder: Encoder[Map[Int, LineagePartial]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Seq[LineageRow]] = ExpressionEncoder()
 
-    /** One partial per pid seen, in first-seen order. */
-    def partials: Iterator[LineagePartial] = byPid.iterator.map { case (pid, a) =>
-      LineagePartial(pid, a.n, a.bytes, a.ok, a.fail, a.samples.toList, a.wallUs)
-    }
+    private def add(b: Map[Int, LineagePartial], p: LineagePartial): Map[Int, LineagePartial] =
+      b.updated(p.pid, b.get(p.pid) match {
+        case None => p
+        case Some(q) =>
+          LineagePartial(p.pid, q.input_count + p.input_count, q.input_bytes + p.input_bytes,
+            q.ok_count + p.ok_count, q.fail_count + p.fail_count,
+            smallest(q.failure_samples, p.failure_samples), q.wall_us + p.wall_us)
+      })
+
+    private def smallest(a: Seq[FailureSample], b: Seq[FailureSample]): Seq[FailureSample] =
+      if (b.isEmpty) a else (a ++ b).sorted(SampleOrder).take(MaxFailureSamples)
   }
 
-  object LineageFold {
-    /** Two partials of one pid as one, through [[LineageFold.merge]]. */
-    def merged(a: LineagePartial, b: LineagePartial): LineagePartial = {
-      val fold = new LineageFold
-      fold.merge(a)
-      fold.merge(b)
-      fold.partials.next()
-    }
+  /** Failure-sample order: by url, then error; a null sorts first. */
+  private val SampleOrder: Ordering[FailureSample] =
+    Ordering.by((s: FailureSample) => (Option(s.url), Option(s.error)))
 
-    def row(runId: String, p: LineagePartial): LineageRow =
-      LineageRow(runId, p.pid, p.input_count, p.input_bytes, p.ok_count,
-        p.fail_count, p.failure_samples, p.wall_us / 1000L)
-  }
+  /** [[Lineage]] over an extracted relation's five narrow columns, as
+    * the column `rows`.
+    */
+  private def lineageRows(runId: String): Column =
+    udaf(new Lineage(runId))
+      .apply(Seq("pid", "url", "error", "in_bytes", "wall_us").map(col): _*)
+      .as("rows")
 
   /** Per-partition lineage of an extracted relation, keyed on the pid
-    * COLUMN (survives AQE). Two stages, both strictly bounded:
-    *  1. mapPartitions pre-aggregation: a [[LineageFold]] per task over
-    *     the five narrow lineage columns (selected first, so a scan source
-    *     prunes the `content` blob) — one partial per pid the task saw.
-    *  2. a tiny merge over the per-task partials (≤ tasks×pids rows, each
-    *     with ≤5 samples): extract() is scan-local, so a pid spans tasks.
-    *     `reduceGroups` merges them with [[LineageFold.merged]], map-side
-    *     first, so the merge rule is the one [[runToDir]] uses.
-    * [[runToDir]] does not run this: it folds the same lineage inside its
-    * write pass, so it never reads its output back.
+    * COLUMN (survives AQE): a group-by on pid of [[Lineage]], which reads
+    * only the five narrow columns, so a scan source prunes the `content`
+    * blob. extract() is scan-local, so a pid spans tasks; the aggregate
+    * is partial, one buffer per (task, pid) combined map-side before the
+    * pid shuffle. [[runToDir]] does not run this: it observes the same
+    * aggregate in its write, so it never reads its output back.
     */
   def lineage(extracted: Dataset[ExtractedRow], runId: String): Dataset[LineageRow] = {
     val spark = extracted.sparkSession
     import spark.implicits._
-    val partials = extracted.toDF()
-      .select(col("pid"), col("url"), col("error"), col("in_bytes"), col("wall_us"))
-      .as[(Int, String, String, Long, Long)]
-      .mapPartitions { it =>
-        val fold = new LineageFold
-        it.foreach { case (pid, url, error, inBytes, wallUs) =>
-          fold.add(pid, url, error, inBytes, wallUs)
-        }
-        fold.partials
-      }
-    partials
-      .groupByKey(_.pid)
-      .reduceGroups(LineageFold.merged _)
-      .map { case (_, p) => LineageFold.row(runId, p) }
-  }
-
-  /** [[runToDir]]'s lineage, merged on the driver as map tasks finish.
-    * Each map task adds its partials once, under its partition id
-    * ([[foldingLineage]]); the driver folds every update straight into
-    * one entry per pid, so it holds O(map tasks + pids) — one bit per map
-    * partition and one entry per pid with ≤ MaxFailureSamples samples —
-    * at any corpus size, never a list of per-task partials.
-    *
-    * Spark may apply a re-run shuffle-map task's update again. An update
-    * from a map partition already merged is skipped: the kernel is
-    * deterministic with one attempt per row, so the re-run folded the same
-    * partials. A pid keeps its first MaxFailureSamples samples in (map
-    * partition, position) order — merging in map-partition order, whatever
-    * order the tasks finish in. [[value]] is one partial per pid, by pid.
-    */
-  final class LineageAccumulator
-      extends AccumulatorV2[(Int, Seq[LineagePartial]), Seq[LineagePartial]] {
-    private val tasks = mutable.BitSet.empty
-    // per pid: the summed counts (samples empty) and the samples, each
-    // tagged with the map partition that folded it
-    private val byPid =
-      mutable.HashMap.empty[Int, (LineagePartial, List[(Int, FailureSample)])]
-
-    def isZero: Boolean = tasks.isEmpty
-
-    def copy(): LineageAccumulator = {
-      val c = new LineageAccumulator
-      c.absorb(this)
-      c
-    }
-
-    def reset(): Unit = {
-      tasks.clear()
-      byPid.clear()
-    }
-
-    /** A map task's partials, under its partition id. */
-    def add(update: (Int, Seq[LineagePartial])): Unit = {
-      val (task, ps) = update
-      if (tasks.add(task)) ps.foreach { p =>
-        put(p.copy(failure_samples = Nil), p.failure_samples.map(task -> _).toList)
-      }
-    }
-
-    def merge(other: AccumulatorV2[(Int, Seq[LineagePartial]), Seq[LineagePartial]]): Unit =
-      other match {
-        case o: LineageAccumulator => absorb(o)
-        case o => throw new UnsupportedOperationException(
-          s"cannot merge ${o.getClass.getName} into LineageAccumulator")
-      }
-
-    def value: Seq[LineagePartial] =
-      byPid.valuesIterator
-        .map { case (p, samples) => p.copy(failure_samples = samples.map(_._2)) }
-        .toSeq
-        .sortBy(_.pid)
-
-    private def absorb(o: LineageAccumulator): Unit =
-      if (!o.tasks.subsetOf(tasks)) {
-        // Spark merges one task's update at a time into the driver's copy
-        require(!o.tasks.exists(tasks), "lineage updates overlap in some map partitions")
-        tasks ++= o.tasks
-        o.byPid.valuesIterator.foreach { case (p, samples) => put(p, samples) }
-      }
-
-    private def put(p: LineagePartial, samples: List[(Int, FailureSample)]): Unit =
-      byPid(p.pid) = byPid.get(p.pid) match {
-        case None => (p, samples)
-        case Some((q, kept)) =>
-          // disjoint map partitions, each in its own order: a stable sort
-          (LineageFold.merged(q, p), (kept ++ samples).sortBy(_._1).take(MaxFailureSamples))
-      }
-  }
-
-  /** A kernel task's rows, passed through unchanged while their lineage
-    * folds; once the rows are exhausted the task's partials go to `out`
-    * under its partition id. This runs in the write's shuffle-map stage,
-    * whose accumulator updates Spark may apply again when it re-runs a map
-    * task; [[LineageAccumulator]] skips a map partition it has merged.
-    */
-  private def foldingLineage(
-      rows: Iterator[ExtractedRow],
-      out: LineageAccumulator): Iterator[ExtractedRow] = {
-    val task = TaskContext.getPartitionId()
-    val acc = new LineageFold
-    var flushed = false
-    new Iterator[ExtractedRow] {
-      def hasNext: Boolean = rows.hasNext || {
-        if (!flushed) {
-          flushed = true
-          out.add(task -> acc.partials.toSeq)
-        }
-        false
-      }
-      def next(): ExtractedRow = {
-        val r = rows.next()
-        acc.add(r.pid, r.url, r.error, r.in_bytes, r.wall_us)
-        r
-      }
-    }
+    extracted.toDF()
+      .groupBy("pid")
+      .agg(lineageRows(runId))
+      .select(explode(col("rows")).as("r"))
+      .select("r.*")
+      .as[LineageRow]
   }
 
   /** Committed (distinct) pids of a run as a one-column DataFrame — the
@@ -363,14 +253,13 @@ object ExtractJob {
     * (§7.4). `failAfterPids` deliberately stops after K buckets to simulate
     * a killed job (used by the resume test).
     *
-    * One pass over the pages: lineage folds right after the kernel, in
-    * the write's shuffle-map stage, while each row is still an object
-    * (the two typed mapPartitions fuse, with no serialization between).
-    * Each map task ships one partial per pid it saw; the driver merges
-    * them on arrival in a [[LineageAccumulator]], whose state stays
-    * O(map tasks + `buckets`). The write is exchange → parquet with no
-    * typed pass-through, and nothing is read back from
-    * `<outDir>/extracted`.
+    * One pass over the pages: the write observes [[Lineage]] above the
+    * pid exchange (`Dataset.observe`), so the aggregate runs in the
+    * write's result stage on the five narrow columns of each row, with no
+    * typed pass-through. Spark applies a result task's metrics once, and
+    * each write task holds one pid, so the driver merges one buffer per
+    * written pid: O(`buckets`) traffic, with nothing to deduplicate.
+    * Nothing is read back from `<outDir>/extracted`.
     *
     * Both tables are written with zstd ([[OutputCodec]]), Iceberg's
     * default parquet codec; every other engine write keeps Spark's
@@ -390,7 +279,6 @@ object ExtractJob {
       buckets: Int,
       maxHtmlBytes: Int = DefaultMaxHtmlBytes,
       failAfterPids: Int = Int.MaxValue): Unit = {
-    import spark.implicits._
     val lineagePath = s"$outDir/lineage"
     val committedDf = committedPidsDf(spark, lineagePath, runId)
 
@@ -414,13 +302,10 @@ object ExtractJob {
         pending.filter(col("pid").isin(keep: _*))
       }
 
-    val partials = new LineageAccumulator
-    // unnamed: the scheduler reads a NAMED accumulator's whole value into
-    // the UI state after every task
-    spark.sparkContext.register(partials)
-    // only rows of THIS run's scope fold, so pids published by an earlier
-    // crashed-or-committed run are never covered
-    val extracted = extract(scope, maxHtmlBytes).mapPartitions(foldingLineage(_, partials))
+    // one Observation per call: it holds the metrics of one action.
+    // Only rows of THIS run's scope are observed, so pids published by an
+    // earlier crashed-or-committed run are never covered.
+    val observed = Observation()
     val prevOverwriteMode =
       spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -431,8 +316,9 @@ object ExtractJob {
       // task holds exactly one pid: one file per partition dir at any
       // executor count (what dynamic overwrite granularity and the resume
       // contract rely on), and no hash collisions doubling a task's rows.
-      extracted
+      extract(scope, maxHtmlBytes)
         .repartitionById(buckets, col("pid"))
+        .observe(observed, lineageRows(runId))
         .write
         .mode(SaveMode.Overwrite)
         .partitionBy("pid")
@@ -441,7 +327,8 @@ object ExtractJob {
       // lineage commits LAST: a pid is "done" only once its lineage row
       // exists, so a crash between the two writes re-runs (and
       // re-overwrites) the pid.
-      partials.value.map(LineageFold.row(runId, _)).toDS()
+      val rows = observed.get("rows").asInstanceOf[Seq[Row]]
+      spark.createDataFrame(rows.asJava, Encoders.product[LineageRow].schema)
         .coalesce(1)
         .write.mode(SaveMode.Append)
         .option("compression", OutputCodec)

@@ -31,8 +31,8 @@ final case class ExtractedRow(
 
 final case class FailureSample(url: String, error: String)
 
-/** Per-task lineage pre-aggregate (ExtractJob.LineageFold): one row per
-  * pid seen in a task, failure samples already capped.
+/** One pid's lineage so far: the buffer entry of `ExtractJob.Lineage`,
+  * failure samples already capped to the smallest by (url, error).
   */
 final case class LineagePartial(
     pid: Int,

@@ -8,7 +8,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
 
 import graft.kernel.Clean
 
@@ -110,89 +114,148 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/lineage").count() == 8)
   }
 
+  /** Runs `body` with session conf `key` set to `value`. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** (url, html) of the sf001 pages plus `n` gfycat pages without a
+    * <video>, which fail in the kernel. Their urls' upper-case scheme
+    * sorts them before every PagesGen url, so they are the failure
+    * samples of their pids; all `n` share one pid of `buckets`.
+    */
+  private def pagesWithFailures(n: Int, buckets: Int): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val letters = 'a' to 'z'
+    val candidates = (for (a <- letters; b <- letters; c <- letters)
+      yield s"HTTPS://gfycat.com/NoVideo$a$b$c").toDF("url")
+    val failing = ExtractJob.withPid(candidates, buckets)
+      .filter(col("pid") === 0).orderBy("url").limit(n).select("url")
+      .withColumn("html", lit("<html></html>").cast("binary"))
+    failing.union(PagesGen.asDataFrame(spark, sf001).select("url", "html"))
+  }
+
+  private def lineageKey(r: LineageRow) =
+    (r.run_id, r.partition_id, r.input_count, r.input_bytes, r.ok_count, r.fail_count,
+      r.failure_samples)
+
   test("runToDir lineage equals ExtractJob.lineage, failure samples included") {
-    // One parquet file (one input split): both paths then see each pid's
-    // rows in file order, so even the capped failure samples must agree.
+    // Over 64 input splits and 256 buckets, so a pid's rows span many map
+    // tasks: the samples still agree, because both paths keep each pid's
+    // smallest by (url, error), whatever order its rows arrive in.
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("graft-lineage").toString
-    val failing = (0 until 12).map(i => (s"https://gfycat.com/NoVideo${('a' + i).toChar}", "<html></html>"))
-      .toDF("url", "h").select(col("url"), col("h").cast("binary").as("html"))
-    failing.union(PagesGen.asDataFrame(spark, sf001).select("url", "html"))
-      .coalesce(1).write.parquet(s"$dir/pages")
-    val df = spark.read.parquet(s"$dir/pages")
+    val buckets = 256
+    pagesWithFailures(8, buckets).repartition(64).write.parquet(s"$dir/pages")
     val sizes = pages.map(_.html.length).sorted
     val cap = sizes(sizes.length / 2)
-    val buckets = 8
-    def key(r: LineageRow) =
-      (r.run_id, r.partition_id, r.input_count, r.input_bytes, r.ok_count, r.fail_count,
-        r.failure_samples)
-    val expected = ExtractJob.lineage(
-      ExtractJob.extract(ExtractJob.withPid(df, buckets), maxHtmlBytes = cap), "r1")
-      .collect().map(key).sortBy(_._2).toSeq
-    assert(expected.map(_._6).sum > 0)
-    assert(expected.exists(_._7.exists(_.error.contains("exceeds cap"))))
-    assert(expected.exists(_._7.exists(_.url.startsWith("https://gfycat.com/"))))
-    assert(expected.exists(_._6 > ExtractJob.MaxFailureSamples),
-      "some pid must hit the failure-sample cap")
+    // an open cost of a whole split puts each file in its own split
+    withConf("spark.sql.files.openCostInBytes", (128L << 20).toString) {
+      val df = spark.read.parquet(s"$dir/pages")
+      assert(df.rdd.getNumPartitions >= 64)
+      val expected = ExtractJob.lineage(
+        ExtractJob.extract(ExtractJob.withPid(df, buckets), maxHtmlBytes = cap), "r1")
+        .collect().map(lineageKey).sortBy(_._2).toSeq
+      assert(expected.map(_._6).sum > 0)
+      assert(expected.exists(_._7.exists(_.error.contains("exceeds cap"))))
+      assert(expected.exists(_._7.exists(_.url.startsWith("HTTPS://gfycat.com/"))))
+      assert(expected.exists(_._6 > ExtractJob.MaxFailureSamples),
+        "some pid must hit the failure-sample cap")
 
-    val clean = s"$dir/clean"
-    val execs = executionsOf(ExtractJob.runToDir(spark, df, clean, "r1", buckets, cap))
-    val scans = execs.flatMap(qe => scannedPaths(qe.executedPlan))
-    assert(!scans.exists(_.contains(s"$clean/extracted")),
-      s"runToDir read its own output back: ${scans.mkString(", ")}")
-    assert(scans.count(_.endsWith(s"$dir/pages")) == 1,
-      s"pages must be scanned exactly once: ${scans.mkString(", ")}")
-    def lineageOf(out: String) =
-      spark.read.parquet(s"$out/lineage").as[LineageRow].collect().map(key).sortBy(_._2).toSeq
-    assert(lineageOf(clean) == expected)
+      val clean = s"$dir/clean"
+      val execs = executionsOf(ExtractJob.runToDir(spark, df, clean, "r1", buckets, cap))
+      val scans = execs.flatMap(qe => scannedPaths(qe.executedPlan))
+      assert(!scans.exists(_.contains(s"$clean/extracted")),
+        s"runToDir read its own output back: ${scans.mkString(", ")}")
+      assert(scans.count(_.endsWith(s"$dir/pages")) == 1,
+        s"pages must be scanned exactly once: ${scans.mkString(", ")}")
+      def lineageOf(out: String) =
+        spark.read.parquet(s"$out/lineage").as[LineageRow].collect().map(lineageKey)
+          .sortBy(_._2).toSeq
+      assert(lineageOf(clean) == expected)
 
-    val resumed = s"$dir/resumed"
-    ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap, failAfterPids = 3)
-    ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap)
-    ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap)
-    val perPid = spark.read.parquet(s"$resumed/lineage")
-      .groupBy("run_id", "partition_id").count().collect()
-    assert(perPid.length == buckets && perPid.forall(_.getLong(2) == 1L),
-      "exactly one lineage row per (run_id, pid) after kill-and-resume")
-    assert(lineageOf(resumed) == expected)
+      val resumed = s"$dir/resumed"
+      ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap, failAfterPids = 3)
+      ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap)
+      ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap)
+      val perPid = spark.read.parquet(s"$resumed/lineage")
+        .groupBy("run_id", "partition_id").count().collect()
+      // a pid with no rows gets no lineage row
+      assert(perPid.length == expected.length && perPid.forall(_.getLong(2) == 1L),
+        "exactly one lineage row per (run_id, pid) after kill-and-resume")
+      assert(lineageOf(resumed) == expected)
+    }
   }
 
-  test("map-stage lineage merge: a re-applied task counts once, samples in map-partition order") {
-    // runToDir folds lineage in the write's shuffle-map stage, whose
-    // accumulator updates Spark may apply again when it re-runs a map
-    // task. As Spark does: each update in its own task-side copy, merged
-    // into the driver's accumulator in arrival (completion) order.
-    def driverMerge(updates: Seq[(Int, Seq[LineagePartial])]): Seq[LineagePartial] = {
-      val driver = new ExtractJob.LineageAccumulator
-      updates.foreach { u =>
-        val task = driver.copyAndReset().asInstanceOf[ExtractJob.LineageAccumulator]
-        task.add(u)
-        driver.merge(task)
+  test("ExtractJob.lineage rows, samples included, do not depend on partitioning") {
+    val buckets = 8
+    val df = pagesWithFailures(8, buckets)
+    val sizes = pages.map(_.html.length).sorted
+    val cap = sizes(sizes.length / 2)
+    def lineageOf(input: DataFrame) =
+      ExtractJob.lineage(
+        ExtractJob.extract(ExtractJob.withPid(input, buckets), maxHtmlBytes = cap), "m")
+        .collect().map(lineageKey).sortBy(_._2).toSeq
+    val one = withConf("spark.sql.shuffle.partitions", "1")(lineageOf(df))
+    assert(one.length == buckets)
+    assert(one.count(_._6 > ExtractJob.MaxFailureSamples) > 1,
+      "the samples must be a choice among a pid's failures")
+    assert(withConf("spark.sql.shuffle.partitions", "7")(lineageOf(df)) == one)
+    assert(lineageOf(df.repartition(5)) == one)
+  }
+
+  test("lineage Aggregator: buffers merged in any order or tree shape equal one reduce") {
+    // Spark merges a pid's buffers in whatever order tasks and stages
+    // finish; the result must equal one fold over all rows, with each
+    // pid's samples its MaxFailureSamples smallest failures by (url, error)
+    val agg = new ExtractJob.Lineage("p")
+    type In = (Int, String, String, Long, Long)
+    val genRow: Gen[In] = for {
+      pid <- Gen.choose(0, 3)
+      url <- Gen.frequency(1 -> Gen.const(null), 9 -> Gen.oneOf("a", "b", "c", "d", "e", "f", "g"))
+      error <- Gen.frequency(2 -> Gen.const(null), 1 -> Gen.oneOf("x", "y"))
+      inBytes <- Gen.choose(0L, 1000L)
+      wallUs <- Gen.choose(0L, 5000L)
+    } yield (pid, url, error, inBytes, wallUs)
+    val gen = for {
+      rows <- Gen.listOf(genRow)
+      cuts <- Gen.listOf(Gen.choose(0, rows.size))
+      seed <- Gen.long
+    } yield (rows, cuts, seed)
+    val prop = Prop.forAllNoShrink(gen) { case (rows, cuts, seed) =>
+      val bounds = (0 +: cuts.sorted :+ rows.size).sliding(2).toSeq
+      val buffers = bounds.map { case Seq(a, b) => rows.slice(a, b).foldLeft(agg.zero)(agg.reduce) }
+      // random tree: merge two random buffers, in random argument order
+      val rnd = new scala.util.Random(seed)
+      val pool = scala.collection.mutable.ArrayBuffer.from(buffers)
+      while (pool.size > 1) {
+        val x = pool.remove(rnd.nextInt(pool.size))
+        val y = pool.remove(rnd.nextInt(pool.size))
+        pool += (if (rnd.nextBoolean()) agg.merge(x, y) else agg.merge(y, x))
       }
-      driver.value
+      val once = rows.foldLeft(agg.zero)(agg.reduce)
+      val samplesOk = once.forall { case (pid, p) =>
+        p.failure_samples == rows
+          .collect { case (`pid`, url, error, _, _) if error != null => FailureSample(url, error) }
+          .sortBy(f => (Option(f.url), Option(f.error)))
+          .take(ExtractJob.MaxFailureSamples)
+      }
+      (pool.head == once) :| "merged != one reduce" &&
+        samplesOk :| "samples are not the smallest by (url, error)" &&
+        (agg.finish(once).map(_.input_count).sum == rows.size) :| "row count"
     }
-    def part(pid: Int, urls: String*) =
-      LineagePartial(pid, urls.size + 1L, 10L * (urls.size + 1), 1L, urls.size.toLong,
-        urls.map(u => FailureSample(u, s"err $u")).toList, 7L)
-    val t0p3 = part(3, "a", "b")
-    val t1p3 = part(3, "c", "d", "e")
-    val t1p5 = part(5, "x")
-    val t2p3 = part(3, "f", "g")
-    // completion order, with map task 1 applied twice and an empty task 4
-    val arrived = Seq(2 -> Seq(t2p3), 1 -> Seq(t1p3, t1p5), 4 -> Nil, 0 -> Seq(t0p3),
-      1 -> Seq(t1p3, t1p5))
-    val merged = driverMerge(arrived)
-    assert(merged.map(_.pid) == Seq(3, 5))
-    val p3 = merged.head
-    assert(p3.input_count == 3L + 4L + 3L && p3.fail_count == 2L + 3L + 2L)
-    assert(p3.ok_count == 3L && p3.input_bytes == 100L && p3.wall_us == 21L)
-    // map partitions 0, 1, 2 in that order, capped at MaxFailureSamples
-    assert(p3.failure_samples.map(_.url) == List("a", "b", "c", "d", "e"))
-    assert(merged(1) == t1p5)
-    // arrival order does not matter, duplicates or not
-    assert(driverMerge(arrived.reverse) == merged)
-    assert(driverMerge(arrived.distinct.sortBy(_._1)) == merged)
+    val r = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(2000).withInitialSeed(Seed(11L)).withWorkers(1),
+      prop)
+    assert(r.passed, s"${r.status} after ${r.succeeded} passed")
   }
 
   test("crash BETWEEN extracted write and lineage append: resume leaves exactly one copy (VERDICT r04 task 6)") {

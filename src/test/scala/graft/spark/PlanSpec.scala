@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, DirectShufflePartitionID}
 import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
-import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, DeserializeToObjectExec, MapPartitionsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -210,20 +210,26 @@ class PlanSpec extends SparkSpec {
     }
     val p = write.head.toString
     assert(!p.contains("hashpartitioning(pid"), s"pid is hashed:\n$p")
-    // lineage folds in the kernel's mapPartitions, below the exchange:
-    // above it the write is exchange → parquet, with no typed
-    // pass-through that deserializes ExtractedRow again
-    val typed = aboveExchange(write.head).collect {
+    // lineage is observed above the exchange, in the write's result
+    // stage: Spark applies a result task's metrics once, and each write
+    // task holds one pid, so no update needs deduplicating
+    val above = aboveExchange(write.head)
+    val observed = above.collect { case m: CollectMetricsExec => m }
+    assert(observed.size == 1, s"lineage is not observed in the result stage:\n$p")
+    assert(AqePlans.collect(observed.head) { case e: ShuffleExchangeExec => e }.size == 1,
+      s"the pid exchange is not below the lineage observation:\n$p")
+    // the aggregate reads the row's columns: no typed pass-through that
+    // deserializes ExtractedRow again
+    val typed = above.collect {
       case n @ (_: DeserializeToObjectExec | _: MapPartitionsExec) => n.nodeName
     }
     assert(typed.isEmpty, s"typed pass-through above the write exchange: $typed\n$p")
-    // below it the fold is chained onto the kernel with no serialization
-    // between them: one deserialization (the page columns), none of
-    // ExtractedRow
+    // below it only the kernel: one deserialization (the page columns)
+    // and its mapPartitions
     val below = ex.child.collect {
       case n @ (_: DeserializeToObjectExec | _: MapPartitionsExec) => n.nodeName
     }
-    assert(below.sorted == Seq("DeserializeToObject", "MapPartitions", "MapPartitions"),
+    assert(below.sorted == Seq("DeserializeToObject", "MapPartitions"),
       s"kernel stage: $below\n$p")
     // the exchange moves ExtractedRow (content), not the raw page html
     val shuffled = ex.output.map(_.name)
