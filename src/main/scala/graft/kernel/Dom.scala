@@ -113,8 +113,14 @@ final class AttrMap {
   private var vs: Array[String] = _
   private var n = 0
 
+  /** Keys the parser stores and the names callers ask for are mostly the
+    * same interned strings, so an identity pass finds them without a
+    * char compare; a key built at run time is still found by `equals`.
+    */
   def indexOf(k: String): Int = {
     var i = 0
+    while (i < n) { if (ks(i) eq k) return i; i += 1 }
+    i = 0
     while (i < n) { if (ks(i) == k) return i; i += 1 }
     -1
   }
@@ -132,7 +138,11 @@ final class AttrMap {
 
   def update(k: String, v: String): Unit = {
     val i = indexOf(k)
-    if (i >= 0) { vs(i) = v; return }
+    if (i >= 0) vs(i) = v else append(k, v)
+  }
+
+  /** Adds a key the caller knows is absent (the parser's are deduplicated). */
+  private[kernel] def append(k: String, v: String): Unit = {
     if (ks == null) {
       ks = new Array[String](4); vs = new Array[String](4)
     } else if (n == ks.length) {
@@ -163,7 +173,7 @@ final class AttrMap {
   }
 }
 
-final class Elem(var name: String) extends DNode {
+class Elem(var name: String) extends DNode {
   /** Insertion-ordered attrs; value null = bare attr (serialized bare).
     * "class"/"rel" are normalized to single-space-joined token lists at parse
     * time (bs4 stores them as lists; matching and serialization agree).
@@ -428,6 +438,13 @@ final class Elem(var name: String) extends DNode {
   }
 }
 
+/** The parse root. It records the comment nodes the parser attached, so
+  * [[Extract.commentStrip]] removes them without walking the tree.
+  */
+final class Document extends Elem(Dom.DocumentName) {
+  private[kernel] val comments = new mutable.ArrayBuffer[Comment]
+}
+
 object Dom {
   val DocumentName = "[document]"
 
@@ -442,7 +459,7 @@ object Dom {
   val MultiValuedAttrs: Set[String] = Set("class", "rel", "rev", "headers",
     "accesskey", "dropzone")
 
-  def newDocument(): Elem = new Elem(DocumentName)
+  def newDocument(): Document = new Document
 
   /** bs4 minimal formatter: text escapes &, <, >. */
   def escapeText(s: String, sb: StringBuilder): Unit =

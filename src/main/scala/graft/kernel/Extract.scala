@@ -138,9 +138,15 @@ object Extract {
     if (out.contains("&nbsp;")) out.replace("&nbsp;", " ") else out
   }
 
-  /** util.py:94-97 */
-  def commentStrip(soup: Elem): Unit =
-    for (t <- soup.findTexts if t.isInstanceOf[Comment]) t.extract()
+  /** util.py:94-97 — every comment of a fresh parse, which the parser
+    * recorded as it attached them, so no tree walk looks for them.
+    */
+  def commentStrip(soup: Document): Unit = {
+    val cs = soup.comments
+    var i = 0
+    while (i < cs.length) { cs(i).extract(); i += 1 }
+    cs.clear()
+  }
 
   /** extract_content.py:73-116 */
   def extractGeneric(url: String, html0: String): Result = {

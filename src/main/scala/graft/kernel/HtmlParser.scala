@@ -1,7 +1,5 @@
 package graft.kernel
 
-import scala.collection.mutable
-
 /** Streaming HTML tokenizer → Dom tree.
   *
   * Spec'd to the behavior of Python's html.parser under bs4's
@@ -39,52 +37,83 @@ object HtmlParser {
   }
 
   // Tag/attr-name interning: names are extremely Zipfian (div/p/a/span,
-  // href/class/src/id...), so a direct-mapped cache keyed on the raw char
-  // range returns a SHARED canonical lowercase string without the
-  // per-occurrence substring+toLowerCase allocations.  Slots hold one
-  // immutable entry each (array reference writes are atomic, entries are
-  // final) so global racy replacement is safe; collisions just replace.
-  private final class NameEntry(val raw: String, val canon: String)
+  // href/class/src/id...), so a direct-mapped table keyed on the raw char
+  // range returns a SHARED canonical lowercase name, with the facts the
+  // tokenizer asks about it, without a per-occurrence substring or
+  // toLowerCase. The scan that finds a name's end also packs it
+  // ([[CharPack]]): a name of at most 9 ASCII chars (nearly every real
+  // one) is identified by its Long, so a hit costs one compare of two
+  // Longs; any other name is found by its hash and a char compare.
+  // Canonical strings are JVM-interned: they are the same instances as
+  // the literals the kernel looks attrs up by, and two names are equal
+  // iff they are `eq`. Slots hold one immutable entry each (array
+  // reference writes are atomic, fields are final), so global racy
+  // replacement is safe; collisions just replace.
+  private final class Name(
+      val raw: String,
+      val key: Long,             // CharPack of raw, or -1
+      val canon: String,
+      val isVoid: Boolean,       // Dom.VoidElements: never takes children
+      val multiValued: Boolean,  // Dom.MultiValuedAttrs: a token list
+      val rawTextEnd: java.util.regex.Pattern) // script/style: `</\s*name`, else null
   private final val NameBits = 12
-  private val nameSlots = new Array[NameEntry](1 << NameBits)
+  private val nameSlots = new Array[Name](1 << NameBits)
 
-  /** Canonical lowercase copy of `s[from,until)` via the intern cache. */
-  private def canonName(s: String, from: Int, until: Int): String = {
-    var h = 0
-    var i = from
-    while (i < until) { h = h * 31 + s.charAt(i); i += 1 }
-    val idx = (h ^ (h >>> 16)) & ((1 << NameBits) - 1)
-    val e = nameSlots(idx)
-    if (e != null && e.raw.length == until - from) {
-      val raw = e.raw
-      var j = 0
-      while (j < raw.length && s.charAt(from + j) == raw.charAt(j)) j += 1
-      if (j == raw.length) return e.canon
-    }
-    val raw = s.substring(from, until)
-    val canon = raw.toLowerCase
-    nameSlots(idx) = new NameEntry(raw, canon)
-    canon
-  }
-
-  private val CdataElements = Set("script", "style")
-  // precompiled raw-text terminators (the per-tag Pattern.compile showed
-  // up in the r03 parse profile — script/style are the only members)
-  private val CdataEndRe: Map[String, java.util.regex.Pattern] =
-    CdataElements.map(n => n -> java.util.regex.Pattern.compile(
+  // raw-text terminators, compiled once (the per-tag Pattern.compile
+  // showed up in the r03 parse profile)
+  private val RawTextEnd: Map[String, java.util.regex.Pattern] =
+    Seq("script", "style").map(n => n -> java.util.regex.Pattern.compile(
       "</\\s*" + n, java.util.regex.Pattern.CASE_INSENSITIVE)).toMap
 
-  def parse(html: String, strainer: ClassStrainer = null): Elem = {
+  /** The interned name of `s[from, until)`. `k` is the range's pack and
+    * `ok` whether every char in it was packable.
+    */
+  private def name(s: String, from: Int, until: Int, k: Long, ok: Boolean): Name = {
+    val key = if (ok && until - from <= CharPack.MaxChars) k else -1L
+    val idx =
+      if (key >= 0) CharPack.slot(key, NameBits)
+      else {
+        var h = 0
+        var i = from
+        while (i < until) { h = 31 * h + s.charAt(i); i += 1 }
+        (h ^ (h >>> 16)) & ((1 << NameBits) - 1)
+      }
+    val e = nameSlots(idx)
+    if (e != null) {
+      if (key >= 0) { if (e.key == key) return e }
+      else if (e.raw.length == until - from && s.regionMatches(from, e.raw, 0, until - from))
+        return e
+    }
+    val raw = s.substring(from, until)
+    val canon = raw.toLowerCase.intern()
+    val n = new Name(raw, key, canon, Dom.VoidElements.contains(canon),
+      Dom.MultiValuedAttrs.contains(canon), RawTextEnd.getOrElse(canon, null))
+    nameSlots(idx) = n
+    n
+  }
+
+  def parse(html: String, strainer: ClassStrainer = null): Document = {
     val doc = Dom.newDocument()
     // Logical open-tag stack, parallel arrays (name, elem-or-null when
-    // unmaterialized under a strainer) — no per-push tuple allocation.
-    val stackNames = mutable.ArrayBuffer[String](Dom.DocumentName)
-    val stackElems = mutable.ArrayBuffer[Elem](doc)
-    val textBuf = new StringBuilder
+    // unmaterialized under a strainer); names are interned, so a pop
+    // compares them by identity.
+    var stackNames = new Array[String](32)
+    var stackElems = new Array[Elem](32)
+    stackNames(0) = Dom.DocumentName
+    stackElems(0) = doc
+    var depth = 1
     val scratch = new TagScratch
+    val n = html.length
+    // Text between two tokens is the contiguous range html[textFrom, i):
+    // a '<' that opens no token stays in it as data.
+    var textFrom = 0
+    // Position of the first '&' at or after the last search (n if none).
+    // Text ranges only move forward, so one indexOf per '&' in the page
+    // answers every range's "holds a reference?" question.
+    var amp = -1
 
     def curElem: Elem = {
-      var i = stackElems.length - 1
+      var i = depth - 1
       while (i >= 0) {
         if (stackElems(i) != null) return stackElems(i)
         i -= 1
@@ -95,7 +124,7 @@ object HtmlParser {
     def materialized: Boolean = {
       // inside a materialized subtree (or no strainer at all)
       if (strainer == null) return true
-      var i = stackElems.length - 1
+      var i = depth - 1
       while (i >= 1) { // skip the document sentinel
         if (stackElems(i) != null) return true
         i -= 1
@@ -103,14 +132,25 @@ object HtmlParser {
       false
     }
 
-    def flushText(raw: Boolean = false): Unit = {
-      if (textBuf.nonEmpty) {
-        if (materialized) {
-          val t = if (raw) new RawText(textBuf.toString)
-                  else new Text(textBuf.toString)
-          appendNode(t)
+    /** Emits html[textFrom, until) as a Text node. A run without '&' is
+      * one substring; one with a reference is decoded whole, which equals
+      * decoding its '<'-separated pieces one by one: a '<' never belongs
+      * to a character reference.
+      */
+    def flushText(until: Int): Unit = {
+      if (until > textFrom && materialized) {
+        if (amp < textFrom) {
+          amp = html.indexOf('&', textFrom)
+          if (amp < 0) amp = n
         }
-        textBuf.clear()
+        val data =
+          if (amp >= until) html.substring(textFrom, until)
+          else {
+            val sb = new StringBuilder(until - textFrom)
+            Entities.unescapeAppend(html, textFrom, until, sb)
+            sb.toString
+          }
+        appendNode(new Text(data))
       }
     }
 
@@ -133,119 +173,106 @@ object HtmlParser {
       parent.append(n)
     }
 
-    val n = html.length
     var i = 0
     while (i < n) {
       val lt = html.indexOf('<', i)
-      if (lt < 0) {
-        Entities.unescapeAppend(html, i, n, textBuf)
-        i = n
-      } else {
-        if (lt > i) Entities.unescapeAppend(html, i, lt, textBuf)
+      if (lt < 0 || lt + 1 >= n) i = n // the rest, a final '<' included, is text
+      else {
         i = lt
-        if (i + 1 >= n) { textBuf.append('<'); i += 1 }
-        else {
-          val c1 = html.charAt(i + 1)
-          if (c1 == '!') {
-            if (html.startsWith("<!--", i)) {
-              val end = html.indexOf("-->", i + 4)
-              val (data, next) =
-                if (end < 0) (html.substring(i + 4), n)
-                else (html.substring(i + 4, end), end + 3)
-              flushText()
-              appendNode(new Comment(data))
-              i = next
-            } else {
-              val gt = html.indexOf('>', i + 2)
-              val (data, next) =
-                if (gt < 0) (html.substring(i + 2), n)
-                else (html.substring(i + 2, gt), gt + 1)
-              flushText()
-              appendNode(new Directive(data))
-              i = next
-            }
-          } else if (c1 == '?') {
-            val gt = html.indexOf('>', i + 2)
-            val (data, next) =
-              if (gt < 0) (html.substring(i + 2), n)
-              else (html.substring(i + 2, gt), gt + 1)
-            flushText()
-            appendNode(new ProcIn(data))
-            i = next
-          } else if (c1 == '/') {
-            if (i + 2 < n && isNameStart(html.charAt(i + 2))) {
-              var j = i + 2
-              while (j < n && !isNameEnd(html.charAt(j))) j += 1
-              val name = canonName(html, i + 2, j)
-              val gt = html.indexOf('>', j)
-              val next = if (gt < 0) n else gt + 1
-              flushText()
-              // pop to matching open tag; ignore if none
-              var k = stackNames.length - 1
-              while (k >= 1 && stackNames(k) != name) k -= 1
-              if (k >= 1) {
-                stackNames.remove(k, stackNames.length - k)
-                stackElems.remove(k, stackElems.length - k)
-              }
-              i = next
-            } else {
-              // bogus end tag: html.parser treats `</...>` as comment-ish;
-              // emit as literal text of '<' (tolerant fallback)
-              textBuf.append('<')
-              i += 1
-            }
-          } else if (isNameStart(c1)) {
-            if (!parseStartTag(html, i, scratch)) {
-              textBuf.append('<'); i += 1
-            } else {
-              val st = scratch
-              flushText()
-              val name = st.name
-              val mat = materialized || (strainer != null &&
-                strainer.matches(st.classAttrOrNull))
-              var elem: Elem = null
-              if (mat) {
-                elem = new Elem(name)
-                var a = 0
-                while (a < st.nattrs) {
-                  val k = st.anames(a)
-                  val v = st.avalues(a)
-                  elem.attrs(k) =
-                    if (Dom.MultiValuedAttrs.contains(k)) normTokens(v)
-                    else v
-                  a += 1
-                }
-                appendNode(elem, force = true)
-              }
-              val void = Dom.VoidElements.contains(name)
-              if (!void && !st.selfClosing) {
-                if (CdataElements.contains(name)) {
-                  // raw-text mode: until </name
-                  val m = CdataEndRe(name).matcher(html)
-                  val found = m.find(st.end)
-                  val rawEnd = if (found) m.start() else n
-                  if (rawEnd > st.end && elem != null) {
-                    elem.append(new RawText(html.substring(st.end, rawEnd)))
-                  }
-                  if (found) {
-                    val gt = html.indexOf('>', m.end())
-                    i = if (gt < 0) n else gt + 1
-                  } else i = n
-                } else {
-                  stackNames += name
-                  stackElems += elem
-                  i = st.end
-                }
-              } else i = st.end
-            }
+        val c1 = html.charAt(i + 1)
+        if (c1 == '!') {
+          flushText(i)
+          if (html.startsWith("<!--", i)) {
+            val end = html.indexOf("-->", i + 4)
+            val c =
+              if (end < 0) { val c = new Comment(html.substring(i + 4)); i = n; c }
+              else { val c = new Comment(html.substring(i + 4, end)); i = end + 3; c }
+            if (materialized) { appendNode(c); doc.comments += c }
           } else {
-            textBuf.append('<')
+            val gt = html.indexOf('>', i + 2)
+            if (gt < 0) { appendNode(new Directive(html.substring(i + 2))); i = n }
+            else { appendNode(new Directive(html.substring(i + 2, gt))); i = gt + 1 }
+          }
+          textFrom = i
+        } else if (c1 == '?') {
+          flushText(i)
+          val gt = html.indexOf('>', i + 2)
+          if (gt < 0) { appendNode(new ProcIn(html.substring(i + 2))); i = n }
+          else { appendNode(new ProcIn(html.substring(i + 2, gt))); i = gt + 1 }
+          textFrom = i
+        } else if (c1 == '/') {
+          if (i + 2 < n && isNameStart(html.charAt(i + 2))) {
+            var j = i + 2
+            var k = 0L
+            var ok = true
+            var c = html.charAt(j)
+            while (!isNameEnd(c)) {
+              k = CharPack.pack(k, c)
+              ok &= CharPack.packable(c)
+              j += 1
+              c = if (j < n) html.charAt(j) else '>'
+            }
+            val nm = name(html, i + 2, j, k, ok).canon
+            val gt = html.indexOf('>', j)
+            flushText(i)
+            // pop to matching open tag; ignore if none
+            var d = depth - 1
+            while (d >= 1 && (stackNames(d) ne nm)) d -= 1
+            if (d >= 1) depth = d
+            i = if (gt < 0) n else gt + 1
+            textFrom = i
+          } else {
+            // bogus end tag: html.parser treats `</...>` as comment-ish;
+            // the '<' stays text (tolerant fallback)
             i += 1
           }
-        }
+        } else if (isNameStart(c1) && parseStartTag(html, i, scratch)) {
+          val st = scratch
+          flushText(i)
+          val tag = st.name
+          val mat = materialized || (strainer != null &&
+            strainer.matches(st.classAttrOrNull))
+          var elem: Elem = null
+          if (mat) {
+            elem = new Elem(tag.canon)
+            var a = 0
+            while (a < st.nattrs) {
+              val k = st.anames(a)
+              val v = st.avalues(a)
+              elem.attrs.append(k.canon, if (k.multiValued) normTokens(v) else v)
+              a += 1
+            }
+            appendNode(elem, force = true)
+          }
+          if (!tag.isVoid && !st.selfClosing) {
+            if (tag.rawTextEnd != null) {
+              // raw-text mode: until </name
+              val m = tag.rawTextEnd.matcher(html)
+              val found = m.find(st.end)
+              val rawEnd = if (found) m.start() else n
+              if (rawEnd > st.end && elem != null) {
+                elem.append(new RawText(html.substring(st.end, rawEnd)))
+              }
+              if (found) {
+                val gt = html.indexOf('>', m.end())
+                i = if (gt < 0) n else gt + 1
+              } else i = n
+            } else {
+              if (depth == stackNames.length) {
+                stackNames = java.util.Arrays.copyOf(stackNames, depth * 2)
+                stackElems = java.util.Arrays.copyOf(stackElems, depth * 2)
+              }
+              stackNames(depth) = tag.canon
+              stackElems(depth) = elem
+              depth += 1
+              i = st.end
+            }
+          } else i = st.end
+          textFrom = i
+        } else i += 1 // a '<' that opens nothing is text
       }
     }
-    flushText()
+    flushText(n)
     doc
   }
 
@@ -253,8 +280,7 @@ object HtmlParser {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
 
   private def isNameEnd(c: Char): Boolean =
-    c == '>' || c == '/' || c == ' ' || c == '\t' || c == '\n' ||
-    c == '\r' || c == '\f'
+    c == '>' || c == '/' || isSpaceChar(c)
 
   /** Reusable per-parse start-tag scratch: attr pairs land in growable
     * parallel arrays instead of a per-tag LinkedHashMap (the r03 parse
@@ -264,19 +290,19 @@ object HtmlParser {
     * html.parser's pair list).
     */
   private final class TagScratch {
-    var name: String = _
+    var name: Name = _
     var selfClosing: Boolean = false
     var end: Int = 0
     var nattrs: Int = 0
-    var anames = new Array[String](8)
+    var anames = new Array[Name](8)
     var avalues = new Array[String](8)
 
     def reset(): Unit = { nattrs = 0; selfClosing = false }
 
-    def put(k: String, v: String): Unit = {
+    def put(k: Name, v: String): Unit = {
       var i = 0
       while (i < nattrs) {
-        if (anames(i) == k) { avalues(i) = v; return }
+        if (anames(i).canon eq k.canon) { avalues(i) = v; return }
         i += 1
       }
       if (nattrs == anames.length) {
@@ -290,7 +316,7 @@ object HtmlParser {
     def classAttrOrNull: String = {
       var i = 0
       while (i < nattrs) {
-        if (anames(i) == "class") {
+        if (anames(i).canon eq "class") {
           val v = avalues(i)
           return if (v == null) "" else v
         }
@@ -306,12 +332,18 @@ object HtmlParser {
   private def parseStartTag(html: String, start: Int, out: TagScratch): Boolean = {
     val n = html.length
     var i = start + 1
-    val nameStart = i
-    while (i < n && html.charAt(i) != '>' && html.charAt(i) != '/' &&
-           !isSpaceChar(html.charAt(i))) i += 1
-    if (i >= n) return false
+    var k = 0L
+    var ok = true
+    var c = html.charAt(i)
+    while (c != '>' && c != '/' && !isSpaceChar(c)) {
+      k = CharPack.pack(k, c)
+      ok &= CharPack.packable(c)
+      i += 1
+      if (i >= n) return false
+      c = html.charAt(i)
+    }
     out.reset()
-    out.name = canonName(html, nameStart, i)
+    out.name = name(html, start + 1, i, k, ok)
     var done = false
     while (!done) {
       while (i < n && isSpaceChar(html.charAt(i))) i += 1
@@ -325,11 +357,17 @@ object HtmlParser {
       } else {
         // attribute name
         val as = i
-        while (i < n && !isSpaceChar(html.charAt(i)) &&
-               html.charAt(i) != '=' && html.charAt(i) != '>' &&
-               html.charAt(i) != '/') i += 1
-        if (i >= n) return false
-        val aname = canonName(html, as, i)
+        var k = 0L
+        var ok = true
+        var d = c
+        while (!isSpaceChar(d) && d != '=' && d != '>' && d != '/') {
+          k = CharPack.pack(k, d)
+          ok &= CharPack.packable(d)
+          i += 1
+          if (i >= n) return false
+          d = html.charAt(i)
+        }
+        val aname = if (i > as) name(html, as, i, k, ok) else null
         while (i < n && isSpaceChar(html.charAt(i))) i += 1
         var avalue: String = null
         if (i < n && html.charAt(i) == '=') {
@@ -348,7 +386,7 @@ object HtmlParser {
             avalue = Entities.unescape(html.substring(vs, i))
           }
         }
-        if (aname.nonEmpty) out.put(aname, avalue) // duplicate: latest wins
+        if (aname != null) out.put(aname, avalue) // duplicate: latest wins
       }
     }
     out.end = i
@@ -356,7 +394,7 @@ object HtmlParser {
   }
 
   private def isSpaceChar(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f'
+    c <= ' ' && (c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f')
 
   /** Java-regex \s membership ([ \t\n\x0B\f\r]) — normTokens must match
     * `split("\\s+")` exactly, which includes vertical tab unlike the
@@ -382,7 +420,8 @@ object HtmlParser {
     var clean = true
     while (clean && i < n) {
       val c = v.charAt(i)
-      if (c == ' ') { if (prevSpace) clean = false else prevSpace = true }
+      if (c > ' ') prevSpace = false
+      else if (c == ' ') { if (prevSpace) clean = false else prevSpace = true }
       else if (isWsRegexChar(c)) clean = false
       else prevSpace = false
       i += 1

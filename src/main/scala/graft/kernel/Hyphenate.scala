@@ -586,16 +586,20 @@ object Hyphenate {
   }
 
   // Direct-mapped, thread-local front cache keyed by a char RANGE of the
-  // source string: the munge text scan can ask for word hyphenation
-  // without allocating the substring at all on a hit (the r03 profile's
-  // remaining hyphenate cost was per-word substring + ConcurrentHashMap
-  // probe).  Collision policy is replace — Zipfian word frequencies keep
-  // the hot words resident.  Per-thread, so no synchronization; backed by
-  // the shared shyCache on miss.
+  // source string: the serializer's text scan gets a word's hyphenation,
+  // already HTML-text-escaped, without allocating the substring or
+  // rescanning the result on a hit (the r03 profile's remaining hyphenate
+  // cost was per-word substring + ConcurrentHashMap probe). A word of at
+  // most 18 ASCII chars, nearly every one, is probed by its two CharPack
+  // halves and never compared char by char; any other word by its hash
+  // and a char compare. Collision policy is replace — Zipfian word
+  // frequencies keep the hot words resident.  Per-thread, so no
+  // synchronization; backed by the shared shyCache on miss.
   private final val TlBits = 14
   private[kernel] final class RangeMemo {
-    val keys = new Array[String](1 << TlBits)
-    val vals = new Array[String](1 << TlBits)
+    val keys = new Array[String](1 << TlBits)    // the plain word
+    val packs = new Array[Long](2 << TlBits)     // its two CharPack halves, or -1
+    val escaped = new Array[String](1 << TlBits) // its escaped hyphenation
   }
   private val tlMemo: ThreadLocal[RangeMemo] =
     ThreadLocal.withInitial(() => new RangeMemo)
@@ -605,33 +609,50 @@ object Hyphenate {
     */
   private[kernel] def rangeMemo(): RangeMemo = tlMemo.get()
 
-  /** Append `hyphenateWordShy(s.substring(from, until))` to `out`,
-    * allocation-free when the range is a repeat word on this thread.
-    * `memo` is this thread's [[rangeMemo]], and `h` is the range's
-    * `String.hashCode` (`h * 31 + c` over its chars), computed by the
-    * caller's word scan. Caller guarantees until - from > 4. `esc = true`
-    * HTML-text-escapes the appended result (escaping is char-local; the
-    * soft hyphen is not an escapable char, so escaping the hyphenated
-    * form ≡ hyphenating the escaped-later form).
+  /** The longest word probed by its packs: two CharPack halves. */
+  private[kernel] final val MaxPackedWord = 2 * CharPack.MaxChars
+
+  /** Append `hyphenateWordShy(s.substring(from, until))`, HTML-text-escaped,
+    * to `out`, allocation-free when the range is a repeat word on this
+    * thread. `memo` is this thread's [[rangeMemo]]. `k1` and `k2` are the
+    * CharPacks of the range's first [[CharPack.MaxChars]] chars and of the
+    * rest, `ok` whether all its chars were packable, and `esc` whether
+    * one of them escapes, all from the caller's word scan. Hyphenation
+    * only inserts soft hyphens, which do not escape, so a word without
+    * `&`, `<` or `>` is its own escaped form. Caller guarantees
+    * until - from > 4.
     */
-  private[kernel] def appendHyphenatedShy(
-      memo: RangeMemo, s: String, from: Int, until: Int, h: Int,
-      out: StringBuilder, esc: Boolean): Unit = {
+  private[kernel] def appendHyphenatedEscaped(
+      memo: RangeMemo, s: String, from: Int, until: Int, k1: Long, k2: Long,
+      ok: Boolean, esc: Boolean, out: StringBuilder): Unit = {
     val len = until - from
-    val idx = (h ^ (h >>> 16)) & ((1 << TlBits) - 1)
-    val k = memo.keys(idx)
-    var hit = k != null && k.length == len
-    var i = 0
-    while (hit && i < len) { hit = s.charAt(from + i) == k.charAt(i); i += 1 }
-    val res =
-      if (hit) memo.vals(idx)
+    val packed = ok && len <= MaxPackedWord
+    val idx =
+      if (packed) CharPack.slot(k1 * 31 + k2, TlBits)
       else {
-        val word = s.substring(from, until)
-        val r = hyphenateWordShy(word)
-        memo.keys(idx) = word
-        memo.vals(idx) = r
-        r
+        var h = 0
+        var i = from
+        while (i < until) { h = 31 * h + s.charAt(i); i += 1 }
+        (h ^ (h >>> 16)) & ((1 << TlBits) - 1)
       }
-    if (esc) Dom.escapeText(res, out) else out.append(res)
+    val hit =
+      if (packed) memo.packs(2 * idx) == k1 && memo.packs(2 * idx + 1) == k2
+      else {
+        val k = memo.keys(idx)
+        k != null && k.length == len && s.regionMatches(from, k, 0, len)
+      }
+    if (hit) out.append(memo.escaped(idx))
+    else {
+      val word = s.substring(from, until)
+      val plain = hyphenateWordShy(word)
+      val escaped =
+        if (!esc) plain
+        else { val sb = new StringBuilder(plain.length + 8); Dom.escapeText(plain, sb); sb.toString }
+      memo.keys(idx) = word
+      memo.packs(2 * idx) = if (packed) k1 else -1L
+      memo.packs(2 * idx + 1) = if (packed) k2 else -1L
+      memo.escaped(idx) = escaped
+      out.append(escaped)
+    }
   }
 }

@@ -47,7 +47,8 @@ object Munge {
             mungeNoscript(tag)
             // M11+M13 fused: hyphenation applied at serialize time (no
             // findTexts pass, no per-node replaceWith) — byte-equivalent
-            // to mungeHyphenate-then-serialize, spec'd in MungeSpec.
+            // to hyphenate-then-serialize, spec'd in MungeSpec and
+            // KernelRewriteSpec.
             // Presized buffer: the default 16-char builder doubles ~10
             // times for a typical article (repeated array copies).
             val sb = new StringBuilder(1 << 14)
@@ -224,117 +225,77 @@ object Munge {
 
   private val PreOnly = Set("pre")
 
-  /** clean.py:223-241 (M11) — hyphenate every text node outside <pre>;
-    * entity-looking runs pass through; whitespace collapses to single
-    * spaces. NB replaces Comment nodes with plain text (reference quirk on
-    * non-generic paths where comments survive).
+  /** clean.py:223-241 (M11), applied as the text node is serialized (M13):
+    * every text node outside <pre> is split by `re.split(r'(&[^;]{2,6};)')`
+    * into entity-looking runs, kept verbatim, and other parts, in which
+    * each whitespace run becomes one space and each word is hyphenated;
+    * the result is HTML-text-escaped. One scan does all of it, with the
+    * escaped hyphenation of a long word taken from this thread's memo.
     *
-    * Single forward scan per text node (r03 perf task): the reference's
-    * `re.split(r'(&[^;]{2,6};)')` + `re.split(r'\s+')` + per-word join is
-    * reproduced exactly but without Matcher/part-list/word-list
-    * allocations — this pass was ~30% of munge time on realistic pages.
+    * `[^;]{2,6}` is greedy and can only stop at the first `;` or after 6
+    * chars, so an entity is `&`, then 2 to 6 non-`;` chars, then `;`,
+    * tried at each `&` from the left. An empty part yields nothing (the
+    * reference's `if part`), and a part's leading or trailing whitespace
+    * run yields one space, as Python's split gives an empty first or last
+    * word. Escaping is char-local and the soft hyphen is not escaped, so
+    * escaping each appended piece equals escaping the joined text.
     */
-  def mungeHyphenate(root: Elem): Unit = {
-    val memo = Hyphenate.rangeMemo()
-    for (text <- root.findTexts) {
-      if (text.findParent(PreOnly) == null) {
-        val s = text.data
-        val out = hyphenateRun(s, memo)
-        // unchanged plain Text nodes can stay in place; subclasses
-        // (Comment/RawText) must still be downgraded to plain Text — the
-        // reference's unicode() coercion changes their serialization
-        if (out != s || text.getClass != classOf[Text])
-          text.replaceWith(new Text(out))
-      }
-    }
-  }
-
-  /** `re.split(r'(&[^;]{2,6};)')` with captured separators, entity parts
-    * verbatim, word parts whitespace-collapsed + hyphenated — as ONE scan.
-    * An entity match is `&` + 2..6 non-`;` chars + `;` starting at the
-    * earliest possible `&` (greedy `[^;]{2,6}` can only ever stop at the
-    * first `;` or at 6 chars, so no backtracking case survives in which a
-    * shorter count would match — verified against the regex semantics).
-    */
-  private def hyphenateRun(s: String, memo: Hyphenate.RangeMemo): String = {
-    val out = new StringBuilder(s.length + (s.length >> 3))
-    hyphenateRunTo(s, out, esc = false, memo)
-    out.toString
-  }
-
-  /** Append-style form.  With `esc = true` every appended fragment is
-    * HTML-text-escaped on the way out — escaping is char-local, so
-    * per-fragment escape ≡ escapeText of the concatenation; the fused
-    * serializer uses this to skip the intermediate per-text-node string +
-    * second escape scan entirely.
-    */
-  private def hyphenateRunTo(
-      s: String, out: StringBuilder, esc: Boolean, memo: Hyphenate.RangeMemo): Unit = {
+  private def appendHyphenatedText(
+      s: String, out: StringBuilder, memo: Hyphenate.RangeMemo): Unit = {
     val n = s.length
     var i = 0
-    var segStart = 0
-    while (i < n) {
-      if (s.charAt(i) == '&') {
-        var j = i + 1
-        var k = 0
-        while (k < 6 && j < n && s.charAt(j) != ';') { j += 1; k += 1 }
-        if (k >= 2 && j < n && s.charAt(j) == ';') {
-          appendHyphenatedWords(s, segStart, i, out, esc, memo)
-          appendRange(s, i, j + 1, out, esc) // the entity, untouched
-          i = j + 1
-          segStart = i
-        } else i += 1
-      } else i += 1
-    }
-    appendHyphenatedWords(s, segStart, n, out, esc, memo)
-  }
-
-  /** `' '.join(hyphenate(w) for w in re.split(r'\s+', part))` for the
-    * substring [from, until): each whitespace run becomes one space (a
-    * leading/trailing run yields a leading/trailing space via the empty
-    * first/last token, exactly like Python's split-with-leading-empty).
-    * Empty parts are skipped entirely (the reference's `if part`).
-    * The same scan hashes each word for the memo probe.
-    */
-  private def appendHyphenatedWords(
-      s: String, from: Int, until: Int, out: StringBuilder, esc: Boolean,
-      memo: Hyphenate.RangeMemo): Unit = {
-    if (from >= until) return
-    var i = from
     var wordStart = -1
-    var h = 0
-    var inWs = false
-    while (i < until) {
+    var k1 = 0L          // the word's CharPack halves, for the memo probe
+    var k2 = 0L
+    var ok = true        // every char of the word is packable
+    var esc = false      // the word holds a char that escapes
+    var inWs = false     // in a whitespace run of the current part
+    while (i < n) {
       val c = s.charAt(i)
-      if (Py.isSpace(c)) {
-        if (wordStart >= 0) {
-          appendHyphenated(s, wordStart, i, h, out, esc, memo); wordStart = -1
-        }
-        if (!inWs) { out.append(' '); inWs = true }
+      val entityEnd = if (c == '&') entityEndAt(s, i) else -1
+      if (entityEnd > 0) {
+        if (wordStart >= 0) { appendWord(s, wordStart, i, k1, k2, ok, esc, out, memo); wordStart = -1 }
+        Dom.escapeTextRange(s, i, entityEnd, out)
+        inWs = false // the next part starts
+        i = entityEnd
       } else {
-        if (wordStart < 0) { wordStart = i; h = 0 }
-        h = h * 31 + c
-        inWs = false
+        if (Py.isSpace(c)) {
+          if (wordStart >= 0) { appendWord(s, wordStart, i, k1, k2, ok, esc, out, memo); wordStart = -1 }
+          if (!inWs) { out.append(' '); inWs = true }
+        } else {
+          if (wordStart < 0) { wordStart = i; k1 = 0L; k2 = 0L; ok = true; esc = false }
+          if (i - wordStart < CharPack.MaxChars) k1 = CharPack.pack(k1, c)
+          else k2 = CharPack.pack(k2, c)
+          ok &= CharPack.packable(c)
+          if (c == '&' || c == '<' || c == '>') esc = true
+          inWs = false
+        }
+        i += 1
       }
-      i += 1
     }
-    if (wordStart >= 0) appendHyphenated(s, wordStart, until, h, out, esc, memo)
+    if (wordStart >= 0) appendWord(s, wordStart, n, k1, k2, ok, esc, out, memo)
   }
 
-  private def appendRange(
-      s: String, from: Int, until: Int, out: StringBuilder, esc: Boolean): Unit = {
+  /** End (past the `;`) of the `&[^;]{2,6};` match at `s(i) == '&'`, or -1. */
+  private def entityEndAt(s: String, i: Int): Int = {
+    val n = s.length
+    var j = i + 1
+    var k = 0
+    while (k < 6 && j < n && s.charAt(j) != ';') { j += 1; k += 1 }
+    if (k >= 2 && j < n && s.charAt(j) == ';') j + 1 else -1
+  }
+
+  /** One word, escaped: ≤4 chars never split, so it is copied (in bulk
+    * when nothing in it escapes); a longer one comes from the memo.
+    */
+  private def appendWord(
+      s: String, from: Int, until: Int, k1: Long, k2: Long, ok: Boolean, esc: Boolean,
+      out: StringBuilder, memo: Hyphenate.RangeMemo): Unit =
+    if (until - from > 4) Hyphenate.appendHyphenatedEscaped(memo, s, from, until, k1, k2, ok, esc, out)
+    else if (esc) Dom.escapeTextRange(s, from, until, out)
     // bulk java append — the (s, from, until) overload on the SCALA
     // StringBuilder auto-tuples (appends "(s,from,until)" literally)
-    if (esc) Dom.escapeTextRange(s, from, until, out)
     else out.underlying.append(s, from, until)
-  }
-
-  private def appendHyphenated(
-      s: String, from: Int, until: Int, h: Int, out: StringBuilder, esc: Boolean,
-      memo: Hyphenate.RangeMemo): Unit = {
-    if (until - from <= 4) appendRange(s, from, until, out, esc) // ≤4 never splits
-    else Hyphenate.appendHyphenatedShy(memo, s, from, until, h, out, esc)
-  }
 
   /** clean.py:270-272 (M12) */
   def mungeNoscript(root: Elem): Unit =
@@ -342,8 +303,9 @@ object Munge {
 
   // ---- M11+M13 fusion ------------------------------------------------
   // Serialize with hyphenation applied on the fly.  Byte-equivalent to
-  // `mungeHyphenate(root)` followed by `root.serialize`, replicating the
-  // reference quirks the two-pass version encodes:
+  // hyphenating every text node in place (the reference's M11 pass)
+  // followed by `root.serialize`, replicating the reference quirks that
+  // two-pass order encodes:
   //  - EVERY string node outside <pre> (plain Text, but also Comment,
   //    RawText and Directive/ProcIn — bs4 findAll(text=True) returns all
   //    NavigableStrings) is coerced to plain text, hyphenated, and
@@ -393,6 +355,6 @@ object Munge {
     case el: Elem => serializeHyphElem(el, sb, inPre, memo)
     case t: Text =>
       if (inPre) t.serialize(sb) // hyphenate pass skips pre-descendants
-      else hyphenateRunTo(t.data, sb, esc = true, memo)
+      else appendHyphenatedText(t.data, sb, memo)
   }
 }

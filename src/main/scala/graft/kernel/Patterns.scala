@@ -279,13 +279,25 @@ object Patterns {
     var tag = tag0
     // Pop up through single-child wrappers (guarded against a null parent —
     // the reference would AttributeError there; SURVEY.md §7.5.4).
-    while (tag.parent != null && tag.parent.childElems.length == 1)
+    while (tag.parent != null && hasOneChildElem(tag.parent))
       tag = tag.parent
     val header = tag.findPreviousSibling(e => e.name != "br" && e.name != "hr")
     if (header != null) return (header, header.getText(" "))
     val texts = tag.previousSiblingTexts
     if (texts.nonEmpty) return (texts.head, texts.head.data)
     (null, "")
+  }
+
+  /** `e.childElems.length == 1`, counting no further than two. */
+  private def hasOneChildElem(e: Elem): Boolean = {
+    val cs = e.children
+    var n = 0
+    var i = 0
+    while (i < cs.length && n < 2) {
+      if (cs(i).isInstanceOf[Elem]) n += 1
+      i += 1
+    }
+    n == 1
   }
 
   /** patterns.py:291-296 */
@@ -466,62 +478,71 @@ object Patterns {
     mutable.LinkedHashMap[(Double, String, String), mutable.ArrayBuffer[Elem]]
 
   // ---- rule-engine acceleration (semantics-preserving) -------------------
-  // Most rules target the synthesized `classid`, whose distinct values per
-  // document are few (and usually ""), so per-document memoization turns
-  // O(nodes × rules) regex work into O(distinct classids × rules). The
-  // strip test is a pure any-match, so each attr's strip rules are also
-  // fused into one alternation Pattern (all rules share FLAGS). Point
-  // application stays per-rule (points, parent suppression and the
-  // hit_counter need rule identity); results are additive so grouping by
-  // attr does not change scores, and the false-positive undo is
-  // order-insensitive.
-  private val PointAttrOrder: Array[String] = AttrPoints.map(_._2).distinct
-  private val PointRulesByAttr: Map[String, Array[Int]] =
-    AttrPoints.indices.groupBy(i => AttrPoints(i)._2)
-      .map { case (k, v) => k -> v.toArray }
-  private val StripAttrOrder: Array[String] = AttrStrip.map(_._1).distinct
-  private val StripCombinedByAttr: Map[String, Pattern] =
-    AttrStrip.groupBy(_._1).map { case (attr, rules) =>
-      attr -> Pattern.compile(
-        rules.map(r => "(?:" + r._2.pattern + ")").mkString("|"), FLAGS)
-    }
-
-  // Rule-match results are pure functions of the classid string, and the
-  // classid vocabulary repeats across documents (Zipfian), so the memos
-  // are GLOBAL bounded concurrent maps rather than per-document (r03:
-  // per-document caches re-ran ~163 regex finds per distinct classid per
-  // document). Values are immutable; threads may race benignly.
+  // A rule's verdict is a pure function of (attr, value), and attr values
+  // repeat: the synthesized `classid` has few distinct values per
+  // document (usually ""), and hrefs, srcs and styles recur across a
+  // site's pages (nav, share and footer links). So each attr's verdicts
+  // are memoized per value, turning O(nodes × rules) regex work into
+  // O(distinct values × rules). The memos are GLOBAL bounded concurrent
+  // maps rather than per-document (r03: per-document caches re-ran ~163
+  // regex finds per distinct classid per document); values are immutable
+  // and threads may race benignly. The strip test is a pure any-match, so
+  // each attr's strip rules are fused into one alternation Pattern (all
+  // rules share FLAGS). Point application stays per-rule (points, parent
+  // suppression and the hit_counter need rule identity); results are
+  // additive so grouping by attr does not change scores, and the
+  // false-positive undo is order-insensitive.
   private val RuleMemoMax = 1 << 17
   private val RuleMemoMaxKeyLen = 256
-  private val pointMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Int]]()
-  private val stripMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  private def memoize[V](memo: java.util.concurrent.ConcurrentHashMap[String, V],
+                         value: String)(compute: => V): V = {
+    val got = memo.get(value)
+    if (got != null) return got
+    val v = compute
+    if (value.length <= RuleMemoMaxKeyLen && memo.size < RuleMemoMax) memo.put(value, v)
+    v
+  }
+
+  /** The point rules of one attr, in AttrPoints order, with their memo. */
+  private final class PointAttr(val attr: String, rules: Array[Int]) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, Array[Int]]()
+    /** Indices (into AttrPoints) of this attr's rules matching `value`. */
+    def matches(value: String): Array[Int] =
+      memoize(memo, value)(rules.filter(i => AttrPoints(i)._3.matcher(value).find()))
+  }
+
+  /** The strip rules of one attr as one alternation, with its memo. */
+  private final class StripAttr(val attr: String, any: Pattern) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    def matches(value: String): Boolean =
+      memoize(memo, value)(java.lang.Boolean.valueOf(any.matcher(value).find())).booleanValue
+  }
+
+  private val PointAttrs: Array[PointAttr] =
+    AttrPoints.map(_._2).distinct.map(attr =>
+      new PointAttr(attr, AttrPoints.indices.filter(AttrPoints(_)._2 == attr).toArray))
+  private val StripAttrs: Array[StripAttr] =
+    AttrStrip.map(_._1).distinct.map { attr =>
+      val rules = AttrStrip.filter(_._1 == attr)
+      new StripAttr(attr, Pattern.compile(
+        rules.map(r => "(?:" + r._2.pattern + ")").mkString("|"), FLAGS))
+    }
+  /** Hit-counter key of each AttrPoints rule, built once. */
+  private val RuleKeys: Array[(Double, String, String)] =
+    AttrPoints.map { case (points, attr, re) => (points, attr, re.pattern) }
+
+  /** Indices (into AttrPoints) of the `attr` rules matching `value`. */
+  private[kernel] def pointMatches(attr: String, value: String): Array[Int] =
+    PointAttrs.find(_.attr == attr).fold(Array.emptyIntArray)(_.matches(value))
+
+  /** Does any `attr` strip rule match `value`? */
+  private[kernel] def stripMatches(attr: String, value: String): Boolean =
+    StripAttrs.exists(sa => sa.attr == attr && sa.matches(value))
 
   /** Per-document evaluation context (hit counter; match memos are global). */
   final class Ctx {
     val hc: HitCounter = mutable.LinkedHashMap.empty
-
-    /** Indices (into AttrPoints) of classid rules matching `value`. */
-    def classidPointMatches(value: String): Array[Int] = {
-      val got = pointMemo.get(value)
-      if (got != null) return got
-      val idxs = PointRulesByAttr.getOrElse("classid", Array.empty[Int])
-        .filter(i => AttrPoints(i)._3.matcher(value).find())
-      if (value.length <= RuleMemoMaxKeyLen && pointMemo.size < RuleMemoMax)
-        pointMemo.put(value, idxs)
-      idxs
-    }
-
-    /** Any classid strip rule matches `value`? */
-    def classidStripMatches(value: String): Boolean = {
-      val got = stripMemo.get(value)
-      if (got != null) return got.booleanValue()
-      val m = StripCombinedByAttr("classid").matcher(value).find()
-      if (value.length <= RuleMemoMaxKeyLen && stripMemo.size < RuleMemoMax)
-        stripMemo.put(value, java.lang.Boolean.valueOf(m))
-      m
-    }
   }
 
   /** patterns.py:312-382 */
@@ -533,37 +554,23 @@ object Patterns {
 
     // Point patterns (has_attr semantics — SURVEY.md §0.1).
     val hc = ctx.hc
-    for (attr <- PointAttrOrder) {
-      if (tag.hasAttr(attr)) {
-        val value = tag.attr(attr)
-        val p = tag.parent
-        val parentHas = p != null && p.hasAttr(attr)
-        if (attr == "classid") {
-          val matched = ctx.classidPointMatches(value)
-          if (matched.nonEmpty) {
-            val parentMatched: Array[Int] =
-              if (parentHas) ctx.classidPointMatches(p.attr(attr))
-              else Array.emptyIntArray
-            for (i <- matched) {
-              val (points, _, pattern) = AttrPoints(i)
-              if (!parentMatched.contains(i)) applyScore(tag, points)
-              val key = (points, attr, pattern.pattern)
-              hc.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += tag
-            }
-          }
-        } else {
-          for (i <- PointRulesByAttr(attr)) {
-            val (points, _, pattern) = AttrPoints(i)
-            if (pattern.matcher(value).find()) {
-              val parentMatch = parentHas &&
-                pattern.matcher(p.attr(attr)).find()
-              if (!parentMatch) applyScore(tag, points)
-              val key = (points, attr, pattern.pattern)
-              hc.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += tag
-            }
+    var a = 0
+    while (a < PointAttrs.length) {
+      val pa = PointAttrs(a)
+      val value = tag.attr(pa.attr)
+      if (value != null) {
+        val matched = pa.matches(value)
+        if (matched.length > 0) {
+          val p = tag.parent
+          val pv = if (p == null) null else p.attr(pa.attr)
+          val parentMatched = if (pv == null) Array.emptyIntArray else pa.matches(pv)
+          for (i <- matched) {
+            if (!parentMatched.contains(i)) applyScore(tag, AttrPoints(i)._1)
+            hc.getOrElseUpdate(RuleKeys(i), mutable.ArrayBuffer.empty) += tag
           }
         }
       }
+      a += 1
     }
 
     // Links (patterns.py:334-349).
@@ -632,17 +639,15 @@ object Patterns {
     }
 
     // Fused any-match per attr (strip has no per-rule identity to keep).
-    for (attr <- StripAttrOrder) {
-      if (tag.hasAttr(attr)) {
-        val v = tag.attr(attr)
-        val matched =
-          if (attr == "classid") ctx.classidStripMatches(v)
-          else StripCombinedByAttr(attr).matcher(v).find()
-        if (matched) {
-          strip(tag)
-          return true
-        }
+    var a = 0
+    while (a < StripAttrs.length) {
+      val sa = StripAttrs(a)
+      val v = tag.attr(sa.attr)
+      if (v != null && sa.matches(v)) {
+        strip(tag)
+        return true
       }
+      a += 1
     }
     false
   }

@@ -16,14 +16,16 @@ object Py {
     * \x1c-\x1f, \x85, and Unicode space/line/paragraph separators
     * (includes  , which Java's Character.isWhitespace rejects).
     */
-  def isSpace(c: Char): Boolean = c match {
-    case ' ' | '\t' | '\n' | '' | '\f' | '\r' => true
-    case '' | '' | '' | '' | '' => true
-    case _ =>
-      val t = Character.getType(c)
-      t == Character.SPACE_SEPARATOR || t == Character.LINE_SEPARATOR ||
-      t == Character.PARAGRAPH_SEPARATOR
-  }
+  def isSpace(c: Char): Boolean =
+    if (c > ' ' && c < '\u007f') false // printable ASCII, the common case
+    else c match {
+      case ' ' | '\t' | '\n' | '' | '\f' | '\r' => true
+      case '' | '' | '' | '' | '' => true
+      case _ =>
+        val t = Character.getType(c)
+        t == Character.SPACE_SEPARATOR || t == Character.LINE_SEPARATOR ||
+        t == Character.PARAGRAPH_SEPARATOR
+    }
 
   /** Python `str.strip()` (no-arg). */
   def strip(s: String): String = {

@@ -2,7 +2,7 @@ package graft.spark
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -51,6 +51,15 @@ object ExtractJob {
     */
   private val OutputCodec = "zstd"
 
+  // Encoders built once per JVM: deriving one from a TypeTag is Scala
+  // reflection, a fixed cost of tens of milliseconds on every call.
+  private val PageEncoder: Encoder[(String, Array[Byte], Int)] = ExpressionEncoder()
+  private val ExtractedRowEncoder: Encoder[ExtractedRow] = ExpressionEncoder()
+  private val LineageRowEncoder: Encoder[LineageRow] = ExpressionEncoder()
+  private val LineageInputEncoder: Encoder[(Int, String, String, Long, Long)] = ExpressionEncoder()
+  private val LineageBufferEncoder: Encoder[Map[Int, LineagePartial]] = ExpressionEncoder()
+  private val LineageOutputEncoder: Encoder[Seq[LineageRow]] = ExpressionEncoder()
+
   /** Byte-aware bucket count: ceil(totalHtmlBytes / target), clamped.
     * Reads only `length(html)` — verify with explain() that the scan does
     * not materialize other columns.
@@ -90,16 +99,14 @@ object ExtractJob {
   def extract(
       pagesWithPid: DataFrame,
       maxHtmlBytes: Int = DefaultMaxHtmlBytes): Dataset[ExtractedRow] = {
-    val spark = pagesWithPid.sparkSession
-    import spark.implicits._
     pagesWithPid
       .select("url", "html", "pid")
-      .as[(String, Array[Byte], Int)]
+      .as(PageEncoder)
       .mapPartitions { it =>
         it.map { case (url, html, pid) =>
           extractOne(url, html, pid, maxHtmlBytes)
         }
-      }
+      }(ExtractedRowEncoder)
   }
 
   /** One row through the kernel: size cap → `Clean.clean` (total, so
@@ -156,8 +163,8 @@ object ExtractJob {
           p.fail_count, p.failure_samples, p.wall_us / 1000L)
       }
 
-    def bufferEncoder: Encoder[Map[Int, LineagePartial]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[LineageRow]] = ExpressionEncoder()
+    def bufferEncoder: Encoder[Map[Int, LineagePartial]] = LineageBufferEncoder
+    def outputEncoder: Encoder[Seq[LineageRow]] = LineageOutputEncoder
 
     private def add(b: Map[Int, LineagePartial], p: LineagePartial): Map[Int, LineagePartial] =
       b.updated(p.pid, b.get(p.pid) match {
@@ -180,7 +187,7 @@ object ExtractJob {
     * the column `rows`.
     */
   private def lineageRows(runId: String): Column =
-    udaf(new Lineage(runId))
+    udaf(new Lineage(runId), LineageInputEncoder)
       .apply(Seq("pid", "url", "error", "in_bytes", "wall_us").map(col): _*)
       .as("rows")
 
@@ -191,17 +198,18 @@ object ExtractJob {
     * is partial, one buffer per (task, pid) combined map-side before the
     * pid shuffle. [[runToDir]] does not run this: it observes the same
     * aggregate in its write, so it never reads its output back.
+    *
+    * A pid without rows gets no row here: the relation carries no bucket
+    * count to name the empty ones. [[runToDir]], which has it, commits
+    * them with zero-count rows.
     */
-  def lineage(extracted: Dataset[ExtractedRow], runId: String): Dataset[LineageRow] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
+  def lineage(extracted: Dataset[ExtractedRow], runId: String): Dataset[LineageRow] =
     extracted.toDF()
       .groupBy("pid")
       .agg(lineageRows(runId))
       .select(explode(col("rows")).as("r"))
       .select("r.*")
-      .as[LineageRow]
-  }
+      .as(LineageRowEncoder)
 
   /** Committed (distinct) pids of a run as a one-column DataFrame — the
     * resume filter is a broadcast LEFT ANTI join against this (the D2
@@ -253,6 +261,12 @@ object ExtractJob {
     * (§7.4). `failAfterPids` deliberately stops after K buckets to simulate
     * a killed job (used by the resume test).
     *
+    * Every pid the call is responsible for is committed, those without an
+    * input row too: they get a zero-count lineage row with no samples and
+    * `wall_ms` 0. So a finished run has exactly `buckets` lineage rows,
+    * and `failAfterPids = K` commits exactly K pids (fewer only when fewer
+    * are pending).
+    *
     * One pass over the pages: the write observes [[Lineage]] above the
     * pid exchange (`Dataset.observe`), so the aggregate runs in the
     * write's result stage on the five narrow columns of each row, with no
@@ -266,6 +280,12 @@ object ExtractJob {
     * default. The parquet footer records the codec, so readers need no
     * setting, and a lineage table holding snappy files from an earlier
     * run next to zstd ones reads as one table.
+    *
+    * Both writes run with adaptive execution off, set and restored like
+    * `partitionOverwriteMode`. It has nothing to adapt here:
+    * `repartitionById` fixes the partition count, and the only join, the
+    * resume filter, is broadcast by hint. On, it only splits the
+    * extracted write into two jobs with a re-plan between them.
     *
     * On Iceberg this whole method maps to `overwritePartitions()` + an
     * appended lineage table inside one transaction — see ICEBERG.md §2
@@ -290,26 +310,25 @@ object ExtractJob {
       case Some(c) => withP.join(broadcast(c), Seq("pid"), "left_anti")
       case None    => withP
     }
-    val scope =
-      if (failAfterPids == Int.MaxValue) pending
+    // the committed set is at most `buckets` ints; the pids this call is
+    // responsible for are the rest, or the first failAfterPids of them
+    val committed: Set[Int] =
+      committedDf.map(_.collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
+    val pendingPids = (0 until buckets).filterNot(committed.contains)
+    val (scope, responsible) =
+      if (failAfterPids == Int.MaxValue) (pending, pendingPids)
       else {
         // test-only kill simulation: bounded isin over ≤failAfterPids ints
-        val committed = committedDf
-          .map(_.collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
-        val keep = (0 until buckets)
-          .filterNot(committed.contains)
-          .take(failAfterPids)
-        pending.filter(col("pid").isin(keep: _*))
+        val keep = pendingPids.take(failAfterPids)
+        (pending.filter(col("pid").isin(keep: _*)), keep)
       }
 
     // one Observation per call: it holds the metrics of one action.
     // Only rows of THIS run's scope are observed, so pids published by an
     // earlier crashed-or-committed run are never covered.
     val observed = Observation()
-    val prevOverwriteMode =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConfs(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+        "spark.sql.adaptive.enabled" -> "false") {
       // pid clustering happens HERE, on the extracted rows (content ≪
       // input html), not before the kernel (r04 — see extract scaladoc).
       // pid ∈ [0, buckets) IS the shuffle partition id, so each writing
@@ -327,19 +346,27 @@ object ExtractJob {
       // lineage commits LAST: a pid is "done" only once its lineage row
       // exists, so a crash between the two writes re-runs (and
       // re-overwrites) the pid.
-      val rows = observed.get("rows").asInstanceOf[Seq[Row]]
-      spark.createDataFrame(rows.asJava, Encoders.product[LineageRow].schema)
+      val seen = observed.get("rows").asInstanceOf[Seq[Row]]
+      val seenPids = seen.map(_.getInt(1)).toSet
+      val empty = responsible.filterNot(seenPids.contains)
+        .map(pid => Row(runId, pid, 0L, 0L, 0L, 0L, Seq.empty[Row], 0L))
+      val rows = (seen ++ empty).sortBy(_.getInt(1))
+      spark.createDataFrame(rows.asJava, LineageRowEncoder.schema)
         .coalesce(1)
         .write.mode(SaveMode.Append)
         .option("compression", OutputCodec)
         .parquet(lineagePath)
-    } finally {
-      prevOverwriteMode match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+    }
+  }
+
+  /** Runs `body` with session confs set, restoring each one after. */
+  private def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

@@ -11,11 +11,14 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kernel rewrites against the implementations they replaced, kept here
-  * verbatim as oracles: `Extract.preCleanHtml` (indexOf-driven range
-  * copies), `Patterns.textLen` (a count without a copy unless an '&'
-  * occurs), `Clean.decodeHtml` (`new String(bytes, cs)`) and
-  * `Py.floatRepr` (precision search from the shortest decimal's length).
-  * Seeded, so a failure reproduces.
+  * or in [[KernelOracles]] verbatim as oracles: `Extract.preCleanHtml`
+  * (indexOf-driven range copies), `Patterns.textLen` (a count without a
+  * copy unless an '&' occurs), `Clean.decodeHtml` (`new String(bytes,
+  * cs)`), `Py.floatRepr` (precision search from the shortest decimal's
+  * length), `HtmlParser.parse` with `Extract.commentStrip` (interned
+  * names with their flags, text runs taken whole, recorded comments),
+  * `Munge.serializeHyphenated` (one scan per text node) and the memoized
+  * attribute rules of `Patterns`. Seeded, so a failure reproduces.
   */
 class KernelRewriteSpec extends AnyFunSuite {
 
@@ -258,15 +261,184 @@ class KernelRewriteSpec extends AnyFunSuite {
   test("hyphenation memo: words with one hash, length and first char each hyphenate as themselves") {
     // "Aa" and "BB" have the same String hash, so these 8 words share a
     // memo slot and differ only inside: a probe that compared less than
-    // the whole range would hand one word another's hyphenation.
+    // the whole range would hand one word another's hyphenation. At 19
+    // chars they are too long to pack, so the probe is by hash.
     val words = for (a <- Seq("Aa", "BB"); b <- Seq("Aa", "BB"); c <- Seq("Aa", "BB"))
       yield s"under$a$b${c}standing"
     assert(words.map(_.hashCode).distinct.size == 1)
+    assert(words.forall(_.length > Hyphenate.MaxPackedWord))
     val text = (words ++ words.reverse ++ words).mkString(" ")
     val sb = new StringBuilder
     Munge.serializeHyphenated(HtmlParser.parse(s"<p>$text</p>").find("p"), sb)
     val expected = (words ++ words.reverse ++ words).map(Hyphenate.hyphenateWordShy)
     assert(sb.toString == expected.mkString("<p>", " ", "</p>"))
+  }
+
+  // ---------------------------------------------------------- tokenizer
+
+  /** Every node of a tree: its kind, name, attrs in order and data, so
+    * two trees that serialize alike but split text or type nodes
+    * differently still differ.
+    */
+  private def dump(n: DNode, sb: StringBuilder = new StringBuilder): String = {
+    n match {
+      case e: Elem =>
+        sb.append('<').append(e.name)
+        e.attrs.foreachEntry((k, v) => sb.append(' ').append(k).append('=').append(String.valueOf(v)))
+        sb.append('>')
+        e.children.foreach(dump(_, sb))
+        sb.append("</>")
+      case t: Text => sb.append(t.getClass.getSimpleName).append('[').append(t.data).append(']')
+    }
+    sb.toString
+  }
+
+  /** Names of every shape the intern table meets: mixed case, ≤9 and
+    * >9 chars, non-ASCII, digits and dashes, and long runs over a
+    * two-letter alphabet, which differ only in a char that a short pack
+    * would drop.
+    */
+  private val genName: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf("div", "DIV", "Div", "p", "P", "a", "A", "br", "BR", "img", "input",
+      "script", "SCRIPT", "style", "Style", "pre", "span", "li", "ul", "td", "h1",
+      "blockquote", "noscript", "x-y", "dív", "ü"),
+    2 -> (for {
+      first <- Gen.oneOf('a', 'b', 'Q')
+      n <- Gen.choose(0, 13)
+      rest <- Gen.listOfN(n, Gen.oneOf('a', 'b', 'B', '1', '-', 'é', 'ı'))
+    } yield (first +: rest).mkString))
+
+  private val genAttrName: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf("class", "CLASS", "Class", "id", "ID", "href", "HREF", "rel", "title",
+      "src", "data-x", "onclick", "data-a-very-long-name", "ünï", "x"),
+    1 -> genName)
+
+  private val genValue: Gen[String] = Gen.listOf(Gen.oneOf(
+    "x", "y z", " a  b ", "\t", "\n", "\u000B", "&amp;", "&amp", "&lt;", "&#60;", "&#x3c;",
+    "&bogus;", "&", ";", ">", "<", "é", "漢", "'", "\"", "/")).map(_.mkString)
+
+  private val genAttr: Gen[String] = for {
+    n <- genAttrName
+    v <- genValue
+    form <- Gen.choose(0, 4)
+  } yield form match {
+    case 0 => n                                                  // bare
+    case 1 => n + "=\"" + v.replace("\"", "") + "\""             // double-quoted
+    case 2 => n + "='" + v.replace("'", "") + "'"                // single-quoted
+    case 3 => n + "=" + v.filterNot(c => c == ' ' || c == '>' || c == '\t' || c == '\n')
+    case _ => n + " = \"" + v.replace("\"", "") + "\""           // spaced
+  }
+
+  private val genStartTag: Gen[String] = for {
+    name <- genName
+    n <- Gen.choose(0, 4)
+    attrs <- Gen.listOfN(n, genAttr)
+    dup <- Gen.oneOf(true, false)
+    close <- Gen.frequency(8 -> ">", 2 -> "/>", 1 -> " / >", 1 -> "", 1 -> " ")
+  } yield {
+    val as = if (dup && attrs.nonEmpty) attrs :+ attrs.head.toUpperCase else attrs
+    "<" + name + as.map(" " + _).mkString + close
+  }
+
+  private val genSoupToken: Gen[String] = Gen.frequency(
+    10 -> genStartTag,
+    6 -> genName.map(n => "</" + n + ">"),
+    1 -> genName.map(n => "</" + n + " x>"),
+    1 -> genName.map(n => "</" + n),
+    8 -> Gen.oneOf("text", "two words", " ", "\n", "é", "漢字", "&amp;", "&amp", "&amp;amp;",
+      "&lt;", "&#169;", "&#x20AC;", "&#0;", "&nbsp;", "&bogus;", "&", "&#", "<", "< b", "a<b",
+      "<1", "<>", "</ p>", "</>", "=", "\"", ">"),
+    2 -> Gen.oneOf("<!-- c -->", "<!---->", "<!-- unterminated", "<!-->", "<!DOCTYPE html>",
+      "<!x>", "<!", "<?php x ?>", "<? unterminated", "<?>"),
+    2 -> Gen.oneOf("<script>if (a < b && c > d) {}</script>", "<style>a>b{}</STYLE >",
+      "<SCRIPT>x</script >", "<script>unterminated", "<style></style>", "<script/>"))
+
+  private val genSoup: Gen[String] = Gen.listOf(genSoupToken).map(_.mkString)
+
+  /** The strainer the reddit route parses with, and one on exact class. */
+  private val Strainers = Seq(
+    HtmlParser.ClassStrainer(java.util.regex.Pattern.compile("x|é")),
+    HtmlParser.ClassStrainer(null, exact = "y"))
+
+  test("tokenizer: tag soup parses to the same tree as the old tokenizer, before and after the comment strip") {
+    check(Prop.forAllNoShrink(genSoup, Gen.choose(0, 9)) { (html, k) =>
+      val strainer = if (k < Strainers.size) Strainers(k) else null
+      val got = HtmlParser.parse(html, strainer)
+      val exp = KernelOracles.OldHtmlParser.parse(html, strainer)
+      val parsed = dump(got) == dump(exp)
+      Extract.commentStrip(got)
+      KernelOracles.commentStrip(exp)
+      (parsed && dump(got) == dump(exp)) :| html
+    }, tests = 100000, seed = 50L)
+  }
+
+  // --------------------------------------------------------- serializer
+
+  /** Text with every whitespace kind `Py.isSpace` knows, entity-looking
+    * runs (which survive parsing as "&amp;amp;"), escapable chars inside
+    * words, and words of every length the memo packs or does not.
+    */
+  private val genProse: Gen[String] = Gen.listOf(Gen.oneOf(
+    "a", "word", "words", "hyphenation", "extraordinary", "internationalization",
+    "uncharacteristically", "R&amp;D", "AT&amp;T", "x&lt;y", "a&gt;b", "&amp;amp;",
+    "&amp;ab;", "&amp;abcdefg;", "&amp;a b;", "café", "naïveté", "Straße", "漢字テキスト",
+    " ", "  ", "\t", "\n", " ", " ", "\u0085", "\u001c", "　")).map(_.mkString)
+
+  private val genProseToken: Gen[String] = Gen.frequency(
+    6 -> genProse,
+    2 -> Gen.oneOf("<p>", "</p>", "<div>", "</div>", "<b>", "</b>", "<pre>", "</pre>",
+      "<PRE>", "<br>", "<img src=x>", "<span class=c>", "</span>"),
+    1 -> genProse.map(t => "<!--" + t + "-->"),
+    1 -> genProse.map(t => "<script>" + t.replace("<", "") + "</script>"),
+    1 -> Gen.oneOf("<!DOCTYPE x>", "<?pi data?>"))
+
+  test("serializer: one scan per text node equals M11 as a pass, then serialize") {
+    val page = Gen.listOf(genProseToken).map(_.mkString)
+    check(Prop.forAllNoShrink(page, Gen.choose(0, 1000), Gen.oneOf(true, false)) { (html, k, scored) =>
+      val a = HtmlParser.parse(html)
+      val b = HtmlParser.parse(html)
+      // the k-th element as the selection root: often under a <pre>
+      val elems = elemsOf(a)
+      val i = k % elems.size
+      val (ra, rb) = (elems(i), elemsOf(b)(i))
+      if (scored) { ra.setScore(k * 0.37); rb.setScore(k * 0.37) }
+      val sb = new StringBuilder
+      Munge.serializeHyphenated(ra, sb)
+      KernelOracles.mungeHyphenate(rb)
+      (sb.toString == rb.serialized) :| html
+    }, tests = 20000, seed = 51L)
+  }
+
+  // --------------------------------------------- memoized attribute rules
+
+  /** Values that hit and miss the rules of every attr, in mixed case, long
+    * ones the memo does not keep, and random runs.
+    */
+  private val genRuleValue: Gen[String] = Gen.frequency(
+    6 -> Gen.listOf(Gen.oneOf(
+      "side", "sidebar", "Side", "ad", "ads", "ads main", "main", "post", "post 12", "12",
+      "comment", "comments", "story", "storybody", "footer", "non footer", "hidden",
+      "overflow hidden", "tag", "tags", "share", "email", "nav", "leftnavigation", "article",
+      "article tool", "gallery", "gallery caption", "!!!", " ", "-", "_",
+      "http://", "https://", "www.", "twitter.com/share", "twitter.com/home?status=x",
+      "facebook.com/share", "javascript:void(0)", "reddit.com", "digg.com/submit",
+      "feedads", "feed.x.com/~ab/", "feed.example/1.0/", "doubleclick.net", "1x1.trans.gif",
+      "/social/qm.gif", "smilies", "display", ":", "none", "display : none", "DISPLAY:NONE",
+      "abcdefghijklmnopqrstuvwxyz0123456789a#0123456789012345")).map(_.mkString),
+    1 -> Gen.alphaNumStr,
+    1 -> Gen.listOfN(40, Gen.oneOf("share ", "side ", "x ")).map(_.mkString)) // > 256 chars
+
+  private val RuleAttrs = (Patterns.AttrPoints.map(_._2) ++ Patterns.AttrStrip.map(_._1)).distinct :+ "other"
+
+  test("attribute rules: memoized verdicts equal one regex find per rule, on first sight and from the memo") {
+    check(Prop.forAllNoShrink(genRuleValue) { v =>
+      RuleAttrs.forall { attr =>
+        val exp = (KernelOracles.pointMatches(attr, v).toSeq, KernelOracles.stripMatches(attr, v))
+        // twice: the first call may fill the memo, the second reads it
+        Seq.fill(2)((Patterns.pointMatches(attr, v).toSeq, Patterns.stripMatches(attr, v)))
+          .forall(_ == exp)
+      } :| v
+    }, tests = 20000, seed = 52L)
   }
 
   // --------------------------------------------------------- decodeHtml

@@ -132,7 +132,7 @@ class MungeSpec extends AnyFunSuite {
     val doc1 = HtmlParser.parse(html)
     val root1 = doc1.find("div")
     root1.setScore(7.0)
-    Munge.mungeHyphenate(root1)
+    KernelOracles.mungeHyphenate(root1)
     val twoPass = root1.serialized
 
     val doc2 = HtmlParser.parse(html)
@@ -145,7 +145,7 @@ class MungeSpec extends AnyFunSuite {
     // selection root INSIDE a <pre>: whole subtree exempt in both paths
     val p1 = HtmlParser.parse("<pre><div>extraordinary   spacing</div></pre>")
     val in1 = p1.find("div")
-    Munge.mungeHyphenate(in1)
+    KernelOracles.mungeHyphenate(in1)
     val exp = in1.serialized
     val p2 = HtmlParser.parse("<pre><div>extraordinary   spacing</div></pre>")
     val in2 = p2.find("div")

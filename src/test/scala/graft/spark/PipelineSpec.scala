@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
@@ -180,7 +180,15 @@ class PipelineSpec extends SparkSpec {
       def lineageOf(out: String) =
         spark.read.parquet(s"$out/lineage").as[LineageRow].collect().map(lineageKey)
           .sortBy(_._2).toSeq
-      assert(lineageOf(clean) == expected)
+      // ExtractJob.lineage has no bucket count, so its rows are the pids
+      // with rows; runToDir also commits the empty ones, with zero rows
+      def withEmpties = {
+        val seen = expected.map(_._2).toSet
+        assert(seen.size < buckets, "some pid must be empty")
+        (expected ++ (0 until buckets).filterNot(seen).map(pid =>
+          ("r1", pid, 0L, 0L, 0L, 0L, Seq.empty[FailureSample]))).sortBy(_._2)
+      }
+      assert(lineageOf(clean) == withEmpties)
 
       val resumed = s"$dir/resumed"
       ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap, failAfterPids = 3)
@@ -188,11 +196,50 @@ class PipelineSpec extends SparkSpec {
       ExtractJob.runToDir(spark, df, resumed, "r1", buckets, cap)
       val perPid = spark.read.parquet(s"$resumed/lineage")
         .groupBy("run_id", "partition_id").count().collect()
-      // a pid with no rows gets no lineage row
-      assert(perPid.length == expected.length && perPid.forall(_.getLong(2) == 1L),
+      assert(perPid.length == buckets && perPid.forall(_.getLong(2) == 1L),
         "exactly one lineage row per (run_id, pid) after kill-and-resume")
-      assert(lineageOf(resumed) == expected)
+      assert(lineageOf(resumed) == withEmpties)
     }
+  }
+
+  test("runToDir commits empty pids with zero-count lineage rows; failAfterPids commits exactly K") {
+    val dir = Files.createTempDirectory("graft-empty").toString
+    val buckets = 32
+    val k = 5
+    // planted: only pids 1, 3, 6 and 20 hold rows, so each kill commits
+    // empty and non-empty pids alike
+    val full = ExtractJob.withPid(PagesGen.asDataFrame(spark, sf001), buckets)
+    val df = full.filter(col("pid").isin(1, 3, 6, 20)).drop("pid").cache()
+    val n = df.count()
+    assert(n > 0 && full.filter(col("pid").isin(1, 3, 6, 20)).select("pid").distinct().count() == 4)
+    def lineage = spark.read.parquet(s"$dir/lineage").orderBy("partition_id").collect()
+
+    ExtractJob.runToDir(spark, df, dir, "r1", buckets, failAfterPids = k)
+    val first = lineage
+    assert(first.map(_.getAs[Int]("partition_id")).toSeq == (0 until k))
+    for (r <- first) {
+      val pid = r.getAs[Int]("partition_id")
+      if (pid == 1 || pid == 3) assert(r.getAs[Long]("input_count") > 0, s"pid $pid")
+      else {
+        assert(r.getAs[Long]("input_count") == 0L && r.getAs[Long]("input_bytes") == 0L &&
+          r.getAs[Long]("ok_count") == 0L && r.getAs[Long]("fail_count") == 0L, s"pid $pid: $r")
+        assert(r.getAs[collection.Seq[Row]]("failure_samples").isEmpty && r.getAs[Long]("wall_ms") == 0L,
+          s"pid $pid: $r")
+      }
+    }
+
+    ExtractJob.runToDir(spark, df, dir, "r1", buckets, failAfterPids = k)
+    assert(lineage.map(_.getAs[Int]("partition_id")).toSeq == (0 until 2 * k))
+
+    ExtractJob.runToDir(spark, df, dir, "r1", buckets)
+    ExtractJob.runToDir(spark, df, dir, "r1", buckets) // nothing pending: a no-op
+    assert(lineage.map(_.getAs[Int]("partition_id")).toSeq == (0 until buckets),
+      "one lineage row per pid, empty ones included")
+    assert(ExtractJob.committedPids(spark.read.parquet(s"$dir/lineage"), "r1").size == buckets)
+    val out = spark.read.parquet(s"$dir/extracted")
+    assert(out.count() == n && out.select("url").distinct().count() == n)
+    assert(lineage.map(_.getAs[Long]("input_count")).sum == n)
+    df.unpersist()
   }
 
   test("ExtractJob.lineage rows, samples included, do not depend on partitioning") {

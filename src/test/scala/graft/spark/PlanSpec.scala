@@ -4,7 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, DirectShufflePartitionID}
 import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
-import org.apache.spark.sql.execution.{CollectMetricsExec, DeserializeToObjectExec, MapPartitionsExec, SparkPlan}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{CollectMetricsExec, DeserializeToObjectExec, MapPartitionsExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -195,11 +198,29 @@ class PlanSpec extends SparkSpec {
     PagesGen.asDataFrame(spark, sf001).write.parquet(s"$dir/pages")
     val pages = spark.read.parquet(s"$dir/pages")
     val buckets = 8
-    val execs = executionsOf(ExtractJob.runToDir(spark, pages, s"$dir/out", "r", buckets))
+    // the SQL execution id of every job started
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val execs =
+      try executionsOf(ExtractJob.runToDir(spark, pages, s"$dir/out", "r", buckets))
+      finally spark.sparkContext.removeSparkListener(listener)
     val write = execs.map(_.executedPlan)
       .filter(p => p.toString.contains("InsertIntoHadoopFsRelationCommand") &&
         p.toString.contains(s"$dir/out/extracted"))
     assert(write.size == 1, s"expected one extracted write, got ${write.size}")
+    // runToDir writes with adaptive execution off: a fixed plan, run as
+    // one job, with no re-plan between the kernel stage and the write
+    assert(write.head.collectFirst { case a: AdaptiveSparkPlanExec => a }.isEmpty,
+      s"the extracted write is adaptive:\n${write.head}")
+    // a fresh directory: the extracted write and the lineage append, as
+    // two SQL executions of one job each
+    val jobsPerExecution = jobs.asScala.toSeq.groupBy(identity).values.map(_.size).toSeq
+    assert(execs.size == 2 && jobsPerExecution == Seq(1, 1),
+      s"${execs.size} executions, jobs by execution: $jobsPerExecution")
     val exchanges = AqePlans.collect(write.head) { case e: ShuffleExchangeExec => e }
     assert(exchanges.size == 1, s"expected exactly the write-clustering shuffle:\n${write.head}")
     val ex = exchanges.head
