@@ -40,18 +40,15 @@ object HtmlParser {
   // href/class/src/id...), so a direct-mapped table keyed on the raw char
   // range returns a SHARED canonical lowercase name, with the facts the
   // tokenizer asks about it, without a per-occurrence substring or
-  // toLowerCase. The scan that finds a name's end also packs it
-  // ([[CharPack]]): a name of at most 9 ASCII chars (nearly every real
-  // one) is identified by its Long, so a hit costs one compare of two
-  // Longs; any other name is found by its hash and a char compare.
-  // Canonical strings are JVM-interned: they are the same instances as
-  // the literals the kernel looks attrs up by, and two names are equal
-  // iff they are `eq`. Slots hold one immutable entry each (array
-  // reference writes are atomic, fields are final), so global racy
+  // toLowerCase. The scan that finds a name's end also folds its String
+  // hash, so a probe is a slot index, a length compare and a
+  // `regionMatches`. Canonical strings are JVM-interned: they are the same
+  // instances as the literals the kernel looks attrs up by, and two names
+  // are equal iff they are `eq`. Slots hold one immutable entry each
+  // (array reference writes are atomic, fields are final), so global racy
   // replacement is safe; collisions just replace.
   private final class Name(
       val raw: String,
-      val key: Long,             // CharPack of raw, or -1
       val canon: String,
       val isVoid: Boolean,       // Dom.VoidElements: never takes children
       val multiValued: Boolean,  // Dom.MultiValuedAttrs: a token list
@@ -65,28 +62,15 @@ object HtmlParser {
     Seq("script", "style").map(n => n -> java.util.regex.Pattern.compile(
       "</\\s*" + n, java.util.regex.Pattern.CASE_INSENSITIVE)).toMap
 
-  /** The interned name of `s[from, until)`. `k` is the range's pack and
-    * `ok` whether every char in it was packable.
-    */
-  private def name(s: String, from: Int, until: Int, k: Long, ok: Boolean): Name = {
-    val key = if (ok && until - from <= CharPack.MaxChars) k else -1L
-    val idx =
-      if (key >= 0) CharPack.slot(key, NameBits)
-      else {
-        var h = 0
-        var i = from
-        while (i < until) { h = 31 * h + s.charAt(i); i += 1 }
-        (h ^ (h >>> 16)) & ((1 << NameBits) - 1)
-      }
+  /** The interned name of `s[from, until)`, whose String hash is `h`. */
+  private def name(s: String, from: Int, until: Int, h: Int): Name = {
+    val idx = (h ^ (h >>> 16)) & ((1 << NameBits) - 1)
     val e = nameSlots(idx)
-    if (e != null) {
-      if (key >= 0) { if (e.key == key) return e }
-      else if (e.raw.length == until - from && s.regionMatches(from, e.raw, 0, until - from))
-        return e
-    }
+    if (e != null && e.raw.length == until - from &&
+        s.regionMatches(from, e.raw, 0, until - from)) return e
     val raw = s.substring(from, until)
     val canon = raw.toLowerCase.intern()
-    val n = new Name(raw, key, canon, Dom.VoidElements.contains(canon),
+    val n = new Name(raw, canon, Dom.VoidElements.contains(canon),
       Dom.MultiValuedAttrs.contains(canon), RawTextEnd.getOrElse(canon, null))
     nameSlots(idx) = n
     n
@@ -203,16 +187,14 @@ object HtmlParser {
         } else if (c1 == '/') {
           if (i + 2 < n && isNameStart(html.charAt(i + 2))) {
             var j = i + 2
-            var k = 0L
-            var ok = true
+            var h = 0
             var c = html.charAt(j)
             while (!isNameEnd(c)) {
-              k = CharPack.pack(k, c)
-              ok &= CharPack.packable(c)
+              h = 31 * h + c
               j += 1
               c = if (j < n) html.charAt(j) else '>'
             }
-            val nm = name(html, i + 2, j, k, ok).canon
+            val nm = name(html, i + 2, j, h).canon
             val gt = html.indexOf('>', j)
             flushText(i)
             // pop to matching open tag; ignore if none
@@ -332,18 +314,16 @@ object HtmlParser {
   private def parseStartTag(html: String, start: Int, out: TagScratch): Boolean = {
     val n = html.length
     var i = start + 1
-    var k = 0L
-    var ok = true
+    var h = 0
     var c = html.charAt(i)
     while (c != '>' && c != '/' && !isSpaceChar(c)) {
-      k = CharPack.pack(k, c)
-      ok &= CharPack.packable(c)
+      h = 31 * h + c
       i += 1
       if (i >= n) return false
       c = html.charAt(i)
     }
     out.reset()
-    out.name = name(html, start + 1, i, k, ok)
+    out.name = name(html, start + 1, i, h)
     var done = false
     while (!done) {
       while (i < n && isSpaceChar(html.charAt(i))) i += 1
@@ -357,17 +337,15 @@ object HtmlParser {
       } else {
         // attribute name
         val as = i
-        var k = 0L
-        var ok = true
+        var h = 0
         var d = c
         while (!isSpaceChar(d) && d != '=' && d != '>' && d != '/') {
-          k = CharPack.pack(k, d)
-          ok &= CharPack.packable(d)
+          h = 31 * h + d
           i += 1
           if (i >= n) return false
           d = html.charAt(i)
         }
-        val aname = if (i > as) name(html, as, i, k, ok) else null
+        val aname = if (i > as) name(html, as, i, h) else null
         while (i < n && isSpaceChar(html.charAt(i))) i += 1
         var avalue: String = null
         if (i < n && html.charAt(i) == '=') {

@@ -589,16 +589,15 @@ object Hyphenate {
   // source string: the serializer's text scan gets a word's hyphenation,
   // already HTML-text-escaped, without allocating the substring or
   // rescanning the result on a hit (the r03 profile's remaining hyphenate
-  // cost was per-word substring + ConcurrentHashMap probe). A word of at
-  // most 18 ASCII chars, nearly every one, is probed by its two CharPack
-  // halves and never compared char by char; any other word by its hash
-  // and a char compare. Collision policy is replace — Zipfian word
-  // frequencies keep the hot words resident.  Per-thread, so no
-  // synchronization; backed by the shared shyCache on miss.
+  // cost was per-word substring + ConcurrentHashMap probe). The scan
+  // folds each word's String hash as it finds the word's end, so a probe
+  // is a slot index, a length compare and a `regionMatches`. Collision
+  // policy is replace — Zipfian word frequencies keep the hot words
+  // resident. Per-thread, so no synchronization; backed by the shared
+  // shyCache on miss.
   private final val TlBits = 14
   private[kernel] final class RangeMemo {
     val keys = new Array[String](1 << TlBits)    // the plain word
-    val packs = new Array[Long](2 << TlBits)     // its two CharPack halves, or -1
     val escaped = new Array[String](1 << TlBits) // its escaped hyphenation
   }
   private val tlMemo: ThreadLocal[RangeMemo] =
@@ -609,39 +608,22 @@ object Hyphenate {
     */
   private[kernel] def rangeMemo(): RangeMemo = tlMemo.get()
 
-  /** The longest word probed by its packs: two CharPack halves. */
-  private[kernel] final val MaxPackedWord = 2 * CharPack.MaxChars
-
   /** Append `hyphenateWordShy(s.substring(from, until))`, HTML-text-escaped,
     * to `out`, allocation-free when the range is a repeat word on this
-    * thread. `memo` is this thread's [[rangeMemo]]. `k1` and `k2` are the
-    * CharPacks of the range's first [[CharPack.MaxChars]] chars and of the
-    * rest, `ok` whether all its chars were packable, and `esc` whether
-    * one of them escapes, all from the caller's word scan. Hyphenation
-    * only inserts soft hyphens, which do not escape, so a word without
-    * `&`, `<` or `>` is its own escaped form. Caller guarantees
-    * until - from > 4.
+    * thread. `memo` is this thread's [[rangeMemo]]. `h` is the range's
+    * String hash and `esc` whether one of its chars escapes, both from the
+    * caller's word scan. Hyphenation only inserts soft hyphens, which do
+    * not escape, so a word without `&`, `<` or `>` is its own escaped
+    * form. Caller guarantees until - from > 4.
     */
   private[kernel] def appendHyphenatedEscaped(
-      memo: RangeMemo, s: String, from: Int, until: Int, k1: Long, k2: Long,
-      ok: Boolean, esc: Boolean, out: StringBuilder): Unit = {
+      memo: RangeMemo, s: String, from: Int, until: Int, h: Int, esc: Boolean,
+      out: StringBuilder): Unit = {
     val len = until - from
-    val packed = ok && len <= MaxPackedWord
-    val idx =
-      if (packed) CharPack.slot(k1 * 31 + k2, TlBits)
-      else {
-        var h = 0
-        var i = from
-        while (i < until) { h = 31 * h + s.charAt(i); i += 1 }
-        (h ^ (h >>> 16)) & ((1 << TlBits) - 1)
-      }
-    val hit =
-      if (packed) memo.packs(2 * idx) == k1 && memo.packs(2 * idx + 1) == k2
-      else {
-        val k = memo.keys(idx)
-        k != null && k.length == len && s.regionMatches(from, k, 0, len)
-      }
-    if (hit) out.append(memo.escaped(idx))
+    val idx = (h ^ (h >>> 16)) & ((1 << TlBits) - 1)
+    val k = memo.keys(idx)
+    if (k != null && k.length == len && s.regionMatches(from, k, 0, len))
+      out.append(memo.escaped(idx))
     else {
       val word = s.substring(from, until)
       val plain = hyphenateWordShy(word)
@@ -649,8 +631,6 @@ object Hyphenate {
         if (!esc) plain
         else { val sb = new StringBuilder(plain.length + 8); Dom.escapeText(plain, sb); sb.toString }
       memo.keys(idx) = word
-      memo.packs(2 * idx) = if (packed) k1 else -1L
-      memo.packs(2 * idx + 1) = if (packed) k2 else -1L
       memo.escaped(idx) = escaped
       out.append(escaped)
     }

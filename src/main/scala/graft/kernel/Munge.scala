@@ -245,35 +245,31 @@ object Munge {
     val n = s.length
     var i = 0
     var wordStart = -1
-    var k1 = 0L          // the word's CharPack halves, for the memo probe
-    var k2 = 0L
-    var ok = true        // every char of the word is packable
+    var h = 0            // the word's String hash, for the memo probe
     var esc = false      // the word holds a char that escapes
     var inWs = false     // in a whitespace run of the current part
     while (i < n) {
       val c = s.charAt(i)
       val entityEnd = if (c == '&') entityEndAt(s, i) else -1
       if (entityEnd > 0) {
-        if (wordStart >= 0) { appendWord(s, wordStart, i, k1, k2, ok, esc, out, memo); wordStart = -1 }
+        if (wordStart >= 0) { appendWord(s, wordStart, i, h, esc, out, memo); wordStart = -1 }
         Dom.escapeTextRange(s, i, entityEnd, out)
         inWs = false // the next part starts
         i = entityEnd
       } else {
         if (Py.isSpace(c)) {
-          if (wordStart >= 0) { appendWord(s, wordStart, i, k1, k2, ok, esc, out, memo); wordStart = -1 }
+          if (wordStart >= 0) { appendWord(s, wordStart, i, h, esc, out, memo); wordStart = -1 }
           if (!inWs) { out.append(' '); inWs = true }
         } else {
-          if (wordStart < 0) { wordStart = i; k1 = 0L; k2 = 0L; ok = true; esc = false }
-          if (i - wordStart < CharPack.MaxChars) k1 = CharPack.pack(k1, c)
-          else k2 = CharPack.pack(k2, c)
-          ok &= CharPack.packable(c)
+          if (wordStart < 0) { wordStart = i; h = 0; esc = false }
+          h = 31 * h + c
           if (c == '&' || c == '<' || c == '>') esc = true
           inWs = false
         }
         i += 1
       }
     }
-    if (wordStart >= 0) appendWord(s, wordStart, n, k1, k2, ok, esc, out, memo)
+    if (wordStart >= 0) appendWord(s, wordStart, n, h, esc, out, memo)
   }
 
   /** End (past the `;`) of the `&[^;]{2,6};` match at `s(i) == '&'`, or -1. */
@@ -289,9 +285,9 @@ object Munge {
     * when nothing in it escapes); a longer one comes from the memo.
     */
   private def appendWord(
-      s: String, from: Int, until: Int, k1: Long, k2: Long, ok: Boolean, esc: Boolean,
+      s: String, from: Int, until: Int, h: Int, esc: Boolean,
       out: StringBuilder, memo: Hyphenate.RangeMemo): Unit =
-    if (until - from > 4) Hyphenate.appendHyphenatedEscaped(memo, s, from, until, k1, k2, ok, esc, out)
+    if (until - from > 4) Hyphenate.appendHyphenatedEscaped(memo, s, from, until, h, esc, out)
     else if (esc) Dom.escapeTextRange(s, from, until, out)
     // bulk java append — the (s, from, until) overload on the SCALA
     // StringBuilder auto-tuples (appends "(s,from,until)" literally)

@@ -478,25 +478,31 @@ object Patterns {
     mutable.LinkedHashMap[(Double, String, String), mutable.ArrayBuffer[Elem]]
 
   // ---- rule-engine acceleration (semantics-preserving) -------------------
-  // A rule's verdict is a pure function of (attr, value), and attr values
-  // repeat: the synthesized `classid` has few distinct values per
-  // document (usually ""), and hrefs, srcs and styles recur across a
-  // site's pages (nav, share and footer links). So each attr's verdicts
-  // are memoized per value, turning O(nodes × rules) regex work into
-  // O(distinct values × rules). The memos are GLOBAL bounded concurrent
-  // maps rather than per-document (r03: per-document caches re-ran ~163
-  // regex finds per distinct classid per document); values are immutable
-  // and threads may race benignly. The strip test is a pure any-match, so
-  // each attr's strip rules are fused into one alternation Pattern (all
-  // rules share FLAGS). Point application stays per-rule (points, parent
-  // suppression and the hit_counter need rule identity); results are
-  // additive so grouping by attr does not change scores, and the
-  // false-positive undo is order-insensitive.
+  // Most rules target the synthesized `classid`, whose distinct values are
+  // few (and usually ""), so its verdicts are memoized per value, turning
+  // O(nodes × rules) regex work into O(distinct classids × rules). The
+  // memo is a GLOBAL bounded concurrent map rather than per-document (r03:
+  // per-document caches re-ran ~163 regex finds per distinct classid per
+  // document); values are immutable and threads may race benignly. Other
+  // attrs (href, src, id, style, rel) are tested per node: cleaning 7,500
+  // distinct article pages once each, they reached the rules under 3
+  // times a page against 45 classid lookups, and a memo that never
+  // evicts would fill with page-unique values such as links. The strip
+  // test is a pure any-match, so each attr's strip rules are fused into
+  // one alternation Pattern (all rules share FLAGS). Point application
+  // stays per-rule (points, parent suppression and the hit_counter need
+  // rule identity); results are additive so grouping by attr does not
+  // change scores, and the false-positive undo is order-insensitive.
   private val RuleMemoMax = 1 << 17
   private val RuleMemoMaxKeyLen = 256
 
+  /** A classid-only memo: a new map for classid, else null (no memo). */
+  private def ruleMemo[V](attr: String): java.util.concurrent.ConcurrentHashMap[String, V] =
+    if (attr == "classid") new java.util.concurrent.ConcurrentHashMap[String, V]() else null
+
   private def memoize[V](memo: java.util.concurrent.ConcurrentHashMap[String, V],
                          value: String)(compute: => V): V = {
+    if (memo == null) return compute
     val got = memo.get(value)
     if (got != null) return got
     val v = compute
@@ -504,25 +510,25 @@ object Patterns {
     v
   }
 
-  /** The point rules of one attr, in AttrPoints order, with their memo. */
-  private final class PointAttr(val attr: String, rules: Array[Int]) {
-    private val memo = new java.util.concurrent.ConcurrentHashMap[String, Array[Int]]()
+  /** The point rules of one attr, in AttrPoints order. */
+  private[kernel] final class PointAttr(val attr: String, rules: Array[Int]) {
+    private val memo = ruleMemo[Array[Int]](attr)
     /** Indices (into AttrPoints) of this attr's rules matching `value`. */
     def matches(value: String): Array[Int] =
       memoize(memo, value)(rules.filter(i => AttrPoints(i)._3.matcher(value).find()))
   }
 
-  /** The strip rules of one attr as one alternation, with its memo. */
-  private final class StripAttr(val attr: String, any: Pattern) {
-    private val memo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** The strip rules of one attr as one alternation. */
+  private[kernel] final class StripAttr(val attr: String, any: Pattern) {
+    private val memo = ruleMemo[java.lang.Boolean](attr)
     def matches(value: String): Boolean =
       memoize(memo, value)(java.lang.Boolean.valueOf(any.matcher(value).find())).booleanValue
   }
 
-  private val PointAttrs: Array[PointAttr] =
+  private[kernel] val PointAttrs: Array[PointAttr] =
     AttrPoints.map(_._2).distinct.map(attr =>
       new PointAttr(attr, AttrPoints.indices.filter(AttrPoints(_)._2 == attr).toArray))
-  private val StripAttrs: Array[StripAttr] =
+  private[kernel] val StripAttrs: Array[StripAttr] =
     AttrStrip.map(_._1).distinct.map { attr =>
       val rules = AttrStrip.filter(_._1 == attr)
       new StripAttr(attr, Pattern.compile(
@@ -531,14 +537,6 @@ object Patterns {
   /** Hit-counter key of each AttrPoints rule, built once. */
   private val RuleKeys: Array[(Double, String, String)] =
     AttrPoints.map { case (points, attr, re) => (points, attr, re.pattern) }
-
-  /** Indices (into AttrPoints) of the `attr` rules matching `value`. */
-  private[kernel] def pointMatches(attr: String, value: String): Array[Int] =
-    PointAttrs.find(_.attr == attr).fold(Array.emptyIntArray)(_.matches(value))
-
-  /** Does any `attr` strip rule match `value`? */
-  private[kernel] def stripMatches(attr: String, value: String): Boolean =
-    StripAttrs.exists(sa => sa.attr == attr && sa.matches(value))
 
   /** Per-document evaluation context (hit counter; match memos are global). */
   final class Ctx {

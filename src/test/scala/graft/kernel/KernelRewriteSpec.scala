@@ -261,12 +261,10 @@ class KernelRewriteSpec extends AnyFunSuite {
   test("hyphenation memo: words with one hash, length and first char each hyphenate as themselves") {
     // "Aa" and "BB" have the same String hash, so these 8 words share a
     // memo slot and differ only inside: a probe that compared less than
-    // the whole range would hand one word another's hyphenation. At 19
-    // chars they are too long to pack, so the probe is by hash.
+    // the whole range would hand one word another's hyphenation.
     val words = for (a <- Seq("Aa", "BB"); b <- Seq("Aa", "BB"); c <- Seq("Aa", "BB"))
       yield s"under$a$b${c}standing"
     assert(words.map(_.hashCode).distinct.size == 1)
-    assert(words.forall(_.length > Hyphenate.MaxPackedWord))
     val text = (words ++ words.reverse ++ words).mkString(" ")
     val sb = new StringBuilder
     Munge.serializeHyphenated(HtmlParser.parse(s"<p>$text</p>").find("p"), sb)
@@ -293,10 +291,10 @@ class KernelRewriteSpec extends AnyFunSuite {
     sb.toString
   }
 
-  /** Names of every shape the intern table meets: mixed case, ≤9 and
-    * >9 chars, non-ASCII, digits and dashes, and long runs over a
-    * two-letter alphabet, which differ only in a char that a short pack
-    * would drop.
+  /** Names of every shape the intern table meets: mixed case, short and
+    * long, non-ASCII, digits and dashes, and long runs over a two-letter
+    * alphabet, which often share a slot and a length and differ in one
+    * char.
     */
   private val genName: Gen[String] = Gen.frequency(
     6 -> Gen.oneOf("div", "DIV", "Div", "p", "P", "a", "A", "br", "BR", "img", "input",
@@ -376,7 +374,7 @@ class KernelRewriteSpec extends AnyFunSuite {
 
   /** Text with every whitespace kind `Py.isSpace` knows, entity-looking
     * runs (which survive parsing as "&amp;amp;"), escapable chars inside
-    * words, and words of every length the memo packs or does not.
+    * words, and short and long words, ASCII or not.
     */
   private val genProse: Gen[String] = Gen.listOf(Gen.oneOf(
     "a", "word", "words", "hyphenation", "extraordinary", "internationalization",
@@ -426,7 +424,7 @@ class KernelRewriteSpec extends AnyFunSuite {
       "/social/qm.gif", "smilies", "display", ":", "none", "display : none", "DISPLAY:NONE",
       "abcdefghijklmnopqrstuvwxyz0123456789a#0123456789012345")).map(_.mkString),
     1 -> Gen.alphaNumStr,
-    1 -> Gen.listOfN(40, Gen.oneOf("share ", "side ", "x ")).map(_.mkString)) // > 256 chars
+    1 -> Gen.listOfN(130, Gen.oneOf("share ", "side ", "x ")).map(_.mkString)) // > 256 chars
 
   private val RuleAttrs = (Patterns.AttrPoints.map(_._2) ++ Patterns.AttrStrip.map(_._1)).distinct :+ "other"
 
@@ -435,7 +433,9 @@ class KernelRewriteSpec extends AnyFunSuite {
       RuleAttrs.forall { attr =>
         val exp = (KernelOracles.pointMatches(attr, v).toSeq, KernelOracles.stripMatches(attr, v))
         // twice: the first call may fill the memo, the second reads it
-        Seq.fill(2)((Patterns.pointMatches(attr, v).toSeq, Patterns.stripMatches(attr, v)))
+        Seq.fill(2)((
+          Patterns.PointAttrs.find(_.attr == attr).fold(Seq.empty[Int])(_.matches(v).toSeq),
+          Patterns.StripAttrs.exists(sa => sa.attr == attr && sa.matches(v))))
           .forall(_ == exp)
       } :| v
     }, tests = 20000, seed = 52L)
