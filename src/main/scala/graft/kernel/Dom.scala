@@ -12,8 +12,8 @@ import scala.collection.mutable
   * Node kinds: Elem (bs4 Tag), Text (NavigableString), Comment, RawText
   * (script/style contents — serialized unescaped), Directive (<!...>),
   * ProcIn (<?...>). `.text` includes Text and RawText but not Comment /
-  * Directive / ProcIn (bs4 4.9+ get_text semantics); findTexts (bs4
-  * findAll(text=True)) includes ALL string nodes, comments too — the
+  * Directive / ProcIn (bs4 4.9+ get_text semantics); bs4
+  * findAll(text=True) returns ALL string nodes, comments too — the
   * reference relies on this in CommentStrip (util.py:94-97) and hyphenation
   * (clean.py:224).
   */
@@ -30,29 +30,6 @@ sealed abstract class DNode {
       parent = null
     }
     this
-  }
-
-  def replaceWith(n: DNode): Unit = {
-    val p = parent
-    if (p == null) return
-    val i = p.children.indexWhere(_ eq this)
-    n.extract()
-    p.children(i) = n
-    n.parent = p
-    parent = null
-  }
-
-  def previousSibling: DNode = {
-    if (parent == null) return null
-    val i = parent.children.indexWhere(_ eq this)
-    if (i > 0) parent.children(i - 1) else null
-  }
-
-  def nextSibling: DNode = {
-    if (parent == null) return null
-    val i = parent.children.indexWhere(_ eq this)
-    if (i >= 0 && i + 1 < parent.children.length) parent.children(i + 1)
-    else null
   }
 
   /** Ancestors, nearest first (bs4 .parents — includes the document root). */
@@ -76,7 +53,7 @@ sealed abstract class DNode {
 class Text(var data: String) extends DNode {
   /** Included in .text? (plain text and raw text yes; comments etc. no) */
   def visible: Boolean = true
-  def serialize(sb: StringBuilder): Unit = Dom.escapeText(data, sb)
+  def serialize(sb: StringBuilder): Unit = Dom.escape(data, 0, data.length, false, sb)
 }
 
 final class RawText(d: String) extends Text(d) {
@@ -254,7 +231,7 @@ class Elem(var name: String) extends DNode {
   }
 
   /** bs4 findAll(pred): descendant elems matching, doc (pre-)order.
-    * Direct recursive fill into one buffer — this and find/findTexts are
+    * Direct recursive fill into one buffer — this and find are
     * called once per pass per document, and the former
     * iterator+collect+List chain was a measurable allocation source.
     */
@@ -304,25 +281,6 @@ class Elem(var name: String) extends DNode {
 
   /** Direct child text nodes (findAll(text=True, recursive=False)). */
   def childTexts: Seq[Text] = children.collect { case t: Text => t }.toSeq
-
-  /** bs4 findAll(text=True): ALL string-node descendants incl. comments. */
-  def findTexts: collection.Seq[Text] = {
-    val out = new mutable.ArrayBuffer[Text]
-    def rec(e: Elem): Unit = {
-      val cs = e.children
-      var i = 0
-      while (i < cs.length) {
-        cs(i) match {
-          case c: Elem => rec(c)
-          case t: Text => out += t
-          case _       =>
-        }
-        i += 1
-      }
-    }
-    rec(this)
-    out
-  }
 
   /** bs4 Tag.text / get_text(): visible strings concatenated. */
   def text: String = {
@@ -414,29 +372,46 @@ class Elem(var name: String) extends DNode {
     before.reverseIterator.filter(e => !e.isDocument).toSeq
   }
 
-  def serialize(sb: StringBuilder): Unit = {
-    if (isDocument) { children.foreach(_.serialize(sb)); return }
-    sb.append('<').append(name)
-    attrs.foreachEntry { (k, v) =>
-      sb.append(' ').append(k)
-      if (k == "score" && hasScore) {
-        sb.append("=\"").append(Py.floatRepr(score)).append('"')
-      } else if (v != null) {
-        sb.append("=\"")
-        Dom.escapeAttr(v, sb)
-        sb.append('"')
+  def serialize(sb: StringBuilder): Unit = serializeWith(sb, false, Dom.NodeText)
+
+  /** Writes this element: start tag, attrs (a float score in Python's
+    * repr), `/>` when it is void and empty, else its children and end tag;
+    * the document root writes only its children. Every string node below
+    * goes to `text`, told whether a `<pre>` is above it; `inPre` says
+    * whether one is above this element.
+    */
+  private[kernel] def serializeWith(sb: StringBuilder, inPre: Boolean, text: TextWriter): Unit = {
+    val tagged = !isDocument
+    if (tagged) {
+      sb.append('<').append(name)
+      attrs.foreachEntry { (k, v) =>
+        sb.append(' ').append(k)
+        if (k == "score" && hasScore) {
+          sb.append("=\"").append(Py.floatRepr(score)).append('"')
+        } else if (v != null) {
+          sb.append("=\"")
+          Dom.escape(v, 0, v.length, true, sb)
+          sb.append('"')
+        }
       }
-    }
-    if (Dom.VoidElements.contains(name) && children.isEmpty) {
-      sb.append("/>")
-    } else {
+      if (children.isEmpty && Dom.VoidElements.contains(name)) { sb.append("/>"); return }
       sb.append('>')
-      var i = 0
-      while (i < children.length) { children(i).serialize(sb); i += 1 }
-      sb.append("</").append(name).append('>')
     }
+    val childPre = inPre || name == "pre"
+    var i = 0
+    while (i < children.length) {
+      children(i) match {
+        case e: Elem => e.serializeWith(sb, childPre, text)
+        case t: Text => text.write(t, childPre, sb)
+      }
+      i += 1
+    }
+    if (tagged) sb.append("</").append(name).append('>')
   }
 }
+
+/** How [[Elem.serializeWith]] writes a string node; `inPre`: a `<pre>` is above it. */
+private[kernel] trait TextWriter { def write(t: Text, inPre: Boolean, sb: StringBuilder): Unit }
 
 /** The parse root. It records the comment nodes the parser attached, so
   * [[Extract.commentStrip]] removes them without walking the tree.
@@ -461,44 +436,29 @@ object Dom {
 
   def newDocument(): Document = new Document
 
-  /** bs4 minimal formatter: text escapes &, <, >. */
-  def escapeText(s: String, sb: StringBuilder): Unit =
-    escapeTextRange(s, 0, s.length, sb)
+  /** Each string node as its own kind writes itself. */
+  private[kernel] val NodeText: TextWriter = (t, _, sb) => t.serialize(sb)
 
-  /** Range form — lets callers escape a slice without the substring. */
-  def escapeTextRange(s: String, start: Int, until: Int, sb: StringBuilder): Unit = {
-    var i = start
-    var from = start // clean-run start; bulk-append runs between escapes
+  /** bs4's minimal formatter over `s[from, until)`: `&`, `<` and `>`
+    * escape, and `"` too in an attribute value (`quote`).
+    */
+  def escape(s: String, from: Int, until: Int, quote: Boolean, sb: StringBuilder): Unit = {
+    var i = from
+    var run = from // clean-run start; bulk-append runs between escapes
     while (i < until) {
       val c = s.charAt(i)
-      if (c == '&' || c == '<' || c == '>') {
-        if (i > from) sb.underlying.append(s, from, i)
-        sb.append(if (c == '&') "&amp;" else if (c == '<') "&lt;" else "&gt;")
-        from = i + 1
-      }
-      i += 1
-    }
-    if (until > from) sb.underlying.append(s, from, until)
-  }
-
-  /** Attribute values additionally escape the quote. */
-  def escapeAttr(s: String, sb: StringBuilder): Unit = {
-    val n = s.length
-    var i = 0
-    var from = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '&' || c == '<' || c == '>' || c == '"') {
-        if (i > from) sb.underlying.append(s, from, i)
+      // all four escapable chars sort at or below '>', letters above it
+      if (c <= '>' && (c == '&' || c == '<' || c == '>' || (quote && c == '"'))) {
+        if (i > run) sb.underlying.append(s, run, i)
         sb.append(
           if (c == '&') "&amp;"
           else if (c == '<') "&lt;"
           else if (c == '>') "&gt;"
           else "&quot;")
-        from = i + 1
+        run = i + 1
       }
       i += 1
     }
-    if (n > from) sb.underlying.append(s, from, n)
+    if (until > run) sb.underlying.append(s, run, until)
   }
 }

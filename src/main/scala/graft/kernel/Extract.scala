@@ -13,7 +13,7 @@ object Extract {
     * _Munge returns strings as-is (clean.py:195-197).
     */
   sealed trait Selected
-  final case class SelNode(node: DNode) extends Selected
+  final case class SelNode(node: Elem) extends Selected
   final case class SelStr(s: String) extends Selected
 
   final case class Result(soup: Elem, selected: Selected)
@@ -160,10 +160,7 @@ object Extract {
 
     // _TransformBrsToParagraphs is a no-op in the pinned reference
     // environment (extract_content.py:164 reads a nonexistent property —
-    // SURVEY.md §0.1); intentionally not applied. The INTENDED transform
-    // is preserved as `transformBrsToParagraphsIntended` below with a
-    // documentation fixture (CleanSpec "C14 intended br->p transform") —
-    // wire it here iff upstream ever fixes `next_tagSibling`.
+    // SURVEY.md §0.1); intentionally not applied.
 
     Patterns.process(soup, url)
     siteSpecific(url, soup)
@@ -183,60 +180,6 @@ object Extract {
 
     transformDivsToPs(best)
     Result(soup, SelNode(best))
-  }
-
-  /** Stop tags for the intended br→p gather (util.py:44-47:
-    * TAG_NAMES_BLOCK ∪ TAG_NAMES_HEADER ∪ {br}).
-    */
-  private val BrToPStopTags = Set(
-    "blockquote", "div", "li", "p", "pre", "td", "th",
-    "h1", "h2", "h3", "h4", "h5", "h6", "br")
-
-  /** The INTENDED _TransformBrsToParagraphs (extract_content.py:156-190)
-    * — DISABLED in the pipeline, kept as executable documentation
-    * (VERDICT r03 task 7). In the pinned reference the pass never fires:
-    * line 164 walks `next_tagSibling`, a property that does not exist on
-    * bs4 tags, so the sibling scan returns None on its first step and
-    * every call is a no-op; the engine preserves that no-op for byte
-    * parity (C14, SURVEY.md §0.1). If upstream ever fixed the property
-    * to `nextSibling`, the reference WOULD do this: a <br> followed
-    * (across whitespace-only text nodes) by another <br> marks a
-    * paragraph break — the siblings before the first <br> back to the
-    * nearest block/header/br boundary move into a fresh <p> that
-    * replaces it, and the second <br> is stripped.
-    */
-  def transformBrsToParagraphsIntended(soup: Elem): Unit =
-    for (tag <- soup.findAll("br")) transformBrsInner(tag)
-
-  private def transformBrsInner(tag: Elem): Unit = {
-    if (tag.parent == null) return // stripped by an earlier pair
-    // scan forward for the partner <br>: whitespace-only text continues
-    // the scan, anything else aborts (extract_content.py:162-176)
-    var next: DNode = tag
-    var partner: Elem = null
-    while (partner == null) {
-      next = next.nextSibling
-      next match {
-        case null => return
-        case e: Elem => if (e.name == "br") partner = e else return
-        case t: Text => if (t.data.trim.nonEmpty) return
-      }
-    }
-    // gather preceding siblings up to the nearest stop tag
-    // (extract_content.py:178-183; NavigableStrings never stop the walk)
-    var contents = List.empty[DNode]
-    var prev = tag.previousSibling
-    var stop = false
-    while (prev != null && !stop) {
-      prev match {
-        case e: Elem if BrToPStopTags(e.name) => stop = true
-        case n => val p = n.previousSibling; contents ::= n; prev = p
-      }
-    }
-    val newp = new Elem("p")
-    contents.zipWithIndex.foreach { case (n, i) => newp.insert(i, n) }
-    partner.extract()
-    tag.replaceWith(newp)
   }
 
   /** extract_content.py:119-130 */

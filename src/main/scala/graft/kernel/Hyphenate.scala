@@ -1,7 +1,5 @@
 package graft.kernel
 
-import scala.collection.mutable
-
 /** Knuth-Liang hyphenation — algorithmic port of the `hyphenate` 1.1.0 module
   * the reference munge pipeline uses (clean.py:223-241, M11 in SURVEY.md
   * §2.7): TeX hyphenation points from letter patterns, exceptions list, words
@@ -444,12 +442,12 @@ object Hyphenate {
       |re-cog-ni-zance ref-or-ma-tion ret-ri-bu-tion ta-ble""".stripMargin
 
   // Pattern trie: node = children map + optional points array.
-  private final class TrieNode {
+  private[kernel] final class TrieNode {
     val children = new java.util.HashMap[Char, TrieNode]()
     var points: Array[Int] = _
   }
 
-  private val root: TrieNode = {
+  private[kernel] val root: TrieNode = {
     val r = new TrieNode
     for (pat <- patterns.split("\\s+") if pat.nonEmpty) {
       val chars = pat.filterNot(c => c >= '0' && c <= '9')
@@ -475,7 +473,7 @@ object Hyphenate {
     r
   }
 
-  private val exceptionMap: Map[String, Array[Int]] = {
+  private[kernel] val exceptionMap: Map[String, Array[Int]] = {
     exceptions.split("\\s+").filter(_.nonEmpty).map { ex =>
       val word = ex.replace("-", "")
       // [0] + [int(h == '-') for h in re.split(r'[a-z]', ex)]
@@ -490,28 +488,26 @@ object Hyphenate {
     }.toMap
   }
 
+  /** U+00AD soft hyphen — the join separator clean.py:241 uses. */
+  val Shy = "­"
+
   // Pure-function memo: web text is Zipfian, so the same words hyphenate
   // over and over — profiled at ~1 µs/word uncached, the hyphenation pass
   // was ~30% of total kernel time on realistic pages. Keyed on the exact
-  // (case-sensitive) token; results are immutable and safe to share
-  // across Spark task threads. Size-capped; giant tokens skip the cache.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  // (case-sensitive) word; results are immutable and safe to share across
+  // Spark task threads. Size-capped; giant words skip it.
+  private val shyCache =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val MaxCacheEntries = 1 << 18
   private val MaxCachedWordLen = 48
 
-  /** hyphenate.hyphenate_word: pieces of `word` between legal break points. */
-  def hyphenateWord(word: String): Seq[String] = {
-    if (word.length <= 4) return Seq(word)
-    val cached = cache.get(word)
+  /** `"­".join(hyphenate.hyphenate_word(word))`: `word` with a soft
+    * hyphen at each legal break point.
+    */
+  def hyphenateWordShy(word: String): String = {
+    if (word.length <= 4) return word
+    val cached = shyCache.get(word)
     if (cached != null) return cached
-    val res = computeHyphenation(word)
-    if (word.length <= MaxCachedWordLen && cache.size < MaxCacheEntries)
-      cache.put(word, res)
-    res
-  }
-
-  private def computeHyphenation(word: String): Seq[String] = {
     val lower = word.toLowerCase(java.util.Locale.ROOT)
     val points: Array[Int] = exceptionMap.get(lower) match {
       case Some(p) => p
@@ -546,40 +542,18 @@ object Hyphenate {
         pts(pts.length - 2) = 0; pts(pts.length - 3) = 0
         pts
     }
-    val pieces = mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
+    // zip(word, points[2:]): a soft hyphen after each char whose point is
+    // odd. points has len(lower)+2 or +3 entries, which covers `word`
+    // unless lowering shortened it; any remainder is kept unsplit.
+    val sb = new java.lang.StringBuilder(word.length + 8)
     var i = 0
     while (i < word.length && i + 2 < points.length) {
-      cur.append(word.charAt(i))
-      if (points(i + 2) % 2 == 1) { pieces += cur.toString; cur.clear() }
+      sb.append(word.charAt(i))
+      if (points(i + 2) % 2 == 1) sb.append(Shy)
       i += 1
     }
-    // zip(word, points[2:]) stops at the shorter; trailing chars of `word`
-    // beyond points are dropped by zip in Python — points is always long
-    // enough (len(word)+2 or +3), so append any remainder defensively.
-    while (i < word.length) {
-      cur.append(word.charAt(i))
-      i += 1
-    }
-    pieces += cur.toString
-    pieces.toSeq
-  }
-
-  /** U+00AD soft hyphen — the join separator clean.py:241 uses. */
-  val Shy = "­"
-
-  // Joined-form memo (word -> pieces.mkString(SHY)): the munge pass only
-  // ever needs the joined string, so caching it skips the per-word Seq +
-  // mkString allocation on every repeat (Zipfian text → >95% hit rate).
-  private val shyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** `hyphenateWord(word).mkString(Shy)` with its own memo. */
-  def hyphenateWordShy(word: String): String = {
-    if (word.length <= 4) return word
-    val cached = shyCache.get(word)
-    if (cached != null) return cached
-    val res = hyphenateWord(word).mkString(Shy)
+    sb.append(word, i, word.length)
+    val res = sb.toString
     if (word.length <= MaxCachedWordLen && shyCache.size < MaxCacheEntries)
       shyCache.put(word, res)
     res
@@ -629,7 +603,7 @@ object Hyphenate {
       val plain = hyphenateWordShy(word)
       val escaped =
         if (!esc) plain
-        else { val sb = new StringBuilder(plain.length + 8); Dom.escapeText(plain, sb); sb.toString }
+        else { val sb = new StringBuilder(plain.length + 8); Dom.escape(plain, 0, plain.length, false, sb); sb.toString }
       memo.keys(idx) = word
       memo.escaped(idx) = escaped
       out.append(escaped)

@@ -1,7 +1,6 @@
 package graft.kernel
 
 import java.util.regex.Pattern
-import scala.collection.mutable
 
 /** Post-selection cleanup — port of the reference's readability/clean.py
   * munge pipeline (M1-M13, SURVEY.md §2.7). Pass order is normative
@@ -30,32 +29,28 @@ object Munge {
   def munge(soup: Elem, selected: Extract.Selected, url: String): String = {
     selected match {
       case Extract.SelStr(s) => s
-      case Extract.SelNode(node) =>
-        node match {
-          case tag0: Elem =>
-            var tag = tag0
-            mungeStripSiteSpecific(tag, url)
-            mungeStripBrsAfterPs(tag)
-            mungeStripRules(tag)
-            mungeStripEmpties(tag)
-            tag = mungeStripRootContainers(tag)
-            mungeStripLowScored(tag)
-            mungeStripAttrs(tag)
-            fixUrls(tag, url)
-            mungeImages(tag)
-            mungeHeaderDowngrade(tag)
-            mungeNoscript(tag)
-            // M11+M13 fused: hyphenation applied at serialize time (no
-            // findTexts pass, no per-node replaceWith) — byte-equivalent
-            // to hyphenate-then-serialize, spec'd in MungeSpec and
-            // KernelRewriteSpec.
-            // Presized buffer: the default 16-char builder doubles ~10
-            // times for a typical article (repeated array copies).
-            val sb = new StringBuilder(1 << 14)
-            serializeHyphenated(tag, sb)
-            sb.toString
-          case t => t.serialized // text selection (defensive)
-        }
+      case Extract.SelNode(tag0) =>
+        var tag = tag0
+        mungeStripSiteSpecific(tag, url)
+        mungeStripBrsAfterPs(tag)
+        mungeStripRules(tag)
+        mungeStripEmpties(tag)
+        tag = mungeStripRootContainers(tag)
+        mungeStripLowScored(tag)
+        mungeStripAttrs(tag)
+        fixUrls(tag, url)
+        mungeImages(tag)
+        mungeHeaderDowngrade(tag)
+        mungeNoscript(tag)
+        // M11+M13 fused: hyphenation applied at serialize time (no
+        // pass rewriting text nodes in place) — byte-equivalent to
+        // hyphenate-then-serialize, spec'd in MungeSpec and
+        // KernelRewriteSpec.
+        // Presized buffer: the default 16-char builder doubles ~10
+        // times for a typical article (repeated array copies).
+        val sb = new StringBuilder(1 << 14)
+        serializeHyphenated(tag, sb)
+        sb.toString
     }
   }
 
@@ -253,7 +248,7 @@ object Munge {
       val entityEnd = if (c == '&') entityEndAt(s, i) else -1
       if (entityEnd > 0) {
         if (wordStart >= 0) { appendWord(s, wordStart, i, h, esc, out, memo); wordStart = -1 }
-        Dom.escapeTextRange(s, i, entityEnd, out)
+        Dom.escape(s, i, entityEnd, false, out)
         inWs = false // the next part starts
         i = entityEnd
       } else {
@@ -288,7 +283,7 @@ object Munge {
       s: String, from: Int, until: Int, h: Int, esc: Boolean,
       out: StringBuilder, memo: Hyphenate.RangeMemo): Unit =
     if (until - from > 4) Hyphenate.appendHyphenatedEscaped(memo, s, from, until, h, esc, out)
-    else if (esc) Dom.escapeTextRange(s, from, until, out)
+    else if (esc) Dom.escape(s, from, until, false, out)
     // bulk java append — the (s, from, until) overload on the SCALA
     // StringBuilder auto-tuples (appends "(s,from,until)" literally)
     else out.underlying.append(s, from, until)
@@ -297,60 +292,20 @@ object Munge {
   def mungeNoscript(root: Elem): Unit =
     for (tag <- root.findAll("noscript")) tag.name = "div"
 
-  // ---- M11+M13 fusion ------------------------------------------------
-  // Serialize with hyphenation applied on the fly.  Byte-equivalent to
-  // hyphenating every text node in place (the reference's M11 pass)
-  // followed by `root.serialize`, replicating the reference quirks that
-  // two-pass order encodes:
-  //  - EVERY string node outside <pre> (plain Text, but also Comment,
-  //    RawText and Directive/ProcIn — bs4 findAll(text=True) returns all
-  //    NavigableStrings) is coerced to plain text, hyphenated, and
-  //    serialized ESCAPED;
-  //  - string nodes with a <pre> ancestor (including ancestors ABOVE the
-  //    selection root) keep their original node-type serialization.
-  // The element branch must stay in lockstep with Elem.serialize
-  // (score-attr float repr, void handling).
-
-  /** Serialize `root` into `sb` with M11 hyphenation fused in. */
-  def serializeHyphenated(root: Elem, sb: StringBuilder): Unit =
-    serializeHyphElem(root, sb, root.findParent(PreOnly) != null, Hyphenate.rangeMemo())
-
-  private def serializeHyphElem(
-      e: Elem, sb: StringBuilder, inPre: Boolean, memo: Hyphenate.RangeMemo): Unit = {
-    if (e.isDocument) {
-      val cs = e.children
-      var i = 0
-      while (i < cs.length) { serializeHyphNode(cs(i), sb, inPre, memo); i += 1 }
-      return
-    }
-    sb.append('<').append(e.name)
-    e.attrs.foreachEntry { (k, v) =>
-      sb.append(' ').append(k)
-      if (k == "score" && e.hasScore) {
-        sb.append("=\"").append(Py.floatRepr(e.score)).append('"')
-      } else if (v != null) {
-        sb.append("=\"")
-        Dom.escapeAttr(v, sb)
-        sb.append('"')
-      }
-    }
-    if (Dom.VoidElements.contains(e.name) && e.children.isEmpty) {
-      sb.append("/>")
-    } else {
-      sb.append('>')
-      val childPre = inPre || e.name == "pre"
-      val cs = e.children
-      var i = 0
-      while (i < cs.length) { serializeHyphNode(cs(i), sb, childPre, memo); i += 1 }
-      sb.append("</").append(e.name).append('>')
-    }
-  }
-
-  private def serializeHyphNode(
-      n: DNode, sb: StringBuilder, inPre: Boolean, memo: Hyphenate.RangeMemo): Unit = n match {
-    case el: Elem => serializeHyphElem(el, sb, inPre, memo)
-    case t: Text =>
-      if (inPre) t.serialize(sb) // hyphenate pass skips pre-descendants
-      else appendHyphenatedText(t.data, sb, memo)
+  /** Serialize `root` into `sb` with M11 hyphenation fused in.
+    * Byte-equivalent to hyphenating every text node in place (the
+    * reference's M11 pass) followed by `root.serialize`, replicating the
+    * reference quirks that two-pass order encodes:
+    *  - EVERY string node outside <pre> (plain Text, but also Comment,
+    *    RawText and Directive/ProcIn — bs4 findAll(text=True) returns all
+    *    NavigableStrings) is coerced to plain text, hyphenated, and
+    *    serialized ESCAPED;
+    *  - string nodes with a <pre> ancestor (including ancestors ABOVE the
+    *    selection root) keep their original node-type serialization.
+    */
+  def serializeHyphenated(root: Elem, sb: StringBuilder): Unit = {
+    val memo = Hyphenate.rangeMemo()
+    root.serializeWith(sb, root.findParent(PreOnly) != null, (t, inPre, out) =>
+      if (inPre) t.serialize(out) else appendHyphenatedText(t.data, out, memo))
   }
 }

@@ -616,7 +616,7 @@ object Patterns {
   }
 
   /** patterns.py:385-418 — returns true if the subtree was stripped. */
-  def stripTest(tag: Elem, ctx: Ctx): Boolean = {
+  def stripTest(tag: Elem): Boolean = {
     if (DoNotStripTags.contains(tag.name)) return false
 
     if (StripTags.contains(tag.name)) {
@@ -677,7 +677,7 @@ object Patterns {
     root.setAttr("classid", classid)
 
     score(root, url, ctx)
-    if (stripTest(root, ctx)) return
+    if (stripTest(root)) return
     // snapshot the child ELEMS before recursing (the reference iterates a
     // bs4 findAll result list: a child stripping itself must not shift
     // its next sibling out of the iteration) — flat array, not the

@@ -10,23 +10,6 @@ class CleanSpec extends AnyFunSuite {
   private def clean(url: String, html: String): Clean.Cleaned =
     Clean.clean(url, html.getBytes(StandardCharsets.UTF_8))
 
-  test("C14 intended br->p transform — documentation fixture (extract_content.py:156-190)") {
-    // The pipeline deliberately does NOT run this pass: in the pinned
-    // reference `next_tagSibling` (extract_content.py:164) doesn't exist
-    // on bs4 tags, so the pass is a no-op there, and the 222 goldens pin
-    // the engine to that no-op. This fixture documents what the
-    // reference WOULD do if upstream fixed the property (VERDICT r03
-    // task 7): br+br = paragraph break.
-    val soup = HtmlParser.parse(
-      "<html><body><div><p>head</p>intro text<br>\n<br>second run<br>tail</div></body></html>")
-    Extract.transformBrsToParagraphsIntended(soup)
-    val div = soup.find("div")
-    val out = div.serialized
-    // the br+br pair became a <p> holding the gathered run (gather
-    // stopped at the <p> block boundary); the lone third br is untouched
-    assert(out == "<div><p>head</p><p>intro text</p>\nsecond run<br/>tail</div>", out)
-  }
-
   test("east-asian no-meta discrimination: SJIS / GBK / EUC-KR / cp1252 (VERDICT r03 task 5)") {
     def body(s: String) = s"<html><body><p>$s</p></body></html>"
     val jp = body("これは日本語のテストです記事本文")

@@ -50,7 +50,7 @@ class DomSpec extends AnyFunSuite {
     val doc = parse("<div>a<!-- note -->b</div>")
     val div = doc.find("div")
     assert(div.text == "ab")
-    assert(div.findTexts.exists(_.isInstanceOf[Comment]))
+    assert(KernelOracles.findTexts(div).exists(_.isInstanceOf[Comment]))
     assert(doc.serialized == "<div>a<!-- note -->b</div>")
     Extract.commentStrip(doc)
     assert(doc.serialized == "<div>ab</div>")

@@ -12,7 +12,11 @@ import scala.collection.mutable
   *  - [[mungeHyphenate]]: M11 as its own pass, rewriting text nodes in
   *    place before `serialize` escapes them;
   *  - [[pointMatches]] and [[stripMatches]]: one regex find per rule per
-  *    node, with no memo.
+  *    node, with no memo;
+  *  - [[serialize]]: the element serializer with its own escape loops,
+  *    before the plain and the hyphenating serializer shared one;
+  *  - [[hyphenateWord]]: hyphenation as a list of pieces between break
+  *    points (without its memo), which callers joined with soft hyphens.
   */
 object KernelOracles {
 
@@ -383,9 +387,28 @@ object KernelOracles {
     }
   }
 
+  /** bs4 findAll(text=True): ALL string-node descendants incl. comments. */
+  def findTexts(root: Elem): collection.Seq[Text] = {
+    val out = new mutable.ArrayBuffer[Text]
+    def rec(e: Elem): Unit = {
+      val cs = e.children
+      var i = 0
+      while (i < cs.length) {
+        cs(i) match {
+          case c: Elem => rec(c)
+          case t: Text => out += t
+          case _       =>
+        }
+        i += 1
+      }
+    }
+    rec(root)
+    out
+  }
+
   /** util.py:94-97, as a walk over every text node. */
   def commentStrip(soup: Elem): Unit =
-    for (t <- soup.findTexts if t.isInstanceOf[Comment]) t.extract()
+    for (t <- findTexts(soup) if t.isInstanceOf[Comment]) t.extract()
 
   private val PreOnly = Set("pre")
 
@@ -395,7 +418,7 @@ object KernelOracles {
     * non-generic paths where comments survive).
     */
   def mungeHyphenate(root: Elem): Unit = {
-    for (text <- root.findTexts) {
+    for (text <- findTexts(root)) {
       if (text.findParent(PreOnly) == null) {
         val s = text.data
         val out = hyphenateRun(s)
@@ -403,9 +426,19 @@ object KernelOracles {
         // (Comment/RawText) must still be downgraded to plain Text — the
         // reference's unicode() coercion changes their serialization
         if (out != s || text.getClass != classOf[Text])
-          text.replaceWith(new Text(out))
+          replaceWith(text, new Text(out))
       }
     }
+  }
+
+  private def replaceWith(old: DNode, n: DNode): Unit = {
+    val p = old.parent
+    if (p == null) return
+    val i = p.children.indexWhere(_ eq old)
+    n.extract()
+    p.children(i) = n
+    n.parent = p
+    old.parent = null
   }
 
   /** `re.split(r'(&[^;]{2,6};)')` with captured separators, entity parts
@@ -469,4 +502,138 @@ object KernelOracles {
   /** Does some `attr` rule of AttrStrip find a match in `value`? */
   def stripMatches(attr: String, value: String): Boolean =
     Patterns.AttrStrip.exists { case (a, re) => a == attr && re.matcher(value).find() }
+
+  /** `e.serialized` as the element serializer wrote it: elements
+    * recurse here, plain text escapes with [[escapeText]], and every
+    * other string node writes itself.
+    */
+  def serialized(e: Elem): String = {
+    val sb = new StringBuilder; serialize(e, sb); sb.toString
+  }
+
+  private def serialize(e: Elem, sb: StringBuilder): Unit = {
+    def child(n: DNode): Unit = n match {
+      case c: Elem                                => serialize(c, sb)
+      case t: Text if t.getClass == classOf[Text] => escapeText(t.data, sb)
+      case t                                      => t.serialize(sb)
+    }
+    if (e.isDocument) { e.children.foreach(child); return }
+    sb.append('<').append(e.name)
+    e.attrs.foreachEntry { (k, v) =>
+      sb.append(' ').append(k)
+      if (k == "score" && e.hasScore) {
+        sb.append("=\"").append(Py.floatRepr(e.score)).append('"')
+      } else if (v != null) {
+        sb.append("=\"")
+        escapeAttr(v, sb)
+        sb.append('"')
+      }
+    }
+    if (Dom.VoidElements.contains(e.name) && e.children.isEmpty) {
+      sb.append("/>")
+    } else {
+      sb.append('>')
+      var i = 0
+      while (i < e.children.length) { child(e.children(i)); i += 1 }
+      sb.append("</").append(e.name).append('>')
+    }
+  }
+
+  /** bs4 minimal formatter: text escapes &, <, >. */
+  def escapeText(s: String, sb: StringBuilder): Unit = {
+    var i = 0
+    var from = 0 // clean-run start; bulk-append runs between escapes
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '&' || c == '<' || c == '>') {
+        if (i > from) sb.underlying.append(s, from, i)
+        sb.append(if (c == '&') "&amp;" else if (c == '<') "&lt;" else "&gt;")
+        from = i + 1
+      }
+      i += 1
+    }
+    if (s.length > from) sb.underlying.append(s, from, s.length)
+  }
+
+  /** Attribute values additionally escape the quote. */
+  def escapeAttr(s: String, sb: StringBuilder): Unit = {
+    val n = s.length
+    var i = 0
+    var from = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c == '&' || c == '<' || c == '>' || c == '"') {
+        if (i > from) sb.underlying.append(s, from, i)
+        sb.append(
+          if (c == '&') "&amp;"
+          else if (c == '<') "&lt;"
+          else if (c == '>') "&gt;"
+          else "&quot;")
+        from = i + 1
+      }
+      i += 1
+    }
+    if (n > from) sb.underlying.append(s, from, n)
+  }
+
+  /** hyphenate.hyphenate_word: pieces of `word` between legal break points. */
+  def hyphenateWord(word: String): Seq[String] = {
+    if (word.length <= 4) return Seq(word)
+    computeHyphenation(word)
+  }
+
+  private def computeHyphenation(word: String): Seq[String] = {
+    import Hyphenate.{exceptionMap, root}
+    val lower = word.toLowerCase(java.util.Locale.ROOT)
+    val points: Array[Int] = exceptionMap.get(lower) match {
+      case Some(p) => p
+      case None =>
+        val work = "." + lower + "."
+        val pts = new Array[Int](work.length + 1)
+        var i = 0
+        while (i < work.length) {
+          var t = root
+          var j = i
+          var continue = true
+          while (continue && j < work.length) {
+            val n = t.children.get(work.charAt(j))
+            if (n == null) continue = false
+            else {
+              t = n
+              if (t.points != null) {
+                val p = t.points
+                var k = 0
+                while (k < p.length) {
+                  if (p(k) > pts(i + k)) pts(i + k) = p(k)
+                  k += 1
+                }
+              }
+              j += 1
+            }
+          }
+          i += 1
+        }
+        // no hyphens in the first two or last two characters
+        pts(1) = 0; pts(2) = 0
+        pts(pts.length - 2) = 0; pts(pts.length - 3) = 0
+        pts
+    }
+    val pieces = mutable.ArrayBuffer.empty[String]
+    val cur = new StringBuilder
+    var i = 0
+    while (i < word.length && i + 2 < points.length) {
+      cur.append(word.charAt(i))
+      if (points(i + 2) % 2 == 1) { pieces += cur.toString; cur.clear() }
+      i += 1
+    }
+    // zip(word, points[2:]) stops at the shorter; trailing chars of `word`
+    // beyond points are dropped by zip in Python — points is always long
+    // enough (len(word)+2 or +3), so append any remainder defensively.
+    while (i < word.length) {
+      cur.append(word.charAt(i))
+      i += 1
+    }
+    pieces += cur.toString
+    pieces.toSeq
+  }
 }

@@ -17,8 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * cs)`), `Py.floatRepr` (precision search from the shortest decimal's
   * length), `HtmlParser.parse` with `Extract.commentStrip` (interned
   * names with their flags, text runs taken whole, recorded comments),
-  * `Munge.serializeHyphenated` (one scan per text node) and the memoized
-  * attribute rules of `Patterns`. Seeded, so a failure reproduces.
+  * `Munge.serializeHyphenated` (one scan per text node), `Elem.serialize`
+  * (one element writer and one escape loop for both serializers),
+  * `Hyphenate.hyphenateWordShy` (the joined form built from the break
+  * points) and the memoized attribute rules of `Patterns`. Seeded, so a
+  * failure reproduces.
   */
 class KernelRewriteSpec extends AnyFunSuite {
 
@@ -85,7 +88,7 @@ class KernelRewriteSpec extends AnyFunSuite {
     */
   private def textLenOracle(tag: Elem): Int = {
     val sb = new StringBuilder
-    for (t <- tag.findTexts) {
+    for (t <- KernelOracles.findTexts(tag)) {
       if (t.findParent(AOrScript) == null) {
         val s = t.data
         var a = 0
@@ -272,6 +275,48 @@ class KernelRewriteSpec extends AnyFunSuite {
     assert(sb.toString == expected.mkString("<p>", " ", "</p>"))
   }
 
+  // -------------------------------------------------------- hyphenation
+
+  /** The `hyphenate` module's exception words. */
+  private val ExceptionWords = Seq("associate", "associates", "declination", "obligatory",
+    "philanthropic", "present", "presents", "project", "projects", "reciprocity",
+    "recognizance", "reformation", "retribution", "table")
+
+  /** Syllable-like runs, so that patterns fire, with letters, digits,
+    * punctuation and non-ASCII chars, some of whose lower case is longer
+    * ('İ') or whose upper case is ('ß', 'ﬀ').
+    */
+  private val genWordPiece: Gen[String] = Gen.frequency(
+    8 -> Gen.oneOf("tion", "ex", "pre", "con", "ing", "ab", "st", "ph", "ly", "ment", "ous",
+      "hy", "phen", "er", "al", "ize", "a", "e", "i", "o", "u"),
+    2 -> Gen.alphaChar.map(_.toString),
+    1 -> Gen.oneOf("é", "ß", "İ", "ı", "漢", "ﬀ", "Σ", "'", "-", "1", "&", "."))
+
+  private def genWordOf(lo: Int, hi: Int): Gen[String] = for {
+    n <- Gen.choose(lo, hi)
+    pieces <- Gen.listOfN(hi, genWordPiece)
+  } yield pieces.mkString.take(n)
+
+  private def mixCase(w: String): Gen[String] = Gen.oneOf(
+    Gen.const(w), Gen.const(w.toUpperCase(java.util.Locale.ROOT)), Gen.const(w.capitalize),
+    Gen.listOfN(w.length, Gen.oneOf(true, false))
+      .map(up => w.zip(up).map { case (c, u) => if (u) c.toUpper else c }.mkString))
+
+  test("hyphenation: the joined form equals the old pieces joined with soft hyphens") {
+    // the memo keeps words of at most 48 chars, so both sides of it occur
+    val word = Gen.frequency(
+      2 -> genWordOf(1, 4), 6 -> genWordOf(5, 48), 2 -> genWordOf(49, 90),
+      2 -> Gen.oneOf(ExceptionWords)).flatMap(mixCase)
+    def same(w: String) = {
+      val exp = KernelOracles.hyphenateWord(w).mkString(Hyphenate.Shy)
+      // twice: the first call may fill the memo, the second reads it
+      Hyphenate.hyphenateWordShy(w) == exp && Hyphenate.hyphenateWordShy(w) == exp
+    }
+    check(Prop.forAllNoShrink(word)(w => same(w) :| w), tests = 20000, seed = 54L)
+    for (w <- ExceptionWords; v <- Seq(w, w.toUpperCase(java.util.Locale.ROOT), w.capitalize))
+      assert(same(v), v)
+  }
+
   // ---------------------------------------------------------- tokenizer
 
   /** Every node of a tree: its kind, name, attrs in order and data, so
@@ -403,8 +448,44 @@ class KernelRewriteSpec extends AnyFunSuite {
       val sb = new StringBuilder
       Munge.serializeHyphenated(ra, sb)
       KernelOracles.mungeHyphenate(rb)
-      (sb.toString == rb.serialized) :| html
+      (sb.toString == KernelOracles.serialized(rb)) :| html
     }, tests = 20000, seed = 51L)
+  }
+
+  /** Scores negative, fractional and integral, and ones Python writes
+    * in exponent form.
+    */
+  private val genScoreValue: Gen[Double] = Gen.oneOf(
+    genScore, genShortDecimal, Gen.choose(-50, 50).map(_.toDouble),
+    Gen.oneOf(-2.0, -1.5, -0.0, 0.0, 11.0, 1e16, 1e-5))
+
+  /** One edit to an element of a parsed tree: a score, an attr with
+    * `"`, `&`, `<` or `>` in its value, a bare attr, a string "score"
+    * attr, a void child with or without children, or a text child.
+    */
+  private val genEdit: Gen[Elem => Unit] = Gen.frequency(
+    3 -> genScoreValue.map(d => (e: Elem) => e.setScore(d)),
+    2 -> (for (n <- genAttrName; v <- genValue) yield (e: Elem) => e.setAttr(n, v)),
+    1 -> genAttrName.map(n => (e: Elem) => e.setAttr(n, null)),
+    1 -> genValue.map(v => (e: Elem) => e.setAttr("score", v)),
+    2 -> (for {
+      name <- Gen.oneOf(Dom.VoidElements.toSeq)
+      kids <- Gen.listOf(genValue)
+    } yield { (e: Elem) =>
+      val v = new Elem(name)
+      kids.foreach(k => v.append(new Text(k)))
+      e.append(v)
+    }),
+    2 -> genValue.map(v => (e: Elem) => e.append(new Text(v))))
+
+  test("serializer: Elem.serialize equals the old element serializer on edited tag soup") {
+    val edits = Gen.listOf(Gen.zip(Gen.choose(0, 1000), genEdit))
+    check(Prop.forAllNoShrink(genSoup, edits) { (html, es) =>
+      val doc = HtmlParser.parse(html)
+      val elems = elemsOf(doc)
+      for ((k, edit) <- es) edit(elems(k % elems.size))
+      elemsOf(doc).forall(e => e.serialized == KernelOracles.serialized(e)) :| html
+    }, tests = 10000, seed = 53L)
   }
 
   // --------------------------------------------- memoized attribute rules

@@ -104,15 +104,15 @@ class MungeSpec extends AnyFunSuite {
     assert(out.contains("hyphenation and newlines"))
     assert(out.contains("<pre>hyphenation  kept</pre>"))
     // ≤4-char words unsplit
-    assert(Hyphenate.hyphenateWord("word") == Seq("word"))
-    assert(Hyphenate.hyphenateWord("a") == Seq("a"))
+    assert(Hyphenate.hyphenateWordShy("word") == "word")
+    assert(Hyphenate.hyphenateWordShy("a") == "a")
   }
 
   test("M11: exception words") {
-    assert(Hyphenate.hyphenateWord("associate") == Seq("as", "so", "ciate"))
-    assert(Hyphenate.hyphenateWord("table") == Seq("ta", "ble"))
-    assert(Hyphenate.hyphenateWord("project") == Seq("project"))
-    assert(Hyphenate.hyphenateWord("present") == Seq("present"))
+    assert(Hyphenate.hyphenateWordShy("associate") == Seq("as", "so", "ciate").mkString(Hyphenate.Shy))
+    assert(Hyphenate.hyphenateWordShy("table") == Seq("ta", "ble").mkString(Hyphenate.Shy))
+    assert(Hyphenate.hyphenateWordShy("project") == "project")
+    assert(Hyphenate.hyphenateWordShy("present") == "present")
   }
 
   test("M12: noscript renamed to div") {
@@ -133,7 +133,7 @@ class MungeSpec extends AnyFunSuite {
     val root1 = doc1.find("div")
     root1.setScore(7.0)
     KernelOracles.mungeHyphenate(root1)
-    val twoPass = root1.serialized
+    val twoPass = KernelOracles.serialized(root1)
 
     val doc2 = HtmlParser.parse(html)
     val root2 = doc2.find("div")
@@ -146,7 +146,7 @@ class MungeSpec extends AnyFunSuite {
     val p1 = HtmlParser.parse("<pre><div>extraordinary   spacing</div></pre>")
     val in1 = p1.find("div")
     KernelOracles.mungeHyphenate(in1)
-    val exp = in1.serialized
+    val exp = KernelOracles.serialized(in1)
     val p2 = HtmlParser.parse("<pre><div>extraordinary   spacing</div></pre>")
     val in2 = p2.find("div")
     val sb2 = new StringBuilder
