@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   * streamed rather than buffered.
   *
   * The t26 driver query builds edges from the t6 verified pair relation
-  * (est_jaccard ≥ 0.5 under the active [[HashFamily]]) plus the exact
+  * (est_jaccard ≥ 0.5 under the session's [[HashFamily]]) plus the exact
   * sha256 dup groups of t1, then reports every node's component root
   * and component size. The DuckDB oracle reuses t6's pair CTEs verbatim
   * ([[Dedup.MinhashPairCtes]]) and closes them transitively with a
@@ -68,24 +68,20 @@ object Components {
   /** Canonical undirected dup-edge list (src < dst) for a corpus: the t6
     * near-dup pairs ∪ the t1 exact-dup (keeper, member) edges.
     */
-  def dupEdges(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    dupEdgesOf(Dedup.docs(spark, sfDir), fam)
+  def dupEdges(spark: SparkSession, sfDir: String): DataFrame =
+    dupEdgesOf(Dedup.docs(spark, sfDir))
 
-  def dupEdgesOf(docsDf: DataFrame,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    withExactEdges(docsDf,
-      Dedup.minhashLshOn(docsDf, th = 0.5, fam = fam))
+  def dupEdgesOf(docsDf: DataFrame): DataFrame =
+    withExactEdges(docsDf, Dedup.minhashLshOn(docsDf, th = 0.5))
 
   /** [[dupEdgesOf]] with the near-dup half computed from an
     * ALREADY-MATERIALIZED signature relation of `docsDf` — so a caller
     * holding a staged signature table (t29) pays zero extra signature
     * passes for the edge list.
     */
-  private[graft] def dupEdgesFromSigs(docsDf: DataFrame, sigDf: DataFrame,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    withExactEdges(docsDf,
-      Dedup.minhashLshOnSigs(sigDf, th = 0.5, fam = fam))
+  private[graft] def dupEdgesFromSigs(docsDf: DataFrame,
+      sigDf: DataFrame): DataFrame =
+    withExactEdges(docsDf, Dedup.minhashLshOnSigs(sigDf, th = 0.5))
 
   private def withExactEdges(docsDf: DataFrame,
       nearPairs: DataFrame): DataFrame = {
@@ -269,9 +265,8 @@ object Components {
   /** t26: dup-graph components with sizes — (doc_id, component, csize),
     * one row per document that participates in at least one dup pair.
     */
-  def dupComponents(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    withSizes(connectedComponents(dupEdges(spark, sfDir, fam)))
+  def dupComponents(spark: SparkSession, sfDir: String): DataFrame =
+    withSizes(connectedComponents(dupEdges(spark, sfDir)))
 
   /** t28 — CLUSTER-AWARE KEEPER SELECTION: the decision step that makes
     * t26's clusters actionable. Plain dedup keeps the MIN-doc_id member
@@ -295,11 +290,10 @@ object Components {
     * that small relation (AQE broadcasts it when it fits). Nothing
     * corpus-sized shuffles except the narrow (doc_id, quality) stream.
     */
-  def clusterKeepers(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def clusterKeepers(spark: SparkSession, sfDir: String): DataFrame = {
     val docsDf = Dedup.docs(spark, sfDir)
     // Consumed twice (keeper argmax + the corpus verdict join).
-    val comps = Staging.materialize(dupComponents(spark, sfDir, fam), "t28_comps")
+    val comps = Staging.materialize(dupComponents(spark, sfDir), "t28_comps")
     // Quality is computed for DUP-GRAPH MEMBERS ONLY (r07): the member
     // join runs FIRST, so the tokenizing projection touches |dup graph|
     // rows, not |corpus| — the argmax needs no quality signal for
@@ -350,8 +344,7 @@ object Components {
     * verbatim, and that identity is the point: an ingest never re-reads
     * or re-pairs the corpus yet lands on the same clusters.
     */
-  def incrementalComponents(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def incrementalComponents(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Dedup.docs(spark, sfDir).select(col("doc_id"), col("text"))
     val corpus = d.filter(col("doc_id") % 4 =!= 0)
     val batch = d.filter(col("doc_id") % 4 === 0)
@@ -361,18 +354,17 @@ object Components {
     // corpus tokenize+shingle+hash pass per run; in production both read
     // the same persisted signature table, ICEBERG.md §5).
     val corpusSig = Staging.materialize(
-      Dedup.minhashSignatures(corpus, fam), "t29_corpus_sig")
+      Dedup.minhashSignatures(corpus), "t29_corpus_sig")
     val batchSig = Staging.materialize(
-      Dedup.minhashSignatures(batch, fam), "t29_batch_sig")
+      Dedup.minhashSignatures(batch), "t29_batch_sig")
     // Standing state — persisted tables in production (ICEBERG.md §5c),
     // recomputed here because the sandbox keeps no state between runs.
-    val standing = connectedComponents(dupEdgesFromSigs(corpus, corpusSig, fam))
+    val standing = connectedComponents(dupEdgesFromSigs(corpus, corpusSig))
     val shaKeeper = corpus
       .groupBy(sha2(col("text"), 256).as("h"))
       .agg(min(col("doc_id")).as("keep_id"))
     // New edges: the batch's near-dup pairs (t17 broadcast probe) …
-    val near = Dedup.minhashIncrementalOnSigs(batchSig, corpusSig,
-        th = 0.5, fam = fam)
+    val near = Dedup.minhashIncrementalOnSigs(batchSig, corpusSig, th = 0.5)
       .select(col("new_id").as("src"), col("dup_of").as("dst"))
     // … plus its exact-dup links against the standing sha table and
     // within itself.
@@ -390,12 +382,9 @@ object Components {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t26_dup_components" ->
-      ((s, d) => dupComponents(s, d, fam = HashFamily.of(s))),
-    "t28_cluster_keepers" ->
-      ((s, d) => clusterKeepers(s, d, fam = HashFamily.of(s))),
-    "t29_incremental_components" ->
-      ((s, d) => incrementalComponents(s, d, fam = HashFamily.of(s)))
+    "t26_dup_components" -> ((s, d) => dupComponents(s, d)),
+    "t28_cluster_keepers" -> ((s, d) => clusterKeepers(s, d)),
+    "t29_incremental_components" -> ((s, d) => incrementalComponents(s, d))
   )
 
   /** Shared DuckDB CTE chain labeling every dup-graph node with its

@@ -58,8 +58,7 @@ object Curation {
     * counts + quality ratios + sampling bucket side by side), plus the
     * stacked lang-ID argmax projection — no shuffle, no join.
     */
-  def perRowSignals(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def perRowSignals(spark: SparkSession, sfDir: String): DataFrame = {
     val h = TextOps.Stop.keys.map(l => l -> s"h_$l").toMap
     // ONE tokenizing split per row (r07): inlined, the 5 per-language
     // hit counts plus the quality ratios re-ran it 7× (see
@@ -73,7 +72,7 @@ object Curation {
       Seq("doc_id", "lang",
         "CAST(size(lt) AS BIGINT) AS n_words",
         s"round(${TextOps.hitsOn(KeepLang)} / greatest(size(lt), 1), 4) AS stopword_ratio",
-        s"${Sampling.bucketSql(fam)} AS bucket") ++
+        s"${Sampling.bucketSql(spark)} AS bucket") ++
         TextOps.Stop.keys.map(l => s"${TextOps.hitsOn(l)} AS ${h(l)}"): _*)
     // the same fixed-priority argmax as TextOps.langId
     val langs = Seq("en", "de", "fr", "es", "zh")
@@ -103,10 +102,9 @@ object Curation {
         "CASE WHEN status IN ('exact-dup', 'near-dup') THEN dup_of ELSE CAST(NULL AS BIGINT) END AS dup_of")
 
   /** Spec baseline: the self-contained recompute shape (dedup inline). */
-  def funnelInline(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    funnelFromVerdicts(perRowSignals(spark, sfDir, fam),
-      Dedup.dedupPipeline(spark, sfDir, fam = fam))
+  def funnelInline(spark: SparkSession, sfDir: String): DataFrame =
+    funnelFromVerdicts(perRowSignals(spark, sfDir),
+      Dedup.dedupPipeline(spark, sfDir))
 
   /** The driver query: dedup ONCE → persist verdicts → funnel joins the
     * read-back. The staging root honors `graft.staging.dir` (the same
@@ -123,19 +121,18 @@ object Curation {
   private lazy val tempStagingRoot: String =
     java.nio.file.Files.createTempDirectory("graft-staging").toString
 
-  def funnel(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def funnel(spark: SparkSession, sfDir: String): DataFrame = {
     val root = spark.conf.getOption(Staging.ConfKey).getOrElse(tempStagingRoot)
     val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"$root/t20_dedup_verdicts_${key}_${fam.name}"
-    Dedup.dedupPipeline(spark, sfDir, fam = fam)
+    val path = s"$root/t20_dedup_verdicts_${key}_${HashFamily.of(spark).name}"
+    Dedup.dedupPipeline(spark, sfDir)
       .write.mode("overwrite").parquet(path)
-    funnelFromVerdicts(perRowSignals(spark, sfDir, fam),
+    funnelFromVerdicts(perRowSignals(spark, sfDir),
       spark.read.parquet(path))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t20_curation_funnel" -> ((s, d) => funnel(s, d, fam = HashFamily.of(s)))
+    "t20_curation_funnel" -> ((s, d) => funnel(s, d))
   )
 
   val oracles: Map[String, String] = Map(

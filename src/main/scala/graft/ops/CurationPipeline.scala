@@ -36,19 +36,18 @@ object CurationPipeline {
     * `outDir/manifest.json`.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      fam: HashFamily = HashFamily.Xx64,
       seqLen: Long = Packing.DefaultSeqLen,
       numShards: Int = Export.DefaultShards,
       maxDf: Long = LineDedup.MaxDf): Seq[(String, Long)] = {
 
     // 1. the one expensive job: dedup verdicts, persisted for every
     //    downstream consumer (and future ingests)
-    Dedup.dedupPipeline(spark, sfDir, fam = fam)
+    Dedup.dedupPipeline(spark, sfDir)
       .write.mode("overwrite").parquet(s"$outDir/dedup_verdicts")
     val verdicts = spark.read.parquet(s"$outDir/dedup_verdicts")
 
     // 2. funnel: per-row gates + ONE join against the persisted verdicts
-    Curation.funnelFromVerdicts(Curation.perRowSignals(spark, sfDir, fam), verdicts)
+    Curation.funnelFromVerdicts(Curation.perRowSignals(spark, sfDir), verdicts)
       .write.mode("overwrite").parquet(s"$outDir/funnel_status")
     val status = spark.read.parquet(s"$outDir/funnel_status")
 
@@ -87,11 +86,11 @@ object CurationPipeline {
       .write.mode("overwrite").parquet(s"$outDir/packed")
     Packing.sequenceTextsFromCum(withCum, seqLen)
       .write.mode("overwrite").parquet(s"$outDir/sequences")
-    TrainOrder.trainingOrderOn(clean.select("doc_id"), fam)
+    TrainOrder.trainingOrderOn(clean.select("doc_id"))
       .write.mode("overwrite").parquet(s"$outDir/train_order")
 
     // 5. deterministic sharded export of the final rows
-    Export.shardedExport(clean, s"$outDir/shards", numShards, fam)
+    Export.shardedExport(clean, s"$outDir/shards", numShards)
 
     // every manifest count audits a PERSISTED table (or a pure filter of
     // one) — "kept" counts the persisted funnel verdicts rather than

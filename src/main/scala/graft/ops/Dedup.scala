@@ -12,8 +12,13 @@ import org.apache.spark.sql.functions._
   *    stage, so the cheap non-cryptographic hash is the one that scales.
   *  - [[HashFamily.Md5Mirror]] — md5-slice: bit-exactly mirrorable in
   *    DuckDB (`('0x' || substr(md5(s), 1, k))::BIGINT`), engaged ONLY by
-  *    Verify (via the `graft.hash.family` session conf) so the t5/t6/t7/
-  *    t13 oracles keep full rows+schema+hash checks.
+  *    Verify so the t5/t6/t7/t13 oracles keep full rows+schema+hash
+  *    checks.
+  *
+  * The `graft.hash.family` session conf ([[HashFamily.ConfKey]]) is the
+  * one selector: each operator that emits hash SQL reads it from its
+  * input's session through [[HashFamily.of]], so no caller passes a
+  * family and a session without the conf hashes with xx64.
   *
   * Both families feed the SAME downstream pipeline (31-bit base → affine
   * MinHash rehashes; 60-bit token hash → SimHash bit-vote), and
@@ -75,10 +80,15 @@ object HashFamily {
   /** Session conf key: "xx64" (default) or "md5" (set by Verify). */
   val ConfKey = "graft.hash.family"
 
+  /** The family `spark`'s conf selects; any other value than the two
+    * names throws, so a misspelt conf cannot fall back to xx64 unseen.
+    */
   def of(spark: SparkSession): HashFamily =
     spark.conf.get(ConfKey, Xx64.name) match {
-      case n if n == Md5Mirror.name => Md5Mirror
-      case _                        => Xx64
+      case Xx64.name      => Xx64
+      case Md5Mirror.name => Md5Mirror
+      case n => throw new IllegalArgumentException(
+        s"$ConfKey must be '${Xx64.name}' or '${Md5Mirror.name}', got '$n'")
     }
 }
 
@@ -105,8 +115,9 @@ object HashFamily {
   *    also standalone as its own oracle-checked operator).
   *  - embedding cosine: brute-force all-pairs is the small-scale baseline;
   *    the scale path is Similarity.annLsh (hyperplane buckets).
-  *  - token/shingle hashing: pluggable [[HashFamily]] — codegen'd xxhash64
-  *    in production, md5-slice under Verify for the DuckDB mirrors.
+  *  - token/shingle hashing: the session's [[HashFamily]] — codegen'd
+  *    xxhash64 in production, md5-slice under Verify for the DuckDB
+  *    mirrors.
   */
 object Dedup {
 
@@ -167,12 +178,12 @@ object Dedup {
       .stripMargin.replace("\n", " ")
 
   def shingles(df: DataFrame): DataFrame =
-    df.selectExpr("doc_id", s"filter(split(text, ${Tokenize.SparkWs}), x -> x != '') AS toks")
+    df.selectExpr("doc_id", s"${Tokenize.Toks} AS toks")
       .selectExpr("doc_id", s"explode($ShingleArraySql) AS shingle")
 
   /** 64-hash MinHash signature per document — a PER-ROW projection, no
     * explode / aggregation / shuffle. The shingle string is hashed ONCE
-    * to a 31-bit base (per the active [[HashFamily]]), and the family is
+    * to a 31-bit base (per the session's [[HashFamily]]), and the family is
     * 64 affine rehashes of the base: h_i = (a_i·base + b_i) mod p —
     * evaluated by the codegen'd [[graft.spark.MinhashSig]] loop
     * (shingles × 64 long multiply-mod per document, inside the scan
@@ -186,23 +197,21 @@ object Dedup {
     * NOTHING shuffles until banding (which shuffles only
     * (band_idx, band_key, doc_id), ~20 B/row·band).
     */
-  def minhashSignatures(df: DataFrame,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def minhashSignatures(df: DataFrame): DataFrame = {
     graft.spark.MinhashExpressions.register(
       df.sparkSession, MinhashA, MinhashB, MinhashP)
-    df.selectExpr("doc_id", s"filter(split(text, ${Tokenize.SparkWs}), x -> x != '') AS toks")
-      .selectExpr("doc_id",
-        s"transform($ShingleArraySql, s -> ${fam.base31Sql("s")}) AS bases")
+    val base = HashFamily.of(df.sparkSession).base31Sql("s")
+    df.selectExpr("doc_id", s"${Tokenize.Toks} AS toks")
+      .selectExpr("doc_id", s"transform($ShingleArraySql, s -> $base) AS bases")
       .selectExpr("doc_id", "minhash_sig(bases) AS sig")
   }
 
   /** MinHash + LSH banding: near-dup pairs with estimated Jaccard ≥ th. */
-  def minhashLsh(spark: SparkSession, sfDir: String, th: Double = 0.5,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    minhashLshOn(docs(spark, sfDir), th, fam)
+  def minhashLsh(spark: SparkSession, sfDir: String,
+      th: Double = 0.5): DataFrame =
+    minhashLshOn(docs(spark, sfDir), th)
 
-  def minhashLshOn(docsDf: DataFrame, th: Double,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def minhashLshOn(docsDf: DataFrame, th: Double): DataFrame = {
     // The signature relation is referenced three times below (banding,
     // sig-fetch joins ×2) and Spark's ReuseExchange does NOT deduplicate
     // the subtrees (r05 profile: 4 full shingle-scan+signature passes,
@@ -212,8 +221,7 @@ object Dedup {
     // table when `graft.staging.dir` is set — the persisted signature
     // table every production MinHash pipeline stages anyway).
     minhashLshOnSigs(
-      Staging.materialize(minhashSignatures(docsDf, fam), "t6_signatures"),
-      th, fam)
+      Staging.materialize(minhashSignatures(docsDf), "t6_signatures"), th)
   }
 
   /** [[minhashLshOn]] over an ALREADY-MATERIALIZED signature relation —
@@ -224,8 +232,7 @@ object Dedup {
     * signature table of ICEBERG.md §5). `sig` must be materialized by
     * the caller: it is referenced three times below.
     */
-  def minhashLshOnSigs(sig: DataFrame, th: Double,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def minhashLshOnSigs(sig: DataFrame, th: Double): DataFrame = {
     // Band key per the family (HashFamily.bandKeySql): an 8-byte long in
     // production, the comma-joined values verbatim under the mirror (the
     // oracle must reproduce the exact candidate set).
@@ -243,7 +250,7 @@ object Dedup {
     // bucket of k identical docs costs k²/2 pair rows exactly as the
     // self-join would; the composite pipeline runs exact dedup first,
     // which removes that mass.
-    val pairs = lshCandidatePairs(sig, fam)
+    val pairs = lshCandidatePairs(sig)
     pairs
       .join(sig.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
@@ -257,18 +264,30 @@ object Dedup {
     * the profiler can attribute its cost separately from the sig-fetch
     * joins.
     */
-  def lshCandidatePairs(sig: DataFrame,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    lshBands(sig, fam)
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+  def lshCandidatePairs(sig: DataFrame): DataFrame =
+    idPairsPerBucket(lshBands(sig), col("band_idx"), col("band_hash"))
+      .dropDuplicates("id_a", "id_b")
+
+  /** In-bucket i<j pair expansion — the one narrow shuffle that replaces
+    * a self-join on the bucket key (half its shuffled bytes, the same
+    * pair set). Groups `df` by `keys`, collects each bucket's `elem`
+    * values sorted, and emits one row per (ids[i], ids[j]), i<j, as the
+    * struct fields `pair(a, b)` spells from the two elements' SQL.
+    */
+  private def bucketPairs(df: DataFrame, keys: Seq[Column], elem: Column)(
+      pair: (String, String) => String): DataFrame =
+    df.groupBy(keys: _*)
+      .agg(sort_array(collect_list(elem)).as("ids"))
       .filter(size(col("ids")) > 1)
       .selectExpr(
-        """inline(flatten(transform(sequence(0, size(ids) - 2),
-          |  i -> transform(slice(ids, i + 2, size(ids) - i - 1),
-          |       x -> struct(ids[i] AS id_a, x AS id_b)))))"""
+        s"""inline(flatten(transform(sequence(0, size(ids) - 2),
+           |  i -> transform(slice(ids, i + 2, size(ids) - i - 1),
+           |       x -> struct(${pair("ids[i]", "x")})))))"""
           .stripMargin.replace("\n", " "))
-      .dropDuplicates("id_a", "id_b")
+
+  /** [[bucketPairs]] of the doc ids in each bucket: (id_a, id_b), id_a < id_b. */
+  private def idPairsPerBucket(df: DataFrame, keys: Column*): DataFrame =
+    bucketPairs(df, keys, col("doc_id"))((a, b) => s"$a AS id_a, $b AS id_b")
 
   /** The banded relation of a (doc_id, sig) relation: one row per
     * (doc_id, band_idx, band_hash) — the probe/build key space of every
@@ -276,12 +295,11 @@ object Dedup {
     * equi-joins it). ~20 B/row·band in production (the band key
     * re-hashes to a long); the signature arrays never enter it.
     */
-  def lshBands(sig: DataFrame,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
+  def lshBands(sig: DataFrame): DataFrame =
     sig.selectExpr(
       "doc_id",
       s"""posexplode(transform(sequence(0, ${Bands - 1}),
-         | b -> ${fam.bandKeySql(
+         | b -> ${HashFamily.of(sig.sparkSession).bandKeySql(
                   s"concat_ws(',', transform(slice(sig, b * $RowsPerBand + 1, $RowsPerBand), v -> cast(v AS string)))")}))"""
         .stripMargin.replace("\n", " "))
       .withColumnRenamed("pos", "band_idx")
@@ -320,16 +338,15 @@ object Dedup {
     *    candidate set, exactly like [[minhashLshOn]].
     */
   def minhashIncremental(spark: SparkSession, sfDir: String,
-      th: Double = 0.5,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+      th: Double = 0.5): DataFrame = {
     val d = docs(spark, sfDir).select("doc_id", "text")
     minhashIncrementalOn(
       d.filter(col("doc_id") % 4 === 0),
-      d.filter(col("doc_id") % 4 =!= 0), th, fam)
+      d.filter(col("doc_id") % 4 =!= 0), th)
   }
 
   def minhashIncrementalOn(batch: DataFrame, corpus: DataFrame,
-      th: Double, fam: HashFamily = HashFamily.Xx64): DataFrame = {
+      th: Double): DataFrame = {
     // Both signature relations are referenced twice (bands + sig-fetch);
     // materialize once, same rationale as minhashLshOn. The corpus one
     // stands in for the persisted signature table of prior ingests —
@@ -337,9 +354,9 @@ object Dedup {
     // takes that table directly (IncrementalDedupSpec's two-batch drill
     // runs it against an actually-persisted parquet signature table and
     // pins pair-set equality with this recompute path).
-    val batchSig = Staging.materialize(minhashSignatures(batch, fam), "t17_batch_sig")
-    val corpusSig = Staging.materialize(minhashSignatures(corpus, fam), "t17_corpus_sig")
-    minhashIncrementalOnSigs(batchSig, corpusSig, th, fam)
+    val batchSig = Staging.materialize(minhashSignatures(batch), "t17_batch_sig")
+    val corpusSig = Staging.materialize(minhashSignatures(corpus), "t17_corpus_sig")
+    minhashIncrementalOnSigs(batchSig, corpusSig, th)
   }
 
   /** t17 over ALREADY-MATERIALIZED signature relations — the shape a real
@@ -349,15 +366,15 @@ object Dedup {
     * then appended to the same table for the next ingest).
     */
   def minhashIncrementalOnSigs(batchSig: DataFrame, corpusSig: DataFrame,
-      th: Double, fam: HashFamily = HashFamily.Xx64): DataFrame = {
-    val newVsCorpus = lshBands(corpusSig, fam)
-      .join(broadcast(lshBands(batchSig, fam)
+      th: Double): DataFrame = {
+    val newVsCorpus = lshBands(corpusSig)
+      .join(broadcast(lshBands(batchSig)
           .withColumnRenamed("doc_id", "new_id")),
         Seq("band_idx", "band_hash"))
       .select(col("new_id"), col("doc_id").as("dup_of"),
         lit("corpus").as("source"))
       .dropDuplicates("new_id", "dup_of")
-    val newVsNew = lshCandidatePairs(batchSig, fam)
+    val newVsNew = lshCandidatePairs(batchSig)
       .select(col("id_b").as("new_id"), col("id_a").as("dup_of"),
         lit("batch").as("source"))
     val sigs = corpusSig.unionByName(batchSig)
@@ -425,7 +442,7 @@ object Dedup {
 
   /** SimHash 60-bit signature — a per-row projection, like
     * [[minhashSignatures]]. Token hashing happens SQL-side per the
-    * active [[HashFamily]] (codegen'd xxhash64 in production; md5-slice
+    * session's [[HashFamily]] (codegen'd xxhash64 in production; md5-slice
     * under Verify — bit-identical to [[md5Hash60]]); the bit-vote is the
     * native codegen'd [[graft.spark.SimhashVote]] loop, which replaced
     * the r02–r05 typed mapPartitions kernel (same loop, but no Dataset
@@ -436,45 +453,36 @@ object Dedup {
     * signal, and the all-zero signature would otherwise pair every empty
     * doc with every doc whose low chunk happens to be 0.
     */
-  def simhashes(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def simhashes(spark: SparkSession, sfDir: String): DataFrame = {
     graft.spark.MinhashExpressions.registerSimhash(spark)
     docs(spark, sfDir)
       .selectExpr("doc_id",
-        s"""simhash_vote(transform(filter(split(text, ${Tokenize.SparkWs}), x -> x != ''),
-           | t -> ${fam.hash60Sql("t")})) AS simhash""".stripMargin.replace("\n", " "))
+        s"simhash_vote(transform(${Tokenize.Toks}, t -> ${HashFamily.of(spark).hash60Sql("t")})) AS simhash")
       .filter(col("simhash").isNotNull)
   }
 
   /** SimHash near-dup: pigeonhole band join (4 × 15-bit chunks ⇒ any pair
     * within hamming ≤ 3 shares ≥ 1 chunk), then exact hamming filter.
     */
-  def simhashDedup(spark: SparkSession, sfDir: String, maxHamming: Int = 3,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def simhashDedup(spark: SparkSession, sfDir: String,
+      maxHamming: Int = 3): DataFrame = {
     // The signature relation feeds the bucket expansion exactly ONCE
     // (the chunk "join" is a groupBy expansion, not a self-join), so it
     // is deliberately NOT materialized: scan → signature → posexplode →
     // partial agg fuse into one codegen'd pass. (An earlier self-join
     // formulation referenced it twice and checkpointed it; that
     // materialization is pure overhead in this shape.)
-    val sh = simhashes(spark, sfDir, fam)
+    val sh = simhashes(spark, sfDir)
     val chunked = sh.selectExpr("doc_id", "simhash",
       "posexplode(transform(sequence(0, 3), c -> (simhash >> (c * 15)) & 32767))")
       .withColumnRenamed("pos", "chunk_idx")
       .withColumnRenamed("col", "chunk_val")
-    // One narrow shuffle instead of a chunk self-join (same rationale and
-    // identical pair set as minhashLshOnShingles' bucket expansion); the
+    // One narrow shuffle instead of a chunk self-join (bucketPairs); the
     // signature is a single long, cheap to carry through the bucket.
-    chunked
-      .groupBy(col("chunk_idx"), col("chunk_val"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash")))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .selectExpr(
-        """inline(flatten(transform(sequence(0, size(ds) - 2),
-          |  i -> transform(slice(ds, i + 2, size(ds) - i - 1),
-          |       x -> struct(ds[i].doc_id AS id_a, x.doc_id AS id_b,
-          |                   ds[i].simhash AS sh_a, x.simhash AS sh_b)))))"""
-          .stripMargin.replace("\n", " "))
+    bucketPairs(chunked, Seq(col("chunk_idx"), col("chunk_val")),
+        struct(col("doc_id"), col("simhash"))) { (a, b) =>
+      s"$a.doc_id AS id_a, $b.doc_id AS id_b, $a.simhash AS sh_a, $b.simhash AS sh_b"
+    }
       .dropDuplicates("id_a", "id_b")
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .filter(col("hamming") <= maxHamming)
@@ -544,25 +552,24 @@ object Dedup {
     val s = Staging.materialize(
       cappedShingles(sh.dropDuplicates("doc_id", "shingle"), maxDf),
       "t8_capped_shingles")
-    val sizes = s.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // Co-shingle counts via ONE shuffle: group by shingle, expand i<j
-    // doc pairs within each group (same bucket-expansion shape as
-    // lshCandidatePairs / simhashDedup — identical pair multiset to the
-    // r04 shingle self-join, which exchanged the relation TWICE; at
-    // 100 TB this halves the widest shuffle of the standalone Jaccard
+    // doc pairs within each group (bucketPairs — identical pair multiset
+    // to the r04 shingle self-join, which exchanged the relation TWICE;
+    // at 100 TB this halves the widest shuffle of the standalone Jaccard
     // job). The df cap bounds a group at maxDf ids, so the in-task k²
     // expansion is bounded exactly as the join's biggest task group was.
-    val common = s
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .selectExpr(
-        """inline(flatten(transform(sequence(0, size(ids) - 2),
-          |  i -> transform(slice(ids, i + 2, size(ids) - i - 1),
-          |       x -> struct(ids[i] AS id_a, x AS id_b)))))"""
-          .stripMargin.replace("\n", " "))
+    val common = idPairsPerBucket(s, col("shingle"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("common"))
+    jaccardOf(common, s, th)
+  }
+
+  /** Jaccard of each (id_a, id_b, common) row over the per-doc sizes of
+    * the capped shingle relation `s`, rounded to 4 places; rows below
+    * `th` dropped.
+    */
+  private def jaccardOf(common: DataFrame, s: DataFrame, th: Double): DataFrame = {
+    val sizes = s.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     common
       .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
       .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
@@ -593,19 +600,12 @@ object Dedup {
     // Candidate docs are a small subset of the corpus, so recomputing the
     // capped shingle relation per reference is cheap — no checkpoint here.
     val s = cappedShingles(shingles(docsDf), maxDf)
-    val sizes = s.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val common = pairs
       .join(s.select(col("doc_id").as("id_a"), col("shingle")), Seq("id_a"))
       .join(s.select(col("doc_id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        round(col("common") / (col("sz_a") + col("sz_b") - col("common")), 4))
-      .filter(col("jaccard") >= th)
-      .select(col("id_a"), col("id_b"), col("common"), col("jaccard"))
+    jaccardOf(common, s, th)
   }
 
   /** Candidate near-dup pairs from the two ANN structures that already
@@ -712,8 +712,7 @@ object Dedup {
     * realistic dup rates) — never an all-pairs product.
     */
   def dedupPipeline(spark: SparkSession, sfDir: String,
-      jaccardTh: Double = 0.8,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+      jaccardTh: Double = 0.8): DataFrame = {
     val d = docs(spark, sfDir).select("doc_id", "text")
     val groups = d.groupBy(sha2(col("text"), 256).as("h"))
       .agg(min(col("doc_id")).as("keep_id"))
@@ -745,7 +744,7 @@ object Dedup {
     // the full exploded relation breaks the fused explode→partial-agg
     // pipeline. Recompute wins at every scale where candidates ≪ corpus.
     val candidates = Staging.materialize(
-      lshCandidatePairs(minhashSignatures(survivors, fam), fam),
+      lshCandidatePairs(minhashSignatures(survivors)),
       "t13_candidates")
     // Verification is PAIR-restricted (jaccardForPairs): the r04 shape
     // (standalone all-pairs jaccard over candidate docs, then semi-join)
@@ -781,13 +780,13 @@ object Dedup {
     */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t1_exact_dedup" -> ((s, d) => exact(s, d)),
-    "t6_minhash_lsh" -> ((s, d) => minhashLsh(s, d, fam = HashFamily.of(s))),
-    "t7_simhash_dedup" -> ((s, d) => simhashDedup(s, d, fam = HashFamily.of(s))),
+    "t6_minhash_lsh" -> ((s, d) => minhashLsh(s, d)),
+    "t7_simhash_dedup" -> ((s, d) => simhashDedup(s, d)),
     "t8_ngram_jaccard" -> ((s, d) => ngramJaccard(s, d)),
-    "t17_incremental_dedup" -> ((s, d) => minhashIncremental(s, d, fam = HashFamily.of(s))),
+    "t17_incremental_dedup" -> ((s, d) => minhashIncremental(s, d)),
     "t19_decontamination" -> ((s, d) => decontaminate(s, d)),
     "t9_embed_cosine_dups" -> ((s, d) => embeddingCosine(s, d)),
-    "t13_dedup_pipeline" -> ((s, d) => dedupPipeline(s, d, fam = HashFamily.of(s)))
+    "t13_dedup_pipeline" -> ((s, d) => dedupPipeline(s, d))
   )
 
   /** Shared DuckDB CTE prefix: tokens → distinct (doc_id, shingle). */

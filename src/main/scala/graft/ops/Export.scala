@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * `rand()`/`monotonically_increasing_id()`/row position (all three
   * change under re-partitioning or re-runs).
   *
-  * `shard = base31(salt ‖ doc_id) % numShards` under the pluggable
+  * `shard = base31(salt ‖ doc_id) % numShards` under the session's
   * [[HashFamily]] — same construction as [[Sampling]], different salt so
   * the two assignments are independent.
   *
@@ -29,30 +29,28 @@ object Export {
 
   val DefaultShards = 64
 
-  /** Shard-assignment SQL fragment (Spark dialect, per family). */
-  private[ops] def shardSql(fam: HashFamily, numShards: Int): String =
-    s"(${HashFamily.saltedDocIdSql(fam, Salt)} % $numShards)"
+  /** Shard-assignment SQL fragment (Spark dialect, `spark`'s family). */
+  private[ops] def shardSql(spark: SparkSession, numShards: Int): String =
+    s"(${HashFamily.saltedDocIdSql(HashFamily.of(spark), Salt)} % $numShards)"
 
   def shardAssign(spark: SparkSession, sfDir: String,
-      numShards: Int = DefaultShards,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
+      numShards: Int = DefaultShards): DataFrame =
     spark.read.parquet(s"$sfDir/documents.parquet")
       .selectExpr("doc_id",
-        s"CAST(${shardSql(fam, numShards)} AS INT) AS shard")
+        s"CAST(${shardSql(spark, numShards)} AS INT) AS shard")
 
   /** Write `df` (which must carry `doc_id`) to `outDir` hive-partitioned
     * by the deterministic shard, clustering rows so each shard gets a
     * bounded file count regardless of input partitioning.
     */
   def shardedExport(df: DataFrame, outDir: String,
-      numShards: Int = DefaultShards,
-      fam: HashFamily = HashFamily.Xx64): Unit =
-    df.withColumn("shard", expr(shardSql(fam, numShards)).cast("int"))
+      numShards: Int = DefaultShards): Unit =
+    df.withColumn("shard", expr(shardSql(df.sparkSession, numShards)).cast("int"))
       .repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(outDir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t21_shard_assign" -> ((s, d) => shardAssign(s, d, fam = HashFamily.of(s)))
+    "t21_shard_assign" -> ((s, d) => shardAssign(s, d))
   )
 
   val oracles: Map[String, String] = Map(

@@ -59,12 +59,12 @@ object LangModel {
   val BigramK = 512
   val Backoff = 0.4
 
-  /** Tokenization is [[TextOps.Toks]] VERBATIM — the LM must sit on the
+  /** Tokenization is [[Tokenize.Toks]] VERBATIM — the LM must sit on the
     * same token stream as the rest of the feature family (t2/t3/t28), so
     * a tokenizer change moves them together.
     */
   def tokensDf(docs: DataFrame): DataFrame =
-    docs.selectExpr("doc_id", s"${TextOps.Toks} AS toks")
+    docs.selectExpr("doc_id", s"${Tokenize.Toks} AS toks")
 
   /** Fit the capped count tables. The token relation is staged once
     * (two aggregations consume it); the unigram relation is staged once
@@ -241,7 +241,7 @@ object LangModel {
     // t27 scaladoc's deserialization trap).
     val scored = Staging.materialize(
       docs
-        .selectExpr("doc_id", "lang", s"${TextOps.Toks} AS toks")
+        .selectExpr("doc_id", "lang", s"${Tokenize.Toks} AS toks")
         .selectExpr("doc_id", "lang",
           "CAST(size(toks) AS BIGINT) AS n_tokens", "lm_score(toks) AS sc")
         .selectExpr("doc_id", "lang",

@@ -43,7 +43,7 @@ object Packing {
     * prefix-sum executor task.
     */
   def tokensOf(docs: DataFrame): DataFrame =
-    docs.selectExpr("doc_id", s"coalesce(${TextOps.Toks}, array()) AS tk")
+    docs.selectExpr("doc_id", s"coalesce(${Tokenize.Toks}, array()) AS tk")
       .selectExpr("doc_id", "tk", "CAST(size(tk) AS BIGINT) AS n_tokens")
 
   def sequencePack(spark: SparkSession, sfDir: String,

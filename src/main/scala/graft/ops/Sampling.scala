@@ -46,25 +46,22 @@ object Sampling {
       s"CASE WHEN lang = '$l' THEN $r ELSE $acc END"
     }
 
-  def stratifiedSample(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    stratifiedSampleOn(
-      spark.read.parquet(s"$sfDir/documents.parquet"), fam)
+  def stratifiedSample(spark: SparkSession, sfDir: String): DataFrame =
+    stratifiedSampleOn(spark.read.parquet(s"$sfDir/documents.parquet"))
 
-  /** The per-doc sampling bucket as a SQL fragment (Spark dialect, per
-    * family); [[bucketSqlDuck]] is the DuckDB md5-mirror twin — both are
-    * reused verbatim by the t20 curation funnel.
+  /** The per-doc sampling bucket as a SQL fragment (Spark dialect,
+    * `spark`'s family); [[bucketSqlDuck]] is the DuckDB md5-mirror twin —
+    * both are reused verbatim by the t20 curation funnel.
     */
-  private[ops] def bucketSql(fam: HashFamily): String =
-    s"(${HashFamily.saltedDocIdSql(fam, Salt)} % $BucketSpace)"
+  private[ops] def bucketSql(spark: SparkSession): String =
+    s"(${HashFamily.saltedDocIdSql(HashFamily.of(spark), Salt)} % $BucketSpace)"
 
   private[ops] def bucketSqlDuck: String =
     s"(${HashFamily.saltedDocIdDuck(Salt)} % $BucketSpace)"
 
-  def stratifiedSampleOn(docs: DataFrame,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
+  def stratifiedSampleOn(docs: DataFrame): DataFrame =
     docs
-      .selectExpr("doc_id", "lang", s"${bucketSql(fam)} AS bucket")
+      .selectExpr("doc_id", "lang", s"${bucketSql(docs.sparkSession)} AS bucket")
       .filter(expr(s"bucket < $thresholdSql"))
 
   // ---- t33: temperature-weighted language mixing ----
@@ -103,21 +100,18 @@ object Sampling {
     * per-doc bucket is what stays stable, so a frozen table keeps the
     * sample incremental exactly like t18.
     */
-  def temperatureMix(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
-    temperatureMixOn(
-      spark.read.parquet(s"$sfDir/documents.parquet"), fam)
+  def temperatureMix(spark: SparkSession, sfDir: String): DataFrame =
+    temperatureMixOn(spark.read.parquet(s"$sfDir/documents.parquet"))
 
-  private[ops] def mixBucketSql(fam: HashFamily): String =
-    s"(${HashFamily.saltedDocIdSql(fam, MixSalt)} % $BucketSpace)"
+  private[ops] def mixBucketSql(spark: SparkSession): String =
+    s"(${HashFamily.saltedDocIdSql(HashFamily.of(spark), MixSalt)} % $BucketSpace)"
 
   private[ops] def mixBucketSqlDuck: String =
     s"(${HashFamily.saltedDocIdDuck(MixSalt)} % $BucketSpace)"
 
-  def temperatureMixOn(docs: DataFrame,
-      fam: HashFamily = HashFamily.Xx64): DataFrame = {
+  def temperatureMixOn(docs: DataFrame): DataFrame = {
     val rates = mixRates(docs)
-    docs.selectExpr("doc_id", "lang", s"${mixBucketSql(fam)} AS bucket")
+    docs.selectExpr("doc_id", "lang", s"${mixBucketSql(docs.sparkSession)} AS bucket")
       .join(broadcast(rates), Seq("lang"))
       .where(col("bucket") < col("rate"))
       .select("doc_id", "lang", "bucket", "rate")
@@ -139,10 +133,8 @@ object Sampling {
           .stripMargin.replace("\n", " "))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t18_stratified_sample" ->
-      ((s, d) => stratifiedSample(s, d, fam = HashFamily.of(s))),
-    "t33_temperature_mix" ->
-      ((s, d) => temperatureMix(s, d, fam = HashFamily.of(s)))
+    "t18_stratified_sample" -> ((s, d) => stratifiedSample(s, d)),
+    "t33_temperature_mix" -> ((s, d) => temperatureMix(s, d))
   )
 
   val oracles: Map[String, String] = Map(

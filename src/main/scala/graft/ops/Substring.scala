@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * syndication survives both exact-hash (t1: one changed byte defeats it)
   * and MinHash (t6: high-but-sub-threshold Jaccard) passes.
   *
-  * Shape: tokens are [[TextOps.Toks]] VERBATIM (the one corpus token
+  * Shape: tokens are [[Tokenize.Toks]] VERBATIM (the one corpus token
   * stream); windows are the W-token slices at every start position.
   * Flagging is a single analytic `count() OVER (PARTITION BY win)` —
   * the textbook operator for "per-occurrence output that needs a
@@ -70,7 +70,7 @@ object Substring {
     // coalesce: a NULL-text doc is zero tokens on BOTH engines (the
     // oracles coalesce their token arrays identically), not a NULL row
     val toks = Staging.materialize(
-      docs.selectExpr("doc_id", s"coalesce(${TextOps.Toks}, array()) AS tk"), label)
+      docs.selectExpr("doc_id", s"coalesce(${Tokenize.Toks}, array()) AS tk"), label)
     // (doc_id, pos, win): every W-token window, pos 1-based. The size
     // guard matters: Spark's sequence(1, stop) DESCENDS for stop < 1.
     val winRel = toks

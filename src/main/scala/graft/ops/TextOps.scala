@@ -15,11 +15,8 @@ import org.apache.spark.sql.functions._
   * final write/aggregate of a caller introduces a shuffle.
   */
 object TextOps {
-
-  def docs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
-
-  private[ops] val Toks = s"filter(split(text, ${Tokenize.SparkWs}), x -> x != '')"
+  import Dedup.docs
+  import Tokenize.Toks
 
   /** Token counting: whitespace tokens + a BPE-ish sub-token regex
     * (letter runs / digit runs / single other symbol).
@@ -97,8 +94,8 @@ object TextOps {
   }
 
   /** Document fingerprint: order-sensitive rolling hash over tokens
-    * (affine accumulate mod 2³¹−1 of 31-bit token hashes — the same
-    * pluggable [[graft.ops.HashFamily]] as Dedup's MinHash: codegen'd
+    * (affine accumulate mod 2³¹−1 of 31-bit token hashes — the session's
+    * [[graft.ops.HashFamily]], as for Dedup's MinHash: codegen'd
     * xxhash64 in production, md5-slice under Verify so the DuckDB mirror
     * reproduces it bit-for-bit) + an order-free bag hash (XOR of the
     * token hashes). The affine step (a·acc + h) keeps every product
@@ -106,11 +103,10 @@ object TextOps {
     */
   val FpMul = 1103515245L // 31-bit multiplier (classic LCG constant)
 
-  def fingerprint(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
+  def fingerprint(spark: SparkSession, sfDir: String): DataFrame =
     docs(spark, sfDir)
       .selectExpr("doc_id",
-        s"transform($Toks, t -> ${fam.base31Sql("t")}) AS hs")
+        s"transform($Toks, t -> ${HashFamily.of(spark).base31Sql("t")}) AS hs")
       .selectExpr(
         "doc_id",
         s"aggregate(hs, CAST(0 AS BIGINT), (acc, x) -> pmod($FpMul * acc + x, ${Dedup.MinhashP})) AS rolling_fp",
@@ -208,7 +204,7 @@ object TextOps {
     "t2_token_count" -> ((s, d) => tokenCount(s, d)),
     "t3_quality_score" -> ((s, d) => qualityScore(s, d)),
     "t4_lang_id" -> ((s, d) => langId(s, d)),
-    "t5_fingerprint" -> ((s, d) => fingerprint(s, d, fam = HashFamily.of(s))),
+    "t5_fingerprint" -> ((s, d) => fingerprint(s, d)),
     "t15_repetition" -> ((s, d) => repetition(s, d)),
     "t34_compress_ratio" -> ((s, d) => compressRatio(s, d)),
     "t36_corpus_stats" -> ((s, d) => corpusStats(s, d))
@@ -260,9 +256,9 @@ object TextOps {
     * with a prepended 0 so DuckDB's init-free reduce matches Spark's
     * init-0 aggregate step-for-step, r04).
     */
-  /** DuckDB-side fragments mirroring [[Toks]] / [[hits]] — hoisted to the
-    * object so composing oracles (t28) reuse the IDENTICAL text t3 is
-    * checked against.
+  /** DuckDB-side fragments mirroring [[Tokenize.Toks]] / [[hits]] —
+    * hoisted to the object so composing oracles (t28) reuse the
+    * IDENTICAL text t3 is checked against.
     */
   private[ops] def dToks = s"list_filter(regexp_split_to_array(text, ${Tokenize.DuckWs}), x -> x != '')"
   private[ops] def dHits(l: String) =

@@ -37,4 +37,11 @@ object Tokenize {
 
   /** Full DuckDB string literal: split-on-whitespace-runs regex. */
   val DuckWs = s"'[$DuckWsChars]+'"
+
+  /** The corpus token array of a row's `text` (Spark SQL): the
+    * whitespace-run split with empty tokens dropped. Every operator that
+    * tokenizes `text` spells it with this one fragment, so their plans
+    * share the same expression.
+    */
+  val Toks = s"filter(split(text, $SparkWs), x -> x != '')"
 }

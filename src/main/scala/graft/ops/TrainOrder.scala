@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (`rand()` and `monotonically_increasing_id()` both change under
   * re-partitioning or re-runs), and (c) cheap to re-derive for any
   * subset. All three come from ranking a salted hash of the doc id:
-  * `sort_key = base31(salt ‖ doc_id)` under the pluggable
+  * `sort_key = base31(salt ‖ doc_id)` under the session's
   * [[HashFamily]], `position = rank in (sort_key, doc_id) order`
   * (doc_id breaks 31-bit collisions deterministically; production widens
   * the key to a 64-bit fingerprint and keeps the same tie-break).
@@ -40,26 +40,25 @@ object TrainOrder {
 
   private val Salt = "order|"
 
-  /** Order-key SQL fragment (Spark dialect, per family). */
-  private[ops] def sortKeySql(fam: HashFamily): String =
-    s"CAST(${HashFamily.saltedDocIdSql(fam, Salt)} AS BIGINT)"
+  /** Order-key SQL fragment (Spark dialect, `spark`'s family). */
+  private[ops] def sortKeySql(spark: SparkSession): String =
+    s"CAST(${HashFamily.saltedDocIdSql(HashFamily.of(spark), Salt)} AS BIGINT)"
 
-  def trainingOrder(spark: SparkSession, sfDir: String,
-      fam: HashFamily = HashFamily.Xx64): DataFrame =
+  def trainingOrder(spark: SparkSession, sfDir: String): DataFrame =
     trainingOrderOn(
-      spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id"), fam)
+      spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id"))
 
   /** `df` must carry `doc_id`. */
-  def trainingOrderOn(df: DataFrame, fam: HashFamily): DataFrame =
+  def trainingOrderOn(df: DataFrame): DataFrame =
     PrefixSum.runningTotal(
-      df.selectExpr("doc_id", s"${sortKeySql(fam)} AS sort_key")
+      df.selectExpr("doc_id", s"${sortKeySql(df.sparkSession)} AS sort_key")
         .withColumn("one", lit(1L)),
       orderCols = Seq("sort_key", "doc_id"), weightCol = "one",
       outCol = "position", stageLabel = "t32_order_input")
       .select("doc_id", "sort_key", "position")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t32_training_order" -> ((s, d) => trainingOrder(s, d, fam = HashFamily.of(s)))
+    "t32_training_order" -> ((s, d) => trainingOrder(s, d))
   )
 
   val oracles: Map[String, String] = Map(

@@ -170,11 +170,10 @@ object StreamingExtract {
     */
   def nearDupCandidateStream(
       docs: DataFrame,
-      fam: graft.ops.HashFamily = graft.ops.HashFamily.Xx64,
       maxBucket: Int = 1000): Dataset[BandCandidate] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.ops.Dedup.lshBands(graft.ops.Dedup.minhashSignatures(docs, fam), fam)
+    graft.ops.Dedup.lshBands(graft.ops.Dedup.minhashSignatures(docs))
       // the bucket key stringifies band_hash so both families (long under
       // xx64, string under the md5 mirror) share one state schema
       .selectExpr(

@@ -59,9 +59,7 @@ class ComponentsSpec extends SparkSpec {
     // way — this pins the SHAPE; PlanSpec pins the absence of the
     // set-buffering aggregate that made 10^9 an OOM.)
     val n = 100000L
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withConf("spark.sql.shuffle.partitions" -> "4") {
       val star = spark.range(1L, n)
         .selectExpr("CAST(0 AS BIGINT) AS src", "id AS dst")
       val rest = Seq((n + 5L, n + 6L)).toDF("src", "dst")
@@ -73,31 +71,30 @@ class ComponentsSpec extends SparkSpec {
       assert(r.getLong(0) == n + 2, s"expected ${n + 2} labeled nodes, got ${r.getLong(0)}")
       assert(r.getLong(1) == n, s"expected $n hub members, got ${r.getLong(1)}")
       assert(r.getLong(2) == 2L, s"expected 2 pair members, got ${r.getLong(2)}")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("t26 on sf0.001 matches a driver-side union-find over the same edges") {
-    val fam = HashFamily.Xx64
-    val edges = Components.dupEdges(spark, sf001, fam)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(edges.nonEmpty, "sf0.001 should contain dup pairs")
-    val expected = unionFind(edges)
-    val sizes = expected.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-    val got = Components.dupComponents(spark, sf001, fam)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == expected.map { case (id, c) => (id, c, sizes(c)) }.toSet)
-    // at least one component must be transitive (size > 2) for the test
-    // to mean anything beyond pair echo
-    assert(got.exists(_._3 > 2), "expected a transitive cluster at sf0.001")
+    withConf(HashFamily.ConfKey -> HashFamily.Xx64.name) {
+      val edges = Components.dupEdges(spark, sf001)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(edges.nonEmpty, "sf0.001 should contain dup pairs")
+      val expected = unionFind(edges)
+      val sizes = expected.groupBy(_._2).view.mapValues(_.size.toLong).toMap
+      val got = Components.dupComponents(spark, sf001)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == expected.map { case (id, c) => (id, c, sizes(c)) }.toSet)
+      // at least one component must be transitive (size > 2) for the test
+      // to mean anything beyond pair echo
+      assert(got.exists(_._3 > 2), "expected a transitive cluster at sf0.001")
+    }
   }
 
   test("durable staging mode produces identical components") {
     val dir = java.nio.file.Files.createTempDirectory("cc_staging").toString
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
     val plain = cc(edges)
-    spark.conf.set(Staging.ConfKey, dir)
-    try assert(cc(edges) == plain)
-    finally spark.conf.unset(Staging.ConfKey)
+    withConf(Staging.ConfKey -> dir)(assert(cc(edges) == plain))
   }
 
   test("mergeComponents == clustering the union from scratch (random split)") {
@@ -138,60 +135,62 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("t29 incremental components == t26 full recompute on sf0.001") {
-    val fam = HashFamily.Xx64
-    val full = Components.dupComponents(spark, sf001, fam)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val inc = Components.incrementalComponents(spark, sf001, fam)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(inc == full)
-    // the split must be non-trivial for the equality to mean anything:
-    // some clusters must span the batch/corpus boundary
-    assert(full.exists { case (id, c, _) => id % 4 == 0 && c % 4 != 0 },
-      "no cluster spans the batch/corpus split at sf0.001")
+    withConf(HashFamily.ConfKey -> HashFamily.Xx64.name) {
+      val full = Components.dupComponents(spark, sf001)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val inc = Components.incrementalComponents(spark, sf001)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(inc == full)
+      // the split must be non-trivial for the equality to mean anything:
+      // some clusters must span the batch/corpus boundary
+      assert(full.exists { case (id, c, _) => id % 4 == 0 && c % 4 != 0 },
+        "no cluster spans the batch/corpus split at sf0.001")
+    }
   }
 
   test("t28 keeper is the best-quality member, not the min id; singletons keep themselves") {
     // Use sf0.001 but assert the semantics independently: recompute the
     // expected keepers from t26's own components + a driver-side quality
     // rank over the raw text.
-    val fam = HashFamily.Xx64
-    val docs = Dedup.docs(spark, sf001)
-      .selectExpr("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val stop = TextOps.Stop("en").toSet
-    def quality(text: String): (Double, Long) = {
-      val toks = text.toLowerCase.split("[ \t\n\f\r]+").filter(_.nonEmpty)
-      val hits = toks.count(stop.contains)
-      val n = text.split("[ \t\n\f\r]+").count(_.nonEmpty).toLong
-      val ratio = BigDecimal(hits.toDouble / math.max(n, 1L))
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      (ratio, n)
-    }
-    val comps = Components.dupComponents(spark, sf001, fam)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expectedKeepers = comps.groupBy(_._2).map { case (c, members) =>
-      c -> members.keys.maxBy { id =>
-        val (r, n) = quality(docs(id)); (r, n, -id)
+    withConf(HashFamily.ConfKey -> HashFamily.Xx64.name) {
+      val docs = Dedup.docs(spark, sf001)
+        .selectExpr("doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      val stop = TextOps.Stop("en").toSet
+      def quality(text: String): (Double, Long) = {
+        val toks = text.toLowerCase.split("[ \t\n\f\r]+").filter(_.nonEmpty)
+        val hits = toks.count(stop.contains)
+        val n = text.split("[ \t\n\f\r]+").count(_.nonEmpty).toLong
+        val ratio = BigDecimal(hits.toDouble / math.max(n, 1L))
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (ratio, n)
       }
-    }
-    val got = Components.clusterKeepers(spark, sf001, fam)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    assert(got.length == docs.size, "verdict must cover the whole corpus")
-    got.foreach { case (id, comp, csize, isKeeper) =>
-      comps.get(id) match {
-        case Some(c) =>
-          assert(comp == c, s"doc $id component mismatch")
-          assert(isKeeper == (expectedKeepers(c) == id),
-            s"doc $id keeper verdict wrong (expected keeper ${expectedKeepers(c)} for comp $c)")
-        case None =>
-          assert(comp == id && csize == 1L && isKeeper,
-            s"singleton $id must keep itself")
+      val comps = Components.dupComponents(spark, sf001)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val expectedKeepers = comps.groupBy(_._2).map { case (c, members) =>
+        c -> members.keys.maxBy { id =>
+          val (r, n) = quality(docs(id)); (r, n, -id)
+        }
       }
+      val got = Components.clusterKeepers(spark, sf001)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      assert(got.length == docs.size, "verdict must cover the whole corpus")
+      got.foreach { case (id, comp, csize, isKeeper) =>
+        comps.get(id) match {
+          case Some(c) =>
+            assert(comp == c, s"doc $id component mismatch")
+            assert(isKeeper == (expectedKeepers(c) == id),
+              s"doc $id keeper verdict wrong (expected keeper ${expectedKeepers(c)} for comp $c)")
+          case None =>
+            assert(comp == id && csize == 1L && isKeeper,
+              s"singleton $id must keep itself")
+        }
+      }
+      // the selection must differ from plain min-id keeping somewhere,
+      // or the quality rank is dead weight
+      assert(expectedKeepers.exists { case (c, k) => k != c },
+        "every keeper equals the min-id root — quality rank never mattered at sf0.001")
     }
-    // the selection must differ from plain min-id keeping somewhere,
-    // or the quality rank is dead weight
-    assert(expectedKeepers.exists { case (c, k) => k != c },
-      "every keeper equals the min-id root — quality rank never mattered at sf0.001")
   }
 
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {

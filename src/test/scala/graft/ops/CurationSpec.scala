@@ -37,8 +37,8 @@ class CurationSpec extends SparkSpec {
   }
 
   test("planted funnel: every gate fires, first-gate-wins, dup_of only on dups") {
-    for (fam <- Seq(HashFamily.Xx64, HashFamily.Md5Mirror)) {
-      val rows = Curation.funnel(spark, plantedDir, fam = fam).collect()
+    for (fam <- Seq(HashFamily.Xx64, HashFamily.Md5Mirror)) withConf(HashFamily.ConfKey -> fam.name) {
+      val rows = Curation.funnel(spark, plantedDir).collect()
         .map(r => r.getAs[Long]("doc_id") ->
           ((r.getAs[String]("status"), Option(r.get(2)).map(_.asInstanceOf[Long]))))
         .toMap
@@ -46,7 +46,7 @@ class CurationSpec extends SparkSpec {
       // is 'en' (rate 0.30), so the expected side of the threshold comes
       // from the family's own bucket value
       val bucket5 = spark.sql(
-        s"SELECT ${Sampling.bucketSql(fam)} AS b FROM (SELECT CAST(5 AS BIGINT) AS doc_id)")
+        s"SELECT ${Sampling.bucketSql(spark)} AS b FROM (SELECT CAST(5 AS BIGINT) AS doc_id)")
         .head().getLong(0)
       val want5 = if (bucket5 < 300000L) "kept" else "sampled-out"
       assert(rows == Map(
@@ -98,8 +98,7 @@ class CurationSpec extends SparkSpec {
 
   test("funnel honors graft.staging.dir for the verdict table") {
     val dir = java.nio.file.Files.createTempDirectory("graft-staging").toString
-    spark.conf.set(Staging.ConfKey, dir)
-    try {
+    withConf(Staging.ConfKey -> dir) {
       val got = Curation.funnel(spark, sf001).collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
       val base = Curation.funnelInline(spark, sf001).collect()
@@ -107,6 +106,6 @@ class CurationSpec extends SparkSpec {
       assert(got == base)
       assert(new java.io.File(dir).listFiles()
         .exists(_.getName.startsWith("t20_dedup_verdicts")))
-    } finally spark.conf.unset(Staging.ConfKey)
+    }
   }
 }

@@ -81,8 +81,8 @@ class DedupSpec extends SparkSpec {
     // doc1 is doc0's exact dup and doc2 its near dup — both standing
     // corpus, so both must surface as 'corpus' hits of new doc 0; tiny
     // doc4 matches nothing; the (1,2) corpus-corpus pair must NOT appear.
-    for (fam <- Seq(HashFamily.Xx64, HashFamily.Md5Mirror)) {
-      val rows = Dedup.minhashIncremental(spark, plantedDir, th = 0.5, fam = fam)
+    for (fam <- Seq(HashFamily.Xx64, HashFamily.Md5Mirror)) withConf(HashFamily.ConfKey -> fam.name) {
+      val rows = Dedup.minhashIncremental(spark, plantedDir, th = 0.5)
         .collect()
         .map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("dup_of"),
           r.getAs[String]("source")))
@@ -302,28 +302,58 @@ class DedupSpec extends SparkSpec {
   }
 
   test("hash families: xx64 (production) and md5 (Verify) find identical planted verdicts") {
-    // VERDICT r04 task 1: the pluggable family must not change SEMANTICS —
+    // VERDICT r04 task 1: the session's family must not change SEMANTICS —
     // both the codegen'd xxhash64 default and the DuckDB-mirrorable
     // md5-slice family must find the same dup/near-dup structure on the
     // planted corpus, across all three hash-touching operators.
-    for (fam <- Seq(HashFamily.Xx64, HashFamily.Md5Mirror)) {
-      val lsh = Dedup.minhashLsh(spark, plantedDir, th = 0.5, fam = fam)
+    for (fam <- Seq(HashFamily.Xx64, HashFamily.Md5Mirror)) withConf(HashFamily.ConfKey -> fam.name) {
+      val lsh = Dedup.minhashLsh(spark, plantedDir, th = 0.5)
         .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
       assert(lsh == Set((0L, 1L), (0L, 2L), (1L, 2L)), s"minhash $fam: $lsh")
       // exact dup pair estimates 1.0 under ANY family (identical sigs)
-      val est = Dedup.minhashLsh(spark, plantedDir, th = 0.5, fam = fam)
+      val est = Dedup.minhashLsh(spark, plantedDir, th = 0.5)
         .collect().find(r => r.getAs[Long]("id_a") == 0L && r.getAs[Long]("id_b") == 1L)
         .get.getAs[Double]("est_jaccard")
       assert(est == 1.0, s"$fam exact-pair estimate: $est")
-      val sh = Dedup.simhashDedup(spark, plantedDir, maxHamming = 3, fam = fam)
+      val sh = Dedup.simhashDedup(spark, plantedDir, maxHamming = 3)
         .collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")), r.getAs[Long]("hamming")))
       assert(sh.exists(p => p._1 == ((0L, 1L)) && p._2 == 0L), s"simhash $fam: ${sh.toSeq}")
       assert(!sh.exists(p => p._1._1 == 3L || p._1._2 == 3L), s"simhash $fam paired the distinct doc")
-      val pipe = Dedup.dedupPipeline(spark, plantedDir, fam = fam)
+      val pipe = Dedup.dedupPipeline(spark, plantedDir)
         .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
       assert(pipe == Map(0L -> "kept", 1L -> "exact-dup", 2L -> "near-dup",
         3L -> "kept", 4L -> "kept"), s"pipeline $fam: $pipe")
     }
+  }
+
+  test("hash family conf: a name other than xx64 or md5 is rejected") {
+    for (bad <- Seq("MD5", "xxhash", "")) withConf(HashFamily.ConfKey -> bad) {
+      val e = intercept[IllegalArgumentException](HashFamily.of(spark))
+      assert(e.getMessage.contains("'xx64'") && e.getMessage.contains("'md5'") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+      // an operator that emits hash SQL fails too instead of hashing with xx64
+      intercept[IllegalArgumentException](Dedup.minhashLsh(spark, plantedDir))
+    }
+  }
+
+  test("hash family conf is per session: md5 in a new session, xx64 in the default one") {
+    assert(spark.conf.getOption(HashFamily.ConfKey).isEmpty)
+    val md5Session = spark.newSession()
+    md5Session.conf.set(HashFamily.ConfKey, HashFamily.Md5Mirror.name)
+    def shards(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // both plans are built before either runs, so a leak in either
+    // direction would show in the other's rows
+    val viaMd5 = Export.shardAssign(md5Session, sf001)
+    val viaDefault = Export.shardAssign(spark, sf001)
+    def expected(fam: HashFamily) = shards(spark.read.parquet(s"$sf001/documents.parquet")
+      .selectExpr("doc_id",
+        s"CAST(${HashFamily.saltedDocIdSql(fam, "shard|")} % ${Export.DefaultShards} AS INT)"))
+    val (md5Rows, xxRows) = (shards(viaMd5), shards(viaDefault))
+    assert(md5Rows == expected(HashFamily.Md5Mirror))
+    assert(xxRows == expected(HashFamily.Xx64))
+    assert(md5Rows != xxRows, "the two families must assign different shards")
+    assert(spark.conf.getOption(HashFamily.ConfKey).isEmpty)
   }
 
   test("md5 family SQL path is bit-identical to the md5Hash60 reference impl") {
@@ -367,13 +397,12 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val (base13, base6) = (t13(), t6())
     val dir = java.nio.file.Files.createTempDirectory("graft-staging").toString
-    spark.conf.set(Staging.ConfKey, dir)
-    try {
+    withConf(Staging.ConfKey -> dir) {
       assert(t13() == base13)
       assert(t6() == base6)
       val staged = new java.io.File(dir).listFiles().map(_.getName)
       assert(staged.exists(_.startsWith("t13_survivors")), staged.mkString(","))
       assert(staged.exists(_.startsWith("t6_signatures")), staged.mkString(","))
-    } finally spark.conf.unset(Staging.ConfKey)
+    }
   }
 }

@@ -29,7 +29,7 @@ class PackingSpec extends SparkSpec {
 
   private def toksDf(docs: Seq[(Long, String)]) =
     docs.toDF("doc_id", "text")
-      .selectExpr("doc_id", s"${TextOps.Toks} AS tk")
+      .selectExpr("doc_id", s"${Tokenize.Toks} AS tk")
       .selectExpr("doc_id", "tk", "CAST(size(tk) AS BIGINT) AS n_tokens")
 
   private def seqRows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, String)] =
@@ -79,7 +79,7 @@ class PackingSpec extends SparkSpec {
     }
     val stream = got.map(_._3).mkString(" ")
     val docsStream = spark.read.parquet(s"$sf001/documents.parquet")
-      .selectExpr("doc_id", s"array_join(${TextOps.Toks}, ' ') AS j")
+      .selectExpr("doc_id", s"array_join(${Tokenize.Toks}, ' ') AS j")
       .orderBy("doc_id").collect().map(_.getString(1)).filter(_.nonEmpty).mkString(" ")
     assert(stream == docsStream, "sequence concatenation lost/reordered tokens")
   }
@@ -116,14 +116,13 @@ class PackingSpec extends SparkSpec {
     val base = Packing.sequencePack(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val dir = java.nio.file.Files.createTempDirectory("graft-staging").toString
-    spark.conf.set(Staging.ConfKey, dir)
-    try {
+    withConf(Staging.ConfKey -> dir) {
       val staged = Packing.sequencePack(spark, sf001).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(staged == base)
       // the staging table was actually written
       assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("t22_pack_input")))
-    } finally spark.conf.unset(Staging.ConfKey)
+    }
   }
 
   test("cross-sequence boundaries: doc spanning 3+ sequences next to a zero-token doc") {

@@ -30,8 +30,9 @@ class SamplingSpec extends SparkSpec {
     val expected = langs(sf001).collect {
       case (id, l) if bucket(id) < rate(l) => (id, l, bucket(id))
     }.toSet
-    val got = Sampling.stratifiedSample(spark, sf001, HashFamily.Md5Mirror)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val got = withConf(HashFamily.ConfKey -> HashFamily.Md5Mirror.name) {
+      Sampling.stratifiedSample(spark, sf001).collect()
+    }.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got == expected,
       s"diff: ${(got diff expected) ++ (expected diff got)}")
     assert(got.nonEmpty && got.size < langs(sf001).size)
@@ -73,8 +74,9 @@ class SamplingSpec extends SparkSpec {
       "C" -> 1000000L, "D" -> 1000000L))
     assert(rates == ratesByHand(Map("A" -> 64L, "B" -> 16L, "C" -> 4L, "D" -> 1L)))
     // capped languages keep every document
-    val kept = Sampling.temperatureMixOn(planted, HashFamily.Xx64).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
+    val kept = withConf(HashFamily.ConfKey -> HashFamily.Xx64.name) {
+      Sampling.temperatureMixOn(planted).collect()
+    }.map(r => (r.getLong(0), r.getString(1))).toSet
     assert((201 to 204).forall(i => kept((i.toLong, "C"))) && kept((301L, "D")))
     assert(kept.count(_._2 == "A") < 64, "head language not downsampled")
   }
@@ -109,8 +111,9 @@ class SamplingSpec extends SparkSpec {
     val expected = all.collect {
       case (id, l) if bucket(id) < rates(l) => (id, l, bucket(id), rates(l))
     }.toSet
-    val got = Sampling.temperatureMix(spark, sf001, HashFamily.Md5Mirror)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    val got = withConf(HashFamily.ConfKey -> HashFamily.Md5Mirror.name) {
+      Sampling.temperatureMix(spark, sf001).collect()
+    }.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == expected,
       s"diff: ${(got diff expected) ++ (expected diff got)}")
     assert(got.nonEmpty && got.size < all.size)
@@ -119,8 +122,9 @@ class SamplingSpec extends SparkSpec {
   test("t33: xx64 real data — deterministic, head-downweighted, near-budget") {
     val all = langs(sf001)
     def run(): Set[(Long, String, Long, Long)] =
-      Sampling.temperatureMix(spark, sf001, HashFamily.Xx64).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+      withConf(HashFamily.ConfKey -> HashFamily.Xx64.name) {
+        Sampling.temperatureMix(spark, sf001).collect()
+      }.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
     val k1 = run()
     assert(k1 == run(), "mix not deterministic across runs")
     // alpha < 1: a strictly larger language never gets a higher rate
@@ -136,8 +140,9 @@ class SamplingSpec extends SparkSpec {
   test("xx64 family: deterministic, exact on rate-1.0 strata, ±0.12 on sampled ones") {
     val all = langs(sf001)
     def kept(): Set[(Long, String)] =
-      Sampling.stratifiedSample(spark, sf001, HashFamily.Xx64)
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      withConf(HashFamily.ConfKey -> HashFamily.Xx64.name) {
+        Sampling.stratifiedSample(spark, sf001).collect()
+      }.map(r => (r.getLong(0), r.getString(1))).toSet
     val k1 = kept()
     assert(k1 == kept(), "sample not deterministic across runs")
     val byLang = all.groupBy(_._2).view.mapValues(_.size).toMap

@@ -26,16 +26,20 @@ class TrainOrderSpec extends SparkSpec {
 
   test("reproducible across runs and immune to input partitioning") {
     val docs = spark.read.parquet(s"$sf001/documents.parquet").select("doc_id")
-    val a = rows(TrainOrder.trainingOrderOn(docs, HashFamily.Xx64)).toSet
-    val b = rows(TrainOrder.trainingOrderOn(docs.repartition(7), HashFamily.Xx64)).toSet
-    val c = rows(TrainOrder.trainingOrderOn(docs.coalesce(1), HashFamily.Xx64)).toSet
+    val (a, b, c) = withConf(HashFamily.ConfKey -> HashFamily.Xx64.name) {
+      (rows(TrainOrder.trainingOrderOn(docs)).toSet,
+        rows(TrainOrder.trainingOrderOn(docs.repartition(7))).toSet,
+        rows(TrainOrder.trainingOrderOn(docs.coalesce(1))).toSet)
+    }
     assert(a == b && a == c)
     assert(a.nonEmpty)
   }
 
   test("the permutation actually shuffles (not doc_id order, any family)") {
     Seq(HashFamily.Xx64, HashFamily.Md5Mirror).foreach { fam =>
-      val got = rows(TrainOrder.trainingOrder(spark, sf001, fam))
+      val got = withConf(HashFamily.ConfKey -> fam.name) {
+        rows(TrainOrder.trainingOrder(spark, sf001))
+      }
       val byId = got.sortBy(_._1).map(_._3)
       val moved = byId.zipWithIndex.count { case (p, i) => p != i.toLong }
       assert(moved > 400, s"${fam.name}: only $moved/500 docs moved — order is near-identity")
@@ -56,11 +60,10 @@ class TrainOrderSpec extends SparkSpec {
   test("staging mode (graft.staging.dir) produces identical order") {
     val base = rows(TrainOrder.trainingOrder(spark, sf001)).toSet
     val dir = java.nio.file.Files.createTempDirectory("graft-staging").toString
-    spark.conf.set(Staging.ConfKey, dir)
-    try {
+    withConf(Staging.ConfKey -> dir) {
       val staged = rows(TrainOrder.trainingOrder(spark, sf001)).toSet
       assert(staged == base)
       assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("t32_order_input")))
-    } finally spark.conf.unset(Staging.ConfKey)
+    }
   }
 }

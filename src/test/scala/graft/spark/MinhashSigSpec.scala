@@ -65,9 +65,11 @@ class MinhashSigSpec extends SparkSpec {
   }
 
   test("signature projection is map-only: zero exchanges, sig inside the scan stage") {
-    val sig = Dedup.minhashSignatures(
-      Dedup.docs(spark, "/root/testdata/sf0.001"), graft.ops.HashFamily.Xx64)
-    sig.collect()
+    val sig = withConf(graft.ops.HashFamily.ConfKey -> graft.ops.HashFamily.Xx64.name) {
+      val df = Dedup.minhashSignatures(Dedup.docs(spark, "/root/testdata/sf0.001"))
+      df.collect()
+      df
+    }
     val plan = sig.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"signatures must not shuffle:\n$plan")
     assert(plan.contains("minhash_sig"), s"expected the native expression:\n$plan")

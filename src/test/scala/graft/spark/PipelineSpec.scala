@@ -114,17 +114,6 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/lineage").count() == 8)
   }
 
-  /** Runs `body` with session conf `key` set to `value`. */
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** (url, html) of the sf001 pages plus `n` gfycat pages without a
     * <video>, which fail in the kernel. Their urls' upper-case scheme
     * sorts them before every PagesGen url, so they are the failure
@@ -158,7 +147,7 @@ class PipelineSpec extends SparkSpec {
     val sizes = pages.map(_.html.length).sorted
     val cap = sizes(sizes.length / 2)
     // an open cost of a whole split puts each file in its own split
-    withConf("spark.sql.files.openCostInBytes", (128L << 20).toString) {
+    withConf("spark.sql.files.openCostInBytes" -> (128L << 20).toString) {
       val df = spark.read.parquet(s"$dir/pages")
       assert(df.rdd.getNumPartitions >= 64)
       val expected = ExtractJob.lineage(
@@ -251,11 +240,11 @@ class PipelineSpec extends SparkSpec {
       ExtractJob.lineage(
         ExtractJob.extract(ExtractJob.withPid(input, buckets), maxHtmlBytes = cap), "m")
         .collect().map(lineageKey).sortBy(_._2).toSeq
-    val one = withConf("spark.sql.shuffle.partitions", "1")(lineageOf(df))
+    val one = withConf("spark.sql.shuffle.partitions" -> "1")(lineageOf(df))
     assert(one.length == buckets)
     assert(one.count(_._6 > ExtractJob.MaxFailureSamples) > 1,
       "the samples must be a choice among a pid's failures")
-    assert(withConf("spark.sql.shuffle.partitions", "7")(lineageOf(df)) == one)
+    assert(withConf("spark.sql.shuffle.partitions" -> "7")(lineageOf(df)) == one)
     assert(lineageOf(df.repartition(5)) == one)
   }
 
@@ -319,16 +308,11 @@ class PipelineSpec extends SparkSpec {
     // dies BEFORE the lineage append — same write sequence as runToDir,
     // truncated after the first write.
     val victim = (0 until buckets).filterNot(committed.contains).head
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       ExtractJob.extract(ExtractJob.withPid(df, buckets).filter(col("pid") === victim))
         .repartition(1, col("pid"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("pid").parquet(s"$dir/extracted")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     val orphan = spark.read.parquet(s"$dir/extracted")
       .filter(col("pid") === victim).count()

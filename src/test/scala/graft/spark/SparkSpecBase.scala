@@ -36,6 +36,19 @@ abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpecBase.spark
   def sf001: String = SparkSpecBase.Sf001
 
+  /** Runs `body` with each session conf `key -> value` set, then puts
+    * every key back as it was (unset if it was unset).
+    */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Runs `body`; returns the SQL executions it ran, in completion order. */
   def executionsOf(body: => Unit): Seq[QueryExecution] = {
     val seen = new ConcurrentLinkedQueue[QueryExecution]

@@ -42,6 +42,20 @@ class UrlOpsSpec extends SparkSpec {
     assert(rows.exists(r => r.getAs[String]("at_url").contains(".example/f&x=1")))
   }
 
+  test("d1 entry key: Relational.entryKeyCol == kernel FeedLogic.entryId") {
+    val s = spark
+    import s.implicits._
+    val srcs = Seq("abc", "http://feed.test/a?q=1&b=2", "17|F",
+      "Bücher|日本語|ünïcödé-tökèn", "")
+    val got = srcs.toDF("src")
+      .select(org.apache.spark.sql.functions.col("src"),
+        Relational.entryKeyCol(org.apache.spark.sql.functions.col("src")))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got.keySet == srcs.toSet)
+    srcs.foreach(src =>
+      assert(got(src) == FeedLogic.entryId(src, null), s"D1 key mismatch for '$src'"))
+  }
+
   test("u5/u6/u8 templates: SQL replace chains == kernel template emitters") {
     val rows = Relational.u5Templates(spark, sf001).collect()
     assert(rows.length >= 500)
